@@ -56,7 +56,6 @@ case class HllRegMaxUnionAgg(
   with UnaryLike[Expression] {
 
   require(lgK == 8, "kernel is pinned to the loop's lgK = 8 configuration")
-  private val k = 1 << lgK
 
   override def prettyName: String = "hll_regmax_union"
   override def dataType: DataType = BinaryType
@@ -159,9 +158,12 @@ final class HllRegMaxBuf(lgK: Int) {
   }
 
   /** Merge one serialized sketch image (LIST / SET / HLL_8 updatable —
-    * the only layouts this loop produces). */
+    * the only layouts this loop produces). The image must carry this
+    * buffer's lgK: a larger-lgK dense image also passes the length check
+    * and would otherwise merge only its first 2^lgK registers. */
   def addSketch(b: Array[Byte]): Unit = {
     require(b.length >= 8 && b(2) == 7, "not an HLL image")
+    require(b(3) == lgK, s"HLL image lgK ${b(3)} != kernel lgK $lgK")
     (b(7) & 3) match {
       case 0 => // LIST: count at byte 6, coupons from offset 8
         val n = b(6) & 0xff

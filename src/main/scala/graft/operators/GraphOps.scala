@@ -117,19 +117,7 @@ object GraphOps {
     * because count/300k exceeds the input partitioning. */
   private[graft] def graphOf(edges: DataFrame): Graph[Int, Long] = {
     val cur = edges.rdd.getNumPartitions
-    // Edge count for partition sizing comes from plan statistics when the
-    // cached edge frame is already materialized (InMemoryRelation reports
-    // an exact rowCount — no job); the count() fallback runs at most once
-    // per session, on first use, and itself materializes the cache so
-    // every later graph query sizes for free. At 100 TB this removes a
-    // full edge-list pass from every cache-hit graph query.
-    val rows = edges.queryExecution.optimizedPlan.stats.rowCount
-      .map(_.toLong).getOrElse(edges.count())
-    // ~300k arcs/partition balances GraphX's per-stage task overhead
-    // (dominant on near-empty partitions — measured 5×, r4) against core
-    // utilization; overridable for tuning experiments at other scales
-    val arcsPerPart = sys.env.get("GRAFT_ARCS_PER_PART").map(_.toInt).getOrElse(300000)
-    val target = math.max(4, math.ceil(2.0 * rows / arcsPerPart).toInt)
+    val target = math.max(4, math.ceil(2.0 * edgeRows(edges) / 300000).toInt)
     val df = if (target < cur) edges.coalesce(target) else edges
     val arcs = df.rdd.flatMap { r =>
       val (src, dst, w) = (r.getLong(0), r.getLong(1), r.getLong(2))
@@ -138,8 +126,14 @@ object GraphOps {
     Graph.fromEdges(arcs, 0, StorageLevel.MEMORY_AND_DISK, StorageLevel.MEMORY_AND_DISK)
   }
 
-  private def copurchaseGraph(s: SparkSession, dir: String): Graph[Int, Long] =
-    graphOf(edgesUnsorted(s, dir))
+  /** Row count of an edge frame, read from plan statistics when the
+    * frame is a materialized cache (InMemoryRelation reports an exact
+    * rowCount — no job), else one count(), which also materializes a
+    * cached frame so later calls read it for free. Never memoized across
+    * calls: the answer always reflects the frame as it is now. */
+  private[graft] def edgeRows(edges: DataFrame): Long =
+    edges.queryExecution.optimizedPlan.stats.rowCount
+      .map(_.toLong).getOrElse(edges.count())
 
   /** Static PageRank ranks for an arbitrary canonical edge frame. */
   private[graft] def pageRankOf(edges: DataFrame, iters: Int): DataFrame = {
@@ -768,15 +762,12 @@ object GraphOps {
   // instead of dying) answers. Both legs are result-identical (GraphSpec
   // pins fixture + corpus identity).
   def shortestPaths(s: SparkSession, dir: String, nLandmarks: Int = 3): DataFrame =
-    shortestPathsGated(edgesUnsorted(s, dir), nLandmarks, Some(s"tri-edges:$dir"))
+    shortestPathsGated(edgesUnsorted(s, dir), nLandmarks)
 
   private[graft] def shortestPathsGated(edges: DataFrame, nLandmarks: Int,
-      cacheKey: Option[String] = None,
       maxGraphXEdges: Long = 3000000L,
       maxHops: Int = 8): DataFrame = {
-    def count = edges.count()
-    val m = cacheKey.fold(count)(key => edgeCountMemo.getOrElseUpdate(key, count))
-    if (m > maxGraphXEdges) shortestPathsDF(edges, nLandmarks, maxHops)
+    if (edgeRows(edges) > maxGraphXEdges) shortestPathsDF(edges, nLandmarks, maxHops)
     else shortestPathsOf(edges, nLandmarks, maxHops)
   }
 
@@ -966,14 +957,13 @@ object GraphOps {
   // division of exact BIGINTs. Reuses the G8 gated BFS verbatim, so the
   // scan work is shared with g_shortest_paths under the session cache.
   def closeness(s: SparkSession, dir: String, nLandmarks: Int = 3): DataFrame =
-    closenessOf(edgesUnsorted(s, dir), nLandmarks, Some(s"tri-edges:$dir"))
+    closenessOf(edgesUnsorted(s, dir), nLandmarks)
 
   /** G20 core over an arbitrary canonical edge frame (fixture-testable). */
-  private[graft] def closenessOf(edges: DataFrame, nLandmarks: Int,
-      cacheKey: Option[String] = None): DataFrame = {
+  private[graft] def closenessOf(edges: DataFrame, nLandmarks: Int): DataFrame = {
     val s = edges.sparkSession
     import s.implicits._
-    val d = shortestPathsGated(edges, nLandmarks, cacheKey)
+    val d = shortestPathsGated(edges, nLandmarks)
     d.filter($"hops" > 0)
       .groupBy($"part")
       .agg(count(lit(1)).as("n_reached"), sum($"hops").as("sum_hops"),
@@ -984,7 +974,6 @@ object GraphOps {
       .orderBy($"part")
   }
 
-  /** Per-node triangle counts for an arbitrary canonical edge frame. */
   /** GraphX leg of G7 — kept for the regime where the replicated
     * per-vertex neighbor sets fit memory (see triangleCountOf's gate). */
   private[graft] def triangleCountGraphX(edges: DataFrame): DataFrame = {
@@ -1058,17 +1047,12 @@ object GraphOps {
     * where GraphX is context-fatal; at 120M dense edges its ~10B wedge
     * shuffle runs long but finishes, which is what exact per-node
     * counts cost there (an edge-sampling estimator is the cheap
-    * alternative if ±ε suffices). The gate counts canonical edges (one
-    * memoized scalar per corpus). */
-  private val edgeCountMemo =
-    scala.collection.concurrent.TrieMap.empty[String, Long]
-
+    * alternative if ±ε suffices). The gate counts canonical edges
+    * (`edgeRows`). */
   private[graft] def triangleCountOf(edges: DataFrame,
       cacheKey: Option[String] = None,
       maxGraphXEdges: Long = 3000000L): DataFrame = {
-    def count = edges.count()
-    val m = cacheKey.fold(count)(key => edgeCountMemo.getOrElseUpdate(key, count))
-    if (m > maxGraphXEdges) triangleCountDF(edges, cacheKey)
+    if (edgeRows(edges) > maxGraphXEdges) triangleCountDF(edges, cacheKey)
     else triangleCountGraphX(edges)
   }
 
@@ -1140,29 +1124,6 @@ object GraphOps {
       .orderBy($"src", $"rk")
   }
 
-  /** Synchronous weighted label propagation (Raghavan et al. 2007's LPA,
-    * made deterministic): every node starts as its own label; each round,
-    * every node adopts the label with the largest incident edge-weight
-    * mass among its neighbors, ties broken by the SMALLEST label. Fixed
-    * round count + deterministic tie-break = a pure function of the edge
-    * list (the async/random variant converges faster but is a coin flip —
-    * useless for an auditable pipeline or a SQL oracle). Per round: one
-    * join of the label table against the cached mirrored arcs, one
-    * (node, label) count-sum with map-side partials, and a per-node
-    * argmax window whose groups are bounded by the node's distinct
-    * neighbor-label count (≤ degree) — never a whole-graph group.
-    * localCheckpoint truncates lineage like the PageRank loop. Votes are
-    * BIGINT weight sums — no float drift between engines.
-    *
-    * The arc frame is repartitioned by `src` BEFORE the checkpoint (the
-    * pprOf/hitsOf join-order lesson): every per-round join then reuses
-    * that hashpartitioning and shuffles only the node-sized label frame,
-    * never the 2|E| mirrored arcs (at sf10 that per-round arc shuffle
-    * was 240M rows × 5 rounds — the r8 bench's heavy tail). The argmax
-    * is a hash AGGREGATION, not a sort window: min(struct(-vote, lbl))
-    * has the identical (vote DESC, lbl ASC) ordering but combines
-    * map-side, so the second shuffle carries one row per (dst, lbl)
-    * rather than sorting whole per-node vote groups. */
   /** Repartition `df` by `c` and checkpoint it WITH AQE DISABLED for
     * the checkpoint's own execution. Under AQE, Dataset.localCheckpoint
     * captures the AdaptiveSparkPlanExec's pre-execution partitioning —
@@ -1251,42 +1212,42 @@ object GraphOps {
     partitionedCheckpoint(base, "src", sorted = true)
   }
 
-  /** Round-0 label frame for the LPA loops: identity labels by default,
-    * or caller-provided warm-start labels (r12, VERDICT r11 #2 — the
-    * incremental-update regime needs an entry point that can present a
-    * collapsed frontier). Warm labels are joined against the arc node
-    * set so the contract stays total: nodes the caller's frame misses
-    * fall back to identity, extra rows in the caller's frame are
-    * ignored. Both loops share this, so plain-vs-delta stays an A/B of
-    * the LOOP, never of the seed. */
-  private[graft] def lpaStart(arcs: DataFrame,
-      init: Option[DataFrame]): DataFrame = {
-    val s = arcs.sparkSession
-    import s.implicits._
-    val nodes = arcs.select($"src".as("v")).distinct()
-    (init match {
-      case None => nodes.select($"v", $"v".as("lbl"))
-      case Some(df) =>
-        nodes.join(df.select($"v", $"lbl".as("init_lbl")), Seq("v"), "left")
-          .select($"v", coalesce($"init_lbl", $"v").as("lbl"))
-    }).localCheckpoint(eager = true)
-  }
-
-  private[graft] def communitiesOf(edges: DataFrame, iters: Int,
-      initialLabels: Option[DataFrame] = None): DataFrame = {
+  /** Synchronous weighted label propagation (Raghavan et al. 2007's LPA,
+    * made deterministic): every node starts as its own label; each round,
+    * every node adopts the label with the largest incident edge-weight
+    * mass among its neighbors, ties broken by the SMALLEST label. Fixed
+    * round count + deterministic tie-break = a pure function of the edge
+    * list (the async/random variant converges faster but is a coin flip —
+    * useless for an auditable pipeline or a SQL oracle). Per round: one
+    * join of the label table against the cached mirrored arcs, one
+    * (node, label) count-sum with map-side partials, and a per-node
+    * argmax window whose groups are bounded by the node's distinct
+    * neighbor-label count (≤ degree) — never a whole-graph group.
+    * localCheckpoint truncates lineage like the PageRank loop. Votes are
+    * BIGINT weight sums — no float drift between engines.
+    *
+    * The arc frame is repartitioned by `src` BEFORE the checkpoint (the
+    * pprOf/hitsOf join-order lesson): every per-round join then reuses
+    * that hashpartitioning and shuffles only the node-sized label frame,
+    * never the 2|E| mirrored arcs (at sf10 that per-round arc shuffle
+    * was 240M rows × 5 rounds — the r8 bench's heavy tail). The argmax
+    * is a hash AGGREGATION, not a sort window: min(struct(-vote, lbl))
+    * has the identical (vote DESC, lbl ASC) ordering but combines
+    * map-side, so the second shuffle carries one row per (dst, lbl)
+    * rather than sorting whole per-node vote groups. */
+  private[graft] def communitiesOf(edges: DataFrame, iters: Int): DataFrame = {
     val s = edges.sparkSession
     import s.implicits._
     val arcs = loopArcs(edges, withWeight = true)
-    var labels = lpaStart(arcs, initialLabels)
-    // r17: checkpoint every SECOND round instead of every round. The
-    // label frame is consumed exactly once per round (the next vote
-    // join), so chaining two rounds into one lazy plan is bit-identical
-    // and drops one node-sized materialization job per skipped round;
-    // the intermediate round's shuffles still materialize once inside
-    // the larger job (stage-granular recovery unchanged). Plan depth is
-    // bounded at two rounds per checkpoint, so neither planning time nor
-    // the checkpoint-stats compounding hazard (checkpointFlat scaladoc:
-    // it needs state referenced >1× per round to bite) can grow.
+    var labels = arcs.select($"src".as("v")).distinct()
+      .select($"v", $"v".as("lbl")).localCheckpoint(eager = true)
+    // checkpoint every SECOND round: the label frame is consumed exactly
+    // once per round (the next vote join), so chaining two rounds into
+    // one lazy plan is bit-identical and drops one node-sized
+    // materialization job per skipped round. Plan depth is bounded at two
+    // rounds per checkpoint, so neither planning time nor the
+    // checkpoint-stats compounding hazard (checkpointFlat scaladoc: it
+    // needs state referenced >1× per round to bite) can grow.
     for (i <- 0 until iters) {
       val votes = arcs.join(labels, $"src" === $"v")
         .groupBy($"dst", $"lbl").agg(sum($"weight").as("vote"))
@@ -1300,190 +1261,19 @@ object GraphOps {
     labels
   }
 
-  /** Label-change-frontier (delta) LPA — EXACT refinement of
-    * communitiesOf (r10, VERDICT r9 #1: the 429 s sf10 floor was the
-    * per-round (dst, label) vote aggregate shuffling the full ~240M-row
-    * arc-join output for all 5 rounds, even though LPA's change rate
-    * collapses after round 2).
-    *
-    * The invariant that makes the delta exact: under the SYNCHRONOUS
-    * update, round t+1's vote at node v reads only its in-neighbors'
-    * round-t labels. If none of those changed in the t-1→t transition,
-    * the round-t vote at v re-reads the exact multiset round t-1 read,
-    * so its argmax — labels_t(v) — is reproduced: carrying the label
-    * forward IS the synchronous result. Hence rounds ≥2 only re-vote
-    * the "touched" nodes (out-neighbors of last round's changed set):
-    *
-    *   changed_t = {v : labels_t(v) ≠ labels_{t-1}(v)}   (node-sized)
-    *   touched   = distinct dst of arcs out of changed_t (node-sized)
-    *   labels_{t+1} = revote(touched) ∪ carry-forward(rest)
-    *
-    * Same fixed-round semantics, bit-identical labels, same oracle hash
-    * (GraphSpec pins delta ≡ full re-vote per intermediate round count
-    * on fixtures + the sf corpus). Converged early (changed = ∅) ⇒ every
-    * remaining round is a no-op and the loop exits — also exact.
-    *
-    * Scale shape: changed/touched ride BROADCAST hash joins against the
-    * src-partitioned arc checkpoint (two arc scans, zero arc shuffles),
-    * and the vote aggregate — the old bottleneck — now shuffles only the
-    * in-arcs of touched nodes, which shrinks with the frontier. Rounds
-    * where the frontier is still wide (> half the nodes, or past the
-    * broadcast cap on huge graphs) fall back to the full re-vote, which
-    * is cheaper than two near-complete arc scans.
-    *
-    * Regime (r11 ProbeLpa, MEASURED): from a COLD identity start this
-    * corpus's change rate never collapses within the 5-round contract
-    * (frontier > n/2 every round), so the plain loop wins — the entry
-    * path routes there. The delta leg's regime is the WARM start
-    * (`initialLabels`, r12): near-converged or incrementally-updated
-    * labels present a collapsed frontier from round 2 on, and rounds
-    * past the first full vote cost only the perturbation's cascade —
-    * see ProbeLpa's warm leg for the measurement. */
-  private[graft] def communitiesDeltaOf(edges: DataFrame, iters: Int,
-      maxBroadcastNodes: Long = 5000000L,
-      initialLabels: Option[DataFrame] = None): DataFrame = {
-    val s = edges.sparkSession
-    import s.implicits._
-    val arcs = loopArcs(edges, withWeight = true)
-    var labels = lpaStart(arcs, initialLabels)
-    val nNodes = labels.count()
-    def argmax(votes: DataFrame): DataFrame = votes
-      .groupBy($"dst")
-      .agg(min(struct((-$"vote").as("nv"), $"lbl".as("lbl"))).as("m"))
-      .select($"dst".as("v"), $"m.lbl".as("lbl"))
-    def fullVote(lbls: DataFrame): DataFrame =
-      argmax(arcs.join(lbls, $"src" === $"v")
-        .groupBy($"dst", $"lbl").agg(sum($"weight").as("vote")))
-    var changed: Option[DataFrame] = None // None ⇒ full re-vote this round
-    var round = 0
-    var converged = false
-    while (round < iters && !converged) {
-      val next = (changed match {
-        case None => fullVote(labels)
-        case Some(ch) =>
-          val touched = arcs.join(broadcast(ch), $"src" === $"c")
-            .select($"dst".as("c")).distinct()
-            .localCheckpoint(eager = true)
-          // hub-heavy frontiers can touch far more nodes than changed —
-          // the broadcast cap guards the frontier's OUT-set too
-          if (touched.count() > math.min(nNodes / 2, maxBroadcastNodes))
-            fullVote(labels)
-          else {
-            val revoted = argmax(
-              arcs.join(broadcast(touched), $"dst" === $"c").drop("c")
-                .join(labels, $"src" === $"v")
-                .groupBy($"dst", $"lbl").agg(sum($"weight").as("vote")))
-            labels.join(broadcast(touched), $"v" === $"c", "left_anti")
-              .unionAll(revoted)
-          }
-      }).localCheckpoint(eager = true)
-      if (round < iters - 1) {
-        val ch = next.as("n")
-          .join(labels.select($"v", $"lbl".as("prev")), "v")
-          .filter($"lbl" =!= $"prev")
-          .select($"v".as("c"))
-          .localCheckpoint(eager = true)
-        val nCh = ch.count()
-        if (nCh == 0) converged = true // fixpoint: remaining rounds no-op
-        changed =
-          if (nCh == 0 || nCh > nNodes / 2 || nCh > maxBroadcastNodes) None
-          else Some(ch)
-      }
-      labels = next
-      round += 1
-    }
-    labels
-  }
-
-  /** GraphX aggregateMessages twin of communitiesOf (r9, the
-    * pageRankWeightedGX precedent): same synchronous LPA update, the
-    * engine leg for the regime where the arc list fits executor storage
-    * — the repo's own measurement (PageRank sf10: GraphX 77-104 s vs DF
-    * loop 381 s) shows aggregateMessages wins ~3.7× there because the
-    * per-round work is an in-memory message pass, not a checkpointed
-    * shuffle. Votes are BIGINT weight sums merged per (dst, label); the
-    * argmax comparator is (vote DESC, label ASC) — the exact
-    * min(struct(-vote, lbl)) the DF leg aggregates — so the two legs
-    * are RESULT-IDENTICAL (integer votes: no float-order divergence
-    * class at all, stronger than the PageRank twins' 6dp equivalence;
-    * GraphSpec pins fixture + corpus identity). Vertex state is one
-    * Long label (the PageRank regime, NOT the replicated-map regime
-    * that OOMs ShortestPaths); the per-message maps are transient and
-    * degree-bounded. */
-  private[graft] def communitiesGX(edges: DataFrame, iters: Int): DataFrame = {
-    val s = edges.sparkSession
-    import s.implicits._
-    var lg: Graph[Long, Long] = graphOf(edges).mapVertices((vid, _) => vid)
-    lg.cache()
-    for (_ <- 0 until iters) {
-      val votes = lg.aggregateMessages[Map[Long, Long]](
-        ctx => ctx.sendToDst(Map(ctx.srcAttr -> ctx.attr)),
-        (a, b) => b.foldLeft(a) { case (m, (l, w)) =>
-          m.updated(l, m.getOrElse(l, 0L) + w) },
-        org.apache.spark.graphx.TripletFields.Src)
-      val prev = lg
-      lg = lg.outerJoinVertices(votes) { (_, old, m) =>
-        m.fold(old)(_.minBy { case (l, v) => (-v, l) }._1)
-      }.cache()
-      lg.vertices.foreachPartition(_ => ()) // materialize before unpersist
-      prev.unpersistVertices(blocking = false)
-      prev.edges.unpersist(blocking = false)
-    }
-    s.createDataFrame(lg.vertices).toDF("v", "lbl")
-  }
-
   // G11 — co-purchase communities via deterministic synchronous LPA
   // (the modularity-free community primitive next to G6's connectivity:
   // CC answers "reachable at all", LPA answers "densely co-purchased").
   // Reference scope: the Neo4j product graph is the natural home of a
   // community query (neo4j_service.py builds the graph; GDS labelPropagation
   // is the standard call on such a store).
-  // SANCTIONED LEG (r9, measured): the checkpointed-DF loop. With the
-  // arc frame genuinely src-partitioned (partitionedCheckpoint — the
-  // r9 AQE discovery), the DF loop reads 26.2 s at sf1 where the GraphX
-  // aggregateMessages twin reads 66.9 s: LPA's messages are per-triplet
-  // Map allocations merged object-by-object, a regime GraphX pays GC
-  // for while the DF loop's votes are codegen'd columnar aggs. (The r8
-  // "GraphX is 3.7× faster" premise was measured against DF loops whose
-  // repartition was silently VOID under AQE — see partitionedCheckpoint.)
-  // The GX twin stays, result-identical and spec-pinned, as the
-  // measured alternate for environments where it wins.
+  // One leg, communitiesOf's checkpointed-DF loop: labels are a pure
+  // function of (edges, iters).
   def communities(s: SparkSession, dir: String, iters: Int = 5): DataFrame = {
     import s.implicits._
-    // r11 (VERDICT r10 #1/#2, MEASURED — ProbeLpa, SURVEY §5 r11): the
-    // delta-frontier leg is DEMOTED; the plain full-vote loop is the
-    // sanctioned leg at every scale. The r10 delta design assumed LPA's
-    // change rate collapses after round 2; the sf10 probe (2M nodes,
-    // 119.6M canonical edges) measured changed-per-round [2.0M, 1.72M,
-    // 1.58M, 1.37M, 0.56M] — the frontier exceeds n/2 in EVERY round of
-    // the 5-round contract, so communitiesDeltaOf fell back to the full
-    // re-vote each round and paid only its frontier bookkeeping:
-    // same-session min-of-2, plain 269.7 s vs delta 294.5 s (sf0.1:
-    // 5.50 vs 8.78 s, BENCH_r09 vs r10). Min-label LPA on a dense
-    // co-purchase graph keeps cascading smaller labels for all 5
-    // rounds — there is no quiet frontier to exploit here.
-    // communitiesDeltaOf remains the specced opt-in twin (bit-identical;
-    // GraphSpec pins delta ≡ full per round count) for the regime it IS
-    // built for: label churn that actually collapses. r12 made that
-    // regime REACHABLE — both loops take `initialLabels` warm-start
-    // seeds, so re-running LPA over a near-converged or
-    // incrementally-updated graph presents the delta leg a collapsed
-    // frontier (ProbeLpa's warm leg measures it).
     communitiesOf(edgesUnsorted(s, dir), iters)
       .select($"v".as("part"), $"lbl".as("community"))
       .orderBy($"part")
-  }
-
-  /** Gate retained for callers that want the GraphX leg below a budget
-    * (legs are result-identical; the default call path is the DF loop —
-    * see `communities`). */
-  private[graft] def communitiesGated(edges: DataFrame, iters: Int,
-      cacheKey: Option[String] = None,
-      maxGraphXEdges: Long = 150000000L): DataFrame = {
-    def count = edges.count()
-    val m = cacheKey.fold(count)(key => edgeCountMemo.getOrElseUpdate(key, count))
-    if (m > maxGraphXEdges) communitiesDeltaOf(edges, iters)
-    else communitiesGX(edges, iters)
   }
 
   /** G12 core on any canonical edge list + owned-item set: mirror the
@@ -1645,11 +1435,8 @@ object GraphOps {
     * regime (the default budget admits sf10), the checkpointed-DF loop
     * beyond it (spills instead of dying). Legs 6dp-identical. */
   private[graft] def pprGated(edges: DataFrame, seedIds: DataFrame,
-      iters: Int, cacheKey: Option[String] = None,
-      maxGraphXEdges: Long = 150000000L): DataFrame = {
-    def count = edges.count()
-    val m = cacheKey.fold(count)(key => edgeCountMemo.getOrElseUpdate(key, count))
-    if (m > maxGraphXEdges) pprOf(edges, seedIds, iters)
+      iters: Int, maxGraphXEdges: Long = 150000000L): DataFrame = {
+    if (edgeRows(edges) > maxGraphXEdges) pprOf(edges, seedIds, iters)
     else pprGX(edges, seedIds, iters)
   }
 
@@ -1870,68 +1657,6 @@ object GraphOps {
     auth.select($"id".as("part"), round($"v", 6).as("authority"))
   }
 
-  /** GraphX aggregateMessages twin of hitsOf (r9, the pageRankWeightedGX
-    * precedent): the same simultaneous (Jacobi) update — a_{t+1} from
-    * h_t via sendToDst, h_{t+1} from a_t via sendToSrc, each
-    * max-normalized — run as in-memory message passes instead of
-    * checkpointed shuffles. Vertex state is a (hub, auth) Double pair
-    * (the PageRank regime — no replicated maps); customer and part key
-    * spaces are disambiguated as 2·custkey / 2·partkey+1 (bipartite, so
-    * the roles never mix). The max normalizer is an order-independent
-    * comparison-reduction on both legs; the raw sums differ only in fp
-    * association order — G5's accepted 6dp-absorbed risk class
-    * (GraphSpec pins fixture + corpus identity of the rounded output). */
-  private[graft] def hitsGX(ed: DataFrame, iters: Int): DataFrame = {
-    val s = ed.sparkSession
-    import s.implicits._
-    // r10 (ADVICE r9): an edge-free frame must return the empty relation
-    // like hitsOf does — without this, rawA.values.max() below throws
-    // UnsupportedOperationException on the empty message RDD. r11
-    // (ADVICE r10): built positionally — the loop below reads columns by
-    // position (getLong(0)/getLong(1)), so the guard must not be the one
-    // place that demands a column literally named "p"
-    if (ed.isEmpty)
-      return ed.limit(0)
-        .select(col(ed.columns(1)).cast("long").as("part"),
-          lit(0.0).as("authority"))
-    val cur = ed.rdd.getNumPartitions
-    val rows = ed.queryExecution.optimizedPlan.stats.rowCount
-      .map(_.toLong).getOrElse(ed.count())
-    val arcsPerPart = sys.env.get("GRAFT_ARCS_PER_PART").map(_.toInt).getOrElse(300000)
-    val target = math.max(4, math.ceil(rows.toDouble / arcsPerPart).toInt)
-    val df = if (target < cur) ed.coalesce(target) else ed
-    val arcs = df.rdd.map(r => Edge(r.getLong(0) * 2, r.getLong(1) * 2 + 1, 1))
-    var g: Graph[(Double, Double), Int] = Graph.fromEdges(arcs, (1.0, 1.0),
-      StorageLevel.MEMORY_AND_DISK, StorageLevel.MEMORY_AND_DISK)
-    g.cache()
-    for (_ <- 0 until iters) {
-      val rawA = g.aggregateMessages[Double](
-        ctx => ctx.sendToDst(ctx.srcAttr._1), _ + _,
-        org.apache.spark.graphx.TripletFields.Src)
-      val rawH = g.aggregateMessages[Double](
-        ctx => ctx.sendToSrc(ctx.dstAttr._2), _ + _,
-        org.apache.spark.graphx.TripletFields.Dst)
-      val maxA = rawA.values.max()
-      val maxH = rawH.values.max()
-      val prev = g
-      // every part vertex has in-arcs and every customer vertex out-arcs
-      // (they exist BECAUSE an edge names them), so the getOrElse never
-      // fires on the vertex kind each message targets
-      g = g.outerJoinVertices(rawA) { (_, attr, m) =>
-        (attr._1, m.map(_ / maxA).getOrElse(attr._2)) }
-        .outerJoinVertices(rawH) { (_, attr, m) =>
-          (m.map(_ / maxH).getOrElse(attr._1), attr._2) }
-        .cache()
-      g.vertices.foreachPartition(_ => ()) // materialize before unpersist
-      prev.unpersistVertices(blocking = false)
-      prev.edges.unpersist(blocking = false)
-    }
-    val auths = g.vertices.filter(_._1 % 2 == 1)
-      .map { case (vid, (_, a)) => ((vid - 1) / 2, a) }
-    s.createDataFrame(auths).toDF("part", "raw")
-      .select($"part", round($"raw", 6).as("authority"))
-  }
-
   // G17 — HITS hubs & authorities (Kleinberg 1999; GDS gds.alpha.hits)
   // over the bipartite customer→part purchase graph: authoritative
   // products are the ones bought by strong hub customers, and hub
@@ -1939,12 +1664,8 @@ object GraphOps {
   // recursion degree counts can't see. The co-purchase projection would
   // be HITS-degenerate (undirected ⇒ hubs ≡ authorities); the bipartite
   // purchase graph is where the two roles genuinely differ.
-  // SANCTIONED LEG (r9, measured): the checkpointed-DF loop — 19.1 s at
-  // sf1 vs the GraphX twin's 31.1 (two aggregateMessages passes + two
-  // RDD max() actions per round vs node-sized keyed joins against the
-  // genuinely pre-partitioned arc copies; same r9 AQE discovery as
-  // G11). The GX twin stays, 6dp-identical and spec-pinned, as the
-  // measured alternate.
+  // One leg, hitsOf's checkpointed-DF loop: authorities are a pure
+  // function of (arcs, iters) at 6dp.
   def hits(s: SparkSession, dir: String, iters: Int = 6, k: Int = 20): DataFrame = {
     import s.implicits._
     val ed = Caches.cached(s"hits-ed:$dir") {
@@ -1956,18 +1677,6 @@ object GraphOps {
     hitsOf(ed, iters)
       .orderBy($"authority".desc, $"part")
       .limit(k)
-  }
-
-  /** Gate retained for callers that want the GraphX leg below a budget
-    * (legs 6dp-identical; the default call path is the DF loop — see
-    * `hits`). */
-  private[graft] def hitsGated(ed: DataFrame, iters: Int,
-      cacheKey: Option[String] = None,
-      maxGraphXEdges: Long = 150000000L): DataFrame = {
-    def count = ed.count()
-    val m = cacheKey.fold(count)(key => edgeCountMemo.getOrElseUpdate(key, count))
-    if (m > maxGraphXEdges) hitsOf(ed, iters)
-    else hitsGX(ed, iters)
   }
 
   // G16 — personalized PageRank from one customer's purchase history
@@ -1983,7 +1692,7 @@ object GraphOps {
     val owned = Tables.orders(s, dir).filter($"o_custkey" === custKey)
       .join(Tables.lineitem(s, dir), $"o_orderkey" === $"l_orderkey")
       .select($"l_partkey".as("pk")).distinct()
-    pprGated(edgesUnsorted(s, dir), owned, iters, Some(s"tri-edges:$dir"))
+    pprGated(edgesUnsorted(s, dir), owned, iters)
       .orderBy($"ppr".desc, $"part")
       .limit(k)
   }
@@ -2358,8 +2067,8 @@ object GraphOps {
     * = s_{i−2} is a period-2 cycle) AND the oscillation class a plain
     * no-move rule misses: measured at sf0.001, the corpus labeling
     * never reaches a fixpoint — from sweep ~20 a ~6-node limit cycle
-    * keeps moved > 0 forever (ProbeLouvainExit burned the full budget
-    * 40 AND 100) — so a fixpoint-only exit would never fire on real
+    * keeps moved > 0 forever (budgets 40 and 100 both ran to the end)
+    * — so a fixpoint-only exit would never fire on real
     * corpora. Odd-period matches are ignored: the parity phase differs,
     * so recurrence is not implied.
     *
@@ -2423,10 +2132,10 @@ object GraphOps {
     * so an iterative loop whose next round references its state frame k
     * times COMPOUNDS sizeInBytes k-fold per round: the stat is a BigInt
     * of ~k^round digits, and past ~12 Louvain sweeps (k≈4) the DRIVER
-    * livelocks in BigInteger.multiply during planning — measured on
-    * this host: digits 57→262→1080→4351→17438 across budgets 2→10
-    * (StatsProbe), and a budget-40 ProbeLouvainExit burned 18 CPU-min
-    * inside ToomCook3 without finishing sweep ~15. Rebuilding the frame
+    * livelocks in BigInteger.multiply during planning — measured:
+    * digits 57→262→1080→4351→17438 across budgets 2→10, and a
+    * budget-40 run burned 18 CPU-min inside ToomCook3 without finishing
+    * sweep ~15. Rebuilding the frame
     * from the checkpointed RDD resets stats to the scan default; result
     * frames are plan-independent (hash-match unaffected), runtime
     * broadcast decisions stay with AQE, and the node-sized Row

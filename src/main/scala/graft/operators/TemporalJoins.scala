@@ -230,20 +230,17 @@ object TemporalJoins {
   private[graft] def sessionOverlapRank(s: SparkSession, dir: String,
       cellSeconds: Long = 3600L): DataFrame = rankLegImpl(s, dir, cellSeconds)
 
-  /** Shipped J4 entry — the COUNT contract routes to the rank leg, the
-    * sanction measured both ways (ProbeOverlap, interleaved min-of-2):
-    * sf1 rank 7.8 s vs hour-grid 9.2 / duration-grid 3.7; sf10 rank
-    * 12.8 s vs duration-grid 25.2 (hour-grid ≈ 125 B candidates there —
-    * not worth repping). The grid's candidate mass is Σ k_cell², i.e.
-    * grows with session DENSITY squared at any fixed cell width, while
-    * the rank legs stay n log n — so rank is the 100 TB path and
-    * already wins at sf10 despite losing at sf1. The grid leg remains
-    * the general interval JOIN (pair payloads); GRAFT_OVERLAP=grid opts
-    * the entry back for A/B. Outputs are bit-identical (spec-pinned),
-    * so both legs share the inequality-join oracle. */
+  /** Shipped J4 entry — the COUNT contract runs on the rank leg.
+    * Measured both ways (interleaved min-of-2): sf1 rank 7.8 s vs
+    * hour-grid 9.2 / duration-grid 3.7; sf10 rank 12.8 s vs
+    * duration-grid 25.2 (hour-grid ≈ 125 B candidates there). The grid's
+    * candidate mass is Σ k_cell², i.e. grows with session DENSITY
+    * squared at any fixed cell width, while the rank legs stay n log n —
+    * so rank is the 100 TB path. The grid leg remains the general
+    * interval JOIN (pair payloads); outputs are bit-identical
+    * (spec-pinned), so both legs share the inequality-join oracle. */
   def sessionOverlapCount(s: SparkSession, dir: String): DataFrame =
-    if (sys.env.get("GRAFT_OVERLAP").contains("grid")) sessionOverlap(s, dir)
-    else sessionOverlapRank(s, dir)
+    sessionOverlapRank(s, dir)
 
   private def rankLegImpl(s: SparkSession, dir: String,
       cellSeconds: Long): DataFrame = {

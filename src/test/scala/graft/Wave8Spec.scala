@@ -59,23 +59,18 @@ class Wave8Spec extends SparkSpecBase {
     assert(a2(10L) == 1.0 && a2(11L) == 0.5)
   }
 
-  test("hits: GraphX aggregateMessages leg ≡ DF loop at 6dp (fixture + corpus + gated reroute)") {
+  test("hits: 5-arc fixture authorities at round 6 match the hand computation") {
     val s = spark
     import s.implicits._
-    // fp association order differs between the legs; the 6dp-rounded
-    // output both emit is the leg-identity contract (G5's risk class)
     val ed = Seq((1L, 10L), (2L, 10L), (3L, 10L), (1L, 11L), (3L, 12L)).toDF("u", "p")
-    def toMap(df: org.apache.spark.sql.DataFrame) = df.collect()
+    val a6 = GraphOps.hitsOf(ed, 6).collect()
       .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    assert(toMap(GraphOps.hitsGX(ed, 6)) == toMap(GraphOps.hitsOf(ed, 6)))
-    assert(toMap(GraphOps.hitsGated(ed, 6, maxGraphXEdges = 0L)) ==
-      toMap(GraphOps.hitsGX(ed, 6)), "gate reroute changes the result")
-    val corp = Tables.orders(s, sfDir).select($"o_custkey".as("u"), $"o_orderkey")
-      .join(Tables.lineitem(s, sfDir)
-        .select($"l_orderkey", $"l_partkey".as("p")), $"o_orderkey" === $"l_orderkey")
-      .select($"u", $"p").distinct()
-    assert(toMap(GraphOps.hitsGX(corp, 6)) == toMap(GraphOps.hitsOf(corp, 6)),
-      "corpus leg divergence at 6dp")
+    // hubs 1 and 3 stay tied at 1.0 and hub 2 runs 1, .5, .75, 5/7,
+    // 11/15, 19/26; so a_t(11) = a_t(12) = 1/(2 + h_{t-1}(2)) and round 6
+    // gives 1/(2 + 19/26) = 26/71
+    assert(a6.keySet == Set(10L, 11L, 12L))
+    assert(a6(10L) == 1.0)
+    assert(math.abs(a6(11L) - 26.0 / 71) < 1e-6 && a6(11L) == a6(12L))
   }
 
   test("hits: round 1 ≡ normalized buyer-degree on the corpus; range and top-k") {
