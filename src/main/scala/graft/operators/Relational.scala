@@ -52,7 +52,7 @@ object Relational {
   def productSearch(s: SparkSession, dir: String, terms: Seq[String] = Seq("red", "bolt")): DataFrame = {
     import s.implicits._
     val score = terms
-      .map(t => when(lower($"p_name").contains(t), 1).otherwise(0))
+      .map(t => when(lower($"p_name").contains(t.toLowerCase), 1).otherwise(0))
       .reduce(_ + _)
     Tables.part(s, dir)
       .withColumn("score", score)
@@ -82,7 +82,7 @@ object Relational {
     // One groupBy carries every per-term min-distance (map-side combine
     // folds the exploded tokens back to one row per product pre-shuffle).
     val dists = terms.zipWithIndex.map { case (t, i) =>
-      min(levenshtein($"tok", lit(t))).as(s"_d$i")
+      min(levenshtein($"tok", lit(t.toLowerCase))).as(s"_d$i")
     }
     val agg = toks.groupBy($"p_partkey")
       .agg(min($"p_name").as("p_name"),
@@ -219,24 +219,29 @@ object Relational {
       .orderBy($"category", $"name", $"sku")
   }
 
-  // R5 — stock lookup with cascading fuzzy fallback (tools.py:37-92:
-  // exact phrase → first-2-words → first-word). Stage = strongest match
-  // tier present anywhere in the catalog; returns the first match there.
+  /** R5 — stock lookup with cascading fuzzy fallback (tools.py:37-92):
+    * tier 1 = the name contains the whole (trimmed, lower-cased) phrase,
+    * tier 2 = it contains the first two words, tier 3 = the first word.
+    * Returns the lowest key within the strongest tier present anywhere in
+    * the catalog, as ONE scan: `orderBy(stage, p_partkey).limit(1)` is a
+    * TakeOrderedAndProject, so the global min tier needs no aggregate and
+    * no broadcast join back. A blank query matches nothing. */
   def checkStock(s: SparkSession, dir: String, query: String = "red bolt turbo"): DataFrame = {
     import s.implicits._
-    val words = query.toLowerCase.split("\\s+").toSeq
+    val phrase = query.trim.toLowerCase
+    val words = phrase.split("\\s+").toSeq.filter(_.nonEmpty)
     val nm = lower($"p_name")
-    val stage = when(nm.contains(query.toLowerCase), 1)
-      .when(if (words.length >= 2) nm.contains(words(0)) && nm.contains(words(1)) else lit(false), 2)
-      .when(nm.contains(words(0)), 3)
-    val matches = Tables.part(s, dir)
+    val stage = words match {
+      case Seq() => lit(null).cast("int")
+      case w0 +: rest => when(nm.contains(phrase), 1)
+        .when(rest.headOption.fold(lit(false))(w1 => nm.contains(w0) && nm.contains(w1)), 2)
+        .when(nm.contains(w0), 3)
+    }
+    Tables.part(s, dir)
       .withColumn("stage", stage)
       .filter($"stage".isNotNull)
-    // global min stage: single-row broadcast join, no full shuffle
-    val best = matches.agg(min($"stage").as("best_stage"))
-    matches.join(broadcast(best), $"stage" === $"best_stage")
       .select($"stage", $"p_partkey", $"p_name", ($"p_size" * 10).as("stock_qty"))
-      .orderBy($"p_partkey")
+      .orderBy($"stage", $"p_partkey")
       .limit(1)
   }
 
@@ -250,7 +255,10 @@ object Relational {
     li.join(broadcast(o), $"l_orderkey" === $"o_orderkey")
       .select($"o_orderkey", $"o_orderdate", $"o_totalprice",
         $"l_linenumber", $"l_partkey", $"l_quantity", $"l_extendedprice")
-      .orderBy($"o_orderdate".desc, $"o_orderkey", $"l_linenumber")
+      // bounded by one customer's lines: sorting them in one partition
+      // skips the range sort's sampling job (a second fact scan)
+      .repartition(1)
+      .sortWithinPartitions($"o_orderdate".desc, $"o_orderkey", $"l_linenumber")
   }
 
   // R6b — admin all-orders listing with nested items, newest first
@@ -287,7 +295,9 @@ object Relational {
     Tables.orders(s, dir)
       .filter($"o_custkey" === custkey && $"o_orderstatus".isin("O", "P"))
       .select($"o_orderkey", $"o_orderstatus", $"o_totalprice", $"o_orderdate")
-      .orderBy($"o_orderkey")
+      // bounded by one customer's orders: one-partition sort, no sampling job
+      .repartition(1)
+      .sortWithinPartitions($"o_orderkey")
   }
 
   // R9 — top customers by lifetime revenue (admin customer oversight).

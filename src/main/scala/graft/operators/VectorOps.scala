@@ -3,7 +3,9 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.catalyst.expressions.Literal
 import graft.{Caches, Tables}
+import graft.functions.VecDot
 import graft.functions.GraftFunctions.{vecAbsMax, vecDot, vecNorm, vecQuantAbsSum, vecQuantSelfDot, vecScale, vecSignPack, vecToDouble}
 
 /** Vector-retrieval surface of the reference's Chroma collections
@@ -200,16 +202,20 @@ object VectorOps {
     VecPQ.pqAnn(normed(s, dir), queryId, k, m, ksub, iters, rerank)
 
   /** Fixed pseudo-random hyperplanes, derived from md5 so every engine and
-    * every executor agrees without shipping state. */
+    * every executor agrees without shipping state: component (p, i) is
+    * h % 2001 / 1000 - 1 for h = the top 60 bits of md5("p:i")'s first 8
+    * bytes (the first 15 hex digits of the digest). */
   private[graft] def hyperplanes(nPlanes: Int, dim: Int): Array[Array[Double]] = {
     val mdVal = java.security.MessageDigest.getInstance("MD5")
     Array.tabulate(nPlanes, dim) { (p, i) =>
-      val hex = mdVal.digest(s"$p:$i".getBytes("UTF-8"))
-        .take(8).map("%02x".format(_)).mkString
-      val h = java.lang.Long.parseLong(hex.take(15), 16)
+      val h = java.nio.ByteBuffer.wrap(mdVal.digest(s"$p:$i".getBytes("UTF-8"))).getLong >>> 4
       (h % 2001L) / 1000.0 - 1.0
     }
   }
+
+  /** Width of the embeddings store; `bandSigs` and the indexed probe use
+    * hyperplanes of this width unless a caller bands other vectors. */
+  private val storeDim = 64
 
   /** Banded sign-bit LSH signatures (LSH amplification): `bands` bands of
     * `bits` hyperplane sign bits each, exploded to one (vec_id, k, bv) row
@@ -221,7 +227,7 @@ object VectorOps {
     * Bucket count per band is 2^bits ≫ executor count, so the band-bucket
     * join shuffles on high-cardinality keys. */
   private[graft] def bandSigs(df: DataFrame, bands: Int, bits: Int,
-      dim: Int = 64): DataFrame = {
+      dim: Int = storeDim): DataFrame = {
     import df.sparkSession.implicits._
     require(bits <= 30, "band value must fit an int")
     // dim defaults to the embeddings store's width; parametric since r16
@@ -294,13 +300,19 @@ object VectorOps {
     graft.sinks.TableWriter.writeBucketed(sigs, table, "sig_key", nBuckets)
   }
 
-  /** Query against a prebuilt `lshIndexBuild` table: the query row's
-    * `bands` signatures (bounded driver state — one row) expand to the
-    * multi-probe key set (exact bucket + all radius-1 bit flips, the
-    * same candidate set as lshAnn's `bit_count(bv^qbv) <= 1`), the
-    * bucketed scan prunes to those buckets, and the short candidate
-    * list exact-re-ranks. Returns identical rows to `lshAnn` at
-    * probeRadius=1 — asserted in VectorScaleSpec.
+  /** Query against a prebuilt `lshIndexBuild` table. The query row
+    * (u, v, nrm) is collected once — the call's only job before the probe.
+    * Its `bands` signatures are computed on the driver by the same
+    * `VecDot` kernel `bandSigs` runs in codegen (sequential sum, so the
+    * sign bits are bit-identical), then expand to the multi-probe key set
+    * (exact bucket + all radius-1 bit flips, the same candidate set as
+    * lshAnn's `bit_count(bv^qbv) <= 1`). The bucketed scan prunes to those
+    * buckets through a static `isin`; the candidates semi-join the corpus
+    * (each kept once, so no distinct and no shuffle) and exact-re-rank
+    * against the query's v and nrm passed by value — no second scan of the
+    * corpus for the query row, no query broadcast. Per call: the query
+    * collect, the candidate broadcast, the re-rank. Returns identical rows
+    * to `lshAnn` at probeRadius=1 — asserted in VectorScaleSpec.
     *
     * Serving config: Spark's DisableUnnecessaryBucketedScan rule drops
     * the bucketed layout when no join/agg keys on it (this query only
@@ -312,23 +324,32 @@ object VectorOps {
       queryId: Long = 0L, k: Int = 5, bands: Int = 16, bits: Int = 8): DataFrame = {
     import s.implicits._
     val e = normed(s, dir)
-    val q = e.filter($"vec_id" === queryId)
-      .select($"u", $"v".as("qv"), $"nrm".as("qnrm"))
-    val qSigs = bandSigs(q.select(lit(queryId).as("vec_id"), $"u"), bands, bits)
-      .select($"k", $"bv").collect() // `bands` rows: bounded driver state
-    val probeKeys = qSigs.flatMap { r =>
-      val band = r.getInt(0); val bv = r.getInt(1)
-      (bv +: (0 until bits).map(t => bv ^ (1 << t))).map(band * (1 << bits) + _)
-    }.distinct.toSeq
+    val q = e.filter($"vec_id" === queryId).select($"u", $"v", $"nrm").collect().headOption
+    val probeKeys = q.toSeq.flatMap { r =>
+      bandValues(r.getSeq[Double](0).toArray, bands, bits).zipWithIndex.flatMap { case (bv, band) =>
+        (bv +: (0 until bits).map(t => bv ^ (1 << t))).map(band * (1 << bits) + _)
+      }
+    }.distinct
+    val qv = q.fold(Seq.empty[Double])(_.getSeq[Double](1))
+    val qnrm = q.fold(0.0)(_.getDouble(2))
     val cands = s.table(table)
       .filter($"sig_key".isin(probeKeys: _*) && $"vec_id" =!= queryId)
-      .select($"vec_id").distinct()
-    e.join(cands, "vec_id")
-      .crossJoin(broadcast(q.select($"qv", $"qnrm")))
-      .withColumn("sim", round(dot($"v", $"qv") / ($"nrm" * $"qnrm"), 6))
+      .select($"vec_id")
+    e.join(cands, Seq("vec_id"), "left_semi")
+      .withColumn("sim", round(dot($"v", typedLit(qv)) / ($"nrm" * lit(qnrm)), 6))
       .select($"vec_id", $"sim")
       .orderBy($"sim".desc, $"vec_id")
       .limit(k)
+  }
+
+  /** One vector's band values — `bandSigs`' `bv` per band, in band order —
+    * evaluated on the driver through the same `VecDot` kernel. */
+  private def bandValues(u: Array[Double], bands: Int, bits: Int): Seq[Int] = {
+    val planes = hyperplanes(bands * bits, storeDim)
+    def bit(p: Int): Int =
+      if (VecDot(Literal(u), Literal(planes(p))).eval().asInstanceOf[Double] >= 0) 1 << (p % bits)
+      else 0
+    (0 until bands).map(k => (0 until bits).map(t => bit(k * bits + t)).sum)
   }
 
   // V4b — IVF ANN (the other scale path): k-means coarse quantizer

@@ -33,7 +33,7 @@ object TableWriter {
     * target divides by the table's average row width upstream. */
   def compact(spark: SparkSession, inPath: String, outPath: String,
       targetRowsPerFile: Long, sortCols: Seq[String] = Nil): Unit = {
-    val df = spark.read.parquet(inPath)
+    val df = graft.Tables.read(spark, inPath)
     val n = df.count()
     val files = math.max(1L, (n + targetRowsPerFile - 1) / targetRowsPerFile).toInt
     val re = df.repartition(files)
@@ -82,14 +82,13 @@ object TableWriter {
   def mergeInto(spark: SparkSession, path: String, updates: DataFrame,
       keyCols: Seq[String], partitionCol: String,
       assumeStablePartitionKeys: Boolean = false): Unit = {
-    val exists =
-      try { spark.read.parquet(path).schema; true }
-      catch { case _: org.apache.spark.sql.AnalysisException => false }
-    if (!exists) {
-      updates.write.partitionBy(partitionCol).parquet(path)
-      return
-    }
-    val target = spark.read.parquet(path)
+    // one driver-side footer read; a path with no table takes the first write
+    val target =
+      try graft.Tables.read(spark, path)
+      catch { case _: org.apache.spark.sql.AnalysisException =>
+        updates.write.partitionBy(partitionCol).parquet(path)
+        return
+      }
     // r11 (ADVICE r10, medium): partition values are collected AS THE
     // WRITER-ENCODED STRING — cast(partitionCol as string) under the
     // session timezone is exactly the string the dynamic-partition

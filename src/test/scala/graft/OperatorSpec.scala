@@ -21,6 +21,28 @@ class OperatorSpec extends SparkSpecBase {
     assert(rows(0).getAs[Int]("stage") == 2) // 'red bolt turbo' absent, 'red'+'bolt' present
   }
 
+  test("check stock: the query is trimmed, and a blank query matches nothing") {
+    def hit(q: String) = Relational.checkStock(spark, sfDir, q).collect().toSeq
+    // a leading blank used to make "" the first word: tier 2 became
+    // "contains red" and tier 3 matched every product
+    assert(hit(" red bolt ") == hit("red bolt"))
+    assert(hit(" red bolt ").map(_.getAs[Int]("stage")) == Seq(1))
+    val swapped = hit("  bolt  red")
+    assert(swapped.map(_.getAs[Int]("stage")) == Seq(2))
+    val name = swapped.head.getAs[String]("p_name").toLowerCase
+    assert(name.contains("bolt") && name.contains("red"), name)
+    assert(hit("").isEmpty && hit("   ").isEmpty)
+  }
+
+  test("product and fuzzy search: mixed-case terms match like lower-case ones") {
+    val search = Relational.productSearch(spark, sfDir, Seq("Red", "BOLT")).collect().toSeq
+    assert(search.nonEmpty && search.head.getAs[Int]("score") == 2)
+    assert(search == Relational.productSearch(spark, sfDir, Seq("red", "bolt")).collect().toSeq)
+    val fuzzy = Relational.fuzzySearch(spark, sfDir, Seq("Bolte", "GIZMMO")).collect().toSeq
+    assert(fuzzy.nonEmpty)
+    assert(fuzzy == Relational.fuzzySearch(spark, sfDir, Seq("bolte", "gizmmo")).collect().toSeq)
+  }
+
   test("fuzzy search: a one-edit typo still finds the product") {
     // 'bolte' is one edit from 'bolt'; exact-token search returns nothing.
     val exact = Relational.productSearch(spark, sfDir, Seq("bolte")).count()

@@ -1,5 +1,10 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.GraftTestBridge
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import graft.operators.Relational
+
 /** Physical-plan invariants for the headline queries: the properties the
   * 100 TB design depends on (dims broadcast, filters pushed to the scan,
   * top-k as TakeOrderedAndProject, no nested-loop joins where an
@@ -360,5 +365,49 @@ class PlanInvariantSpec extends SparkSpecBase {
         !p.contains("BroadcastNestedLoopJoin"), s"$q non-keyed join:\n$p")
       assert(!p.contains("Window"), s"$q uses a window:\n$p")
     }
+  }
+
+  /** Spark jobs `body` starts, counted by a listener on a tag local to the
+    * calling thread (so other work in the shared session stays out), read
+    * once the listener bus has drained. */
+  private def jobsOf(body: => Any): Int = {
+    val sc = spark.sparkContext
+    val key = "graft.spec.jobTag"
+    val tag = java.util.UUID.randomUUID.toString
+    val n = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty(key) == tag)) n.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setLocalProperty(key, tag)
+    try body
+    finally {
+      sc.setLocalProperty(key, null)
+      GraftTestBridge.drainListeners(sc)
+      sc.removeSparkListener(listener)
+    }
+    n.get
+  }
+
+  test("request path: a Tables read runs no job; sku, search and stock run one each") {
+    for (t <- Seq("region", "nation", "customer", "supplier", "part", "orders",
+        "lineitem", "events", "documents", "embeddings"))
+      assert(jobsOf(Tables.table(spark, sfDir, t)) == 0, s"reading $t ran a job")
+    val calls = Seq(
+      "productBySku" -> (() => Relational.productBySku(spark, sfDir).collect()),
+      "productSearch" -> (() => Relational.productSearch(spark, sfDir).collect()),
+      "checkStock" -> (() => Relational.checkStock(spark, sfDir).collect()))
+    for ((name, call) <- calls) {
+      val jobs = jobsOf(call())
+      assert(jobs == 1, s"$name ran $jobs jobs")
+    }
+  }
+
+  test("q_check_stock: one scan — no aggregate, no broadcast exchange") {
+    val p = plan("q_check_stock")
+    assert(p.contains("TakeOrderedAndProject"), s"stock lookup lost its top-1:\n$p")
+    assert(!p.contains("Aggregate"), s"stock lookup aggregates:\n$p")
+    assert(!p.contains("BroadcastExchange"), s"stock lookup broadcasts:\n$p")
   }
 }

@@ -91,6 +91,19 @@ class SinksSpec extends SparkSpecBase {
     assert(again == after)
   }
 
+  test("mergeInto: a path with no table takes the first-write branch") {
+    val s = spark
+    import s.implicits._
+    val path = Files.createTempDirectory("merge-new").toString + "/a/b/t"
+    assert(!Files.exists(java.nio.file.Paths.get(path)))
+    val delta = Seq((1L, "widget", "tools"), (2L, "cable", "wires")).toDF("pk", "name", "cat")
+    TableWriter.mergeInto(spark, path, delta, Seq("pk"), "cat")
+    val dirs = new java.io.File(path).list().filter(_.startsWith("cat=")).sorted.toSeq
+    assert(dirs == Seq("cat=tools", "cat=wires"))
+    assert(Tables.read(spark, path).select("pk", "name", "cat").orderBy("pk").collect().toSeq ==
+      delta.collect().toSeq)
+  }
+
   test("mergeInto: a key that changes its partition value leaves no stale row behind") {
     val s = spark
     import s.implicits._

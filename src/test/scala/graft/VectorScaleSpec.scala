@@ -136,6 +136,10 @@ class VectorScaleSpec extends SparkSpecBase {
     // the serving path must return byte-identical rows to the inline form
     val inline = VectorOps.lshAnn(spark, sfDir).collect().toSeq
     assert(indexed.collect().toSeq == inline)
+    for (q <- Seq(3L, 17L, 42L)) assert(
+      VectorOps.lshAnnIndexed(spark, sfDir, "lsh_sigs", q).collect().toSeq ==
+        VectorOps.lshAnn(spark, sfDir, q).collect().toSeq, s"query $q")
+    assert(VectorOps.lshAnnIndexed(spark, sfDir, "lsh_sigs", -1L).collect().isEmpty)
     // and the per-query scan must touch only the probed buckets — the
     // whole point of persisting the query-independent signatures
     val plan = indexed.queryExecution.executedPlan.toString
@@ -146,6 +150,18 @@ class VectorScaleSpec extends SparkSpecBase {
     assert(pruned < sel.get.group(1).toInt, s"scan read every bucket: ${sel.get.group(0)}")
     } finally spark.conf
       .set("spark.sql.sources.bucketing.autoBucketedScan.enabled", prior)
+  }
+
+  test("hyperplanes: the byte derivation equals the md5 hex-string derivation") {
+    def fromHex(nPlanes: Int, dim: Int): Seq[Seq[Double]] = {
+      val md = java.security.MessageDigest.getInstance("MD5")
+      Seq.tabulate(nPlanes, dim) { (p, i) =>
+        val hex = md.digest(s"$p:$i".getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
+        (java.lang.Long.parseLong(hex.take(15), 16) % 2001L) / 1000.0 - 1.0
+      }
+    }
+    for (dim <- Seq(64, 8))
+      assert(VectorOps.hyperplanes(128, dim).map(_.toSeq).toSeq == fromHex(128, dim), s"dim $dim")
   }
 
   test("IVF ANN: k-means cells + nProbe probing recall beats probing budget share") {
