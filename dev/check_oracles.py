@@ -13,12 +13,19 @@ import duckdb, pandas as pd
 
 sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 out_dir = sys.argv[2] if len(sys.argv) > 2 else "/tmp/verify_out"
+# usage: check_oracles.py [sf_dir] [out_dir] [query ...] — trailing query
+# names (as dumped by `graft.Verify <sf_dir> <out_dir> q ...`) limit both
+# loops to those names, and a named query with no output still FAILs; with
+# no names the full gate runs
+only = set(sys.argv[3:])
 
 con = duckdb.connect()
 for t in "region nation customer supplier part orders lineitem events documents embeddings".split():
     con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 
 oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
+if only:
+    oracle = {k: v for k, v in oracle.items() if k in only}
 fails = []
 for name, sql in sorted(oracle.items()):
     try:
@@ -57,8 +64,9 @@ for name, sql in sorted(oracle.items()):
         fails.append(name)
 # --- rows-only entries: drive them like the driver does -------------------
 rows_only = sorted(
-    d for d in os.listdir(out_dir)
-    if os.path.isdir(os.path.join(out_dir, d)) and d not in oracle)
+    (only - oracle.keys()) if only else
+    (d for d in os.listdir(out_dir)
+     if os.path.isdir(os.path.join(out_dir, d)) and d not in oracle))
 for name in rows_only:
     files = glob.glob(f"{out_dir}/{name}/*.parquet")
     if not files:

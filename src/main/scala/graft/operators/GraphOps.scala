@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.graphx.{Edge, Graph, PartitionStrategy}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.GraftCheckpoint
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import graft.{Caches, Tables}
@@ -1124,77 +1125,21 @@ object GraphOps {
       .orderBy($"src", $"rk")
   }
 
-  /** Repartition `df` by `c` and checkpoint it WITH AQE DISABLED for
-    * the checkpoint's own execution. Under AQE, Dataset.localCheckpoint
-    * captures the AdaptiveSparkPlanExec's pre-execution partitioning —
-    * UnknownPartitioning — so a plain repartition(c).localCheckpoint
-    * silently re-shuffles in EVERY downstream join (measured r9: the
-    * checkpointed scan reported UnknownPartitioning(0) and each LPA
-    * round re-exchanged the full arc list, exactly the per-round
-    * 2|E|-shuffle the pre-partitioning was supposed to remove). With
-    * AQE off for just this one query the LogicalRDD records
-    * hashpartitioning(c, shuffle.partitions), and joins planned later
-    * — WITH AQE on — reuse it: the checkpointed side gets a bare Sort,
-    * no Exchange (PlanInvariantSpec pins this). */
-  /** r18, `sorted = true`: the checkpoint additionally sorts each
-    * partition by the key and the recorded `outputOrdering` (Dataset
-    * .localCheckpoint preserves it in the LogicalRDD alongside the
-    * partitioning) lets EnsureRequirements drop the per-round Sort that
-    * every SortMergeJoin against this frame otherwise inserts — the
-    * measured per-iteration cost of EVERY arc-shaped loop frame (the
-    * round-body plan showed `Sort [src] ← Scan ExistingRDD` re-sorting
-    * 2|E| arcs per round; guide §2.4: establish the layout once).
-    * Bit-safety: the sort runs at checkpoint time over the exact row
-    * sequence the per-round SMJ sort consumed before (the stored
-    * repartition output), with the same SortExec — so every downstream
-    * join sees the identical row order and every post-join aggregation
-    * is bit-identical. Only frames whose consumers are key-joins or
-    * exact (integer/set) aggregations opt in; per-round STATE frames
-    * stay unsorted so direct double-sum scans over them keep their
-    * historical order. */
+  /** `df` hash-partitioned by `c` into `spark.sql.shuffle.partitions`
+    * partitions and checkpointed with that layout recorded, so a join or
+    * aggregation on `c` planned later (AQE on) reuses it: no Exchange on
+    * this side, only the other side shuffles (PlanInvariantSpec pins it).
+    * With `sorted`, each partition is also sorted by `c` and the recorded
+    * ordering drops the Sort a SortMergeJoin would put on this side. The
+    * sort runs over the same rows in the same order as that per-join
+    * Sort, so downstream results are bit-identical; only frames consumed
+    * by key joins or exact aggregations opt in, while per-round state
+    * frames stay unsorted so double sums over them keep their order. No
+    * session, conf or catalog side effects (`GraftCheckpoint`). */
   private[graft] def partitionedCheckpoint(df: DataFrame, c: String,
       sorted: Boolean = false): DataFrame = {
-    val s = df.sparkSession
-    // r10 (ADVICE r9): the AQE override is scoped to a THROWAWAY child
-    // session instead of mutating the caller's session conf — a set/
-    // restore on the shared conf de-AQE'd any query another thread
-    // planned concurrently (streaming micro-batches, multi-threaded
-    // drivers) and two overlapping calls could race the restore. The
-    // child session shares the SparkContext, catalog and cache but owns
-    // its conf; global temp views carry the ANALYZED plans across, so
-    // the checkpoint executes under AQE-off without the caller's
-    // session ever observing a conf change. shuffle.partitions is copied
-    // explicitly: it sizes the recorded hashpartitioning, and a mismatch
-    // with the caller's setting would void the layout reuse downstream.
-    val s2 = s.newSession()
-    // r11 (ADVICE r10): the child session inherits the caller's FULL
-    // runtime SQL conf (modifiable keys only — static/core entries in
-    // getAll reject set() and are already shared via the context), so a
-    // caller-tuned exchange knob (shuffle.partitions, maxPartitionBytes,
-    // codegen flags…) shapes the recorded layout exactly as it would the
-    // caller's own plan. Only the AQE flag is forced off — the one conf
-    // this helper exists to scope.
-    s.conf.getAll.foreach { case (k, v) =>
-      if (k != "spark.sql.adaptive.enabled" && s.conf.isModifiable(k))
-        s2.conf.set(k, v)
-    }
-    s2.conf.set("spark.sql.adaptive.enabled", "false")
-    // the global-temp database name is itself configurable (r11, ADVICE
-    // r10) — resolve it instead of hard-coding "global_temp"
-    val gtDb = s.conf.get("spark.sql.globalTempDatabase", "global_temp")
-    val name = "graft_pc_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    df.createOrReplaceGlobalTempView(name)
-    try {
-      val rep = s2.table(s"$gtDb.$name").repartition(col(c))
-      val ck = (if (sorted) rep.sortWithinPartitions(col(c)) else rep)
-        .localCheckpoint(true)
-      ck.createOrReplaceGlobalTempView(s"${name}_ck")
-      // Dataset creation analyzes eagerly, inlining the view's LogicalRDD
-      // (with its recorded partitioning) into a frame bound to the
-      // CALLER's session — safe to drop both views immediately after
-      try s.table(s"$gtDb.${name}_ck")
-      finally s.catalog.dropGlobalTempView(s"${name}_ck")
-    } finally s.catalog.dropGlobalTempView(name)
+    val rep = df.repartition(col(c))
+    GraftCheckpoint.localCheckpoint(if (sorted) rep.sortWithinPartitions(col(c)) else rep)
   }
 
   /** Mirrored arc frame for the iterative-DF loops, src-partitioned via

@@ -151,12 +151,11 @@ object TableWriter {
     // commit — bounded by the affected partitions, not the table
     val merged = survivors.unionByName(updates.select(target.columns.map(col): _*))
       .localCheckpoint(true)
-    // r11 (ADVICE r10, low): the overwrite mode rides a WRITE-SCOPED
-    // option instead of a set/restore on the shared session conf — the
-    // same concurrent-planning race partitionedCheckpoint eliminated for
-    // the AQE flag (a concurrent thread's overwrite could plan under
-    // "dynamic", and two overlapping mergeInto calls could race the
-    // restore). DataFrameWriter options shadow the SQL conf per write.
+    // the overwrite mode rides a WRITE-SCOPED option, not a set/restore
+    // on the shared session conf: a concurrent thread's overwrite could
+    // plan under "dynamic", and two overlapping mergeInto calls could
+    // race the restore. DataFrameWriter options shadow the SQL conf per
+    // write.
     merged.write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy(partitionCol).parquet(path)

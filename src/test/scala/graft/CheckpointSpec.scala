@@ -1,0 +1,68 @@
+package graft
+
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.functions._
+import graft.operators.GraphOps
+
+/** The contract of `GraphOps.partitionedCheckpoint`: the layout it
+  * records follows the caller's `spark.sql.shuffle.partitions`, every row
+  * sits in the partition that layout names, `sorted` orders each
+  * partition, and the caller's session is left as it was. */
+class CheckpointSpec extends SparkSpecBase {
+
+  private val spk = "spark.sql.shuffle.partitions"
+
+  private def withPartitions[T](n: Int)(body: => T): T = {
+    val prev = spark.conf.getOption(spk)
+    spark.conf.set(spk, n.toString)
+    try body finally prev.fold(spark.conf.unset(spk))(spark.conf.set(spk, _))
+  }
+
+  private def frame = spark.range(0, 2000)
+    .select((col("id") * 7919 % 211).as("src"), col("id").as("dst"))
+
+  test("the checkpoint takes the caller's shuffle.partitions and records hashpartitioning(src, n)") {
+    withPartitions(7) {
+      val ck = GraphOps.partitionedCheckpoint(frame, "src")
+      assert(ck.rdd.getNumPartitions == 7)
+      ck.queryExecution.executedPlan.outputPartitioning match {
+        case h: HashPartitioning =>
+          assert(h.numPartitions == 7)
+          assert(h.references.map(_.name).toSeq == Seq("src"), h.toString)
+        case p => fail(s"no hash partitioning recorded: $p")
+      }
+    }
+  }
+
+  test("every row sits in partition pmod(hash(src), n)") {
+    withPartitions(7) {
+      val ck = GraphOps.partitionedCheckpoint(frame, "src")
+      val placed = ck.select(spark_partition_id().as("pid"),
+        pmod(hash(col("src")), lit(7)).as("want"))
+      assert(placed.distinct().count() > 1, "all rows in one partition")
+      assert(placed.filter(col("pid") =!= col("want")).count() == 0)
+    }
+  }
+
+  test("sorted = true: src never decreases within a partition") {
+    withPartitions(7) {
+      val ck = GraphOps.partitionedCheckpoint(frame, "src", sorted = true)
+      val runs = ck.rdd.mapPartitions { it =>
+        val keys = it.map(_.getLong(0)).toVector
+        Iterator((keys.distinct.size, keys == keys.sorted))
+      }.collect()
+      assert(runs.exists(_._1 > 1), "no partition holds two keys")
+      assert(runs.forall(_._2), "a partition is out of src order")
+    }
+  }
+
+  test("the caller's AQE flag and the global temp database are untouched") {
+    val aqe = "spark.sql.adaptive.enabled"
+    val gtDb = spark.conf.get("spark.sql.globalTempDatabase")
+    val before = spark.catalog.listTables(gtDb).collect().map(_.name).toSet
+    val aqeBefore = spark.conf.getOption(aqe)
+    GraphOps.partitionedCheckpoint(frame, "src", sorted = true)
+    assert(spark.conf.getOption(aqe) == aqeBefore)
+    assert(spark.catalog.listTables(gtDb).collect().map(_.name).toSet == before)
+  }
+}

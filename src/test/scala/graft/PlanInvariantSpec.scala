@@ -315,32 +315,52 @@ class PlanInvariantSpec extends SparkSpecBase {
   test("r9 iterative loops: checkpointed arc frame keeps hashpartitioning(src), joins re-shuffle only state") {
     val s = spark
     import s.implicits._
+    import graft.operators.GraphOps
     // the LPA/walk/Brandes loops all source their arcs from loopArcs —
     // this pins the two properties their per-round cost model rests on
-    val edges = graft.operators.GraphOps.copurchaseEdges(spark, sfDir)
-      .select("src", "dst", "weight")
-    val arcs = graft.operators.GraphOps.loopArcs(edges, withWeight = true)
+    val edges = GraphOps.copurchaseEdges(spark, sfDir).select("src", "dst", "weight")
+    val arcs = GraphOps.loopArcs(edges, withWeight = true)
     // 1. the checkpoint preserves the repartition: the scan's output
     //    partitioning is hashpartitioning(src)
     val part = arcs.queryExecution.executedPlan.outputPartitioning.toString
     assert(part.contains("hashpartitioning(src"),
       s"checkpoint dropped the arc partitioning: $part")
-    // 2. one LPA round body: the arc-side scan feeds the join with NO
-    //    Exchange between them (only the node-sized label frame and the
-    //    post-agg exchanges shuffle)
+    // 2. one LPA round body, planned with broadcast off so the join is a
+    //    SortMergeJoin (broadcasting the label frame would hide the arc
+    //    side's layout): the nodes between the arc scan and the join
     val labels = arcs.select($"src".as("v")).distinct()
       .select($"v", $"v".as("lbl")).localCheckpoint(true)
-    val votes = arcs.join(labels, $"src" === $"v")
-      .groupBy($"dst", $"lbl").agg(org.apache.spark.sql.functions.sum($"weight").as("vote"))
-    val pv = votes.queryExecution.executedPlan.toString
     val arcScan = (l: String) =>
       l.contains("Scan ExistingRDD") && l.contains("src") && l.contains("weight")
-    assert(pv.linesIterator.exists(arcScan), s"no arc scan in plan:\n$pv")
-    val anc = ancestorsOf(pv, arcScan)
-    val belowJoin = anc.takeWhile(!_.contains("Join"))
-    assert(belowJoin.forall(!_.contains("Exchange")),
-      s"arc side re-shuffles before the join:\n$pv")
-    assert(anc.exists(_.contains("Join")), s"arc scan not under a join:\n$pv")
+    def arcSide(a: org.apache.spark.sql.DataFrame): (Seq[String], String) = {
+      val pv = a.join(labels, $"src" === $"v")
+        .groupBy($"dst", $"lbl").agg(org.apache.spark.sql.functions.sum($"weight").as("vote"))
+        .queryExecution.executedPlan.toString
+      assert(pv.linesIterator.exists(arcScan), s"no arc scan in plan:\n$pv")
+      val anc = ancestorsOf(pv, arcScan)
+      assert(anc.find(_.contains("Join")).exists(_.contains("SortMergeJoin")),
+        s"arc scan not under a SortMergeJoin:\n$pv")
+      (anc.takeWhile(!_.contains("Join")), pv)
+    }
+    val keys = Seq("spark.sql.autoBroadcastJoinThreshold",
+      "spark.sql.adaptive.autoBroadcastJoinThreshold")
+    val prev = keys.map(k => k -> spark.conf.getOption(k))
+    try {
+      keys.foreach(spark.conf.set(_, "-1"))
+      // sorted (loopArcs): neither an Exchange nor a Sort on the arc side
+      val (below, pv) = arcSide(arcs)
+      assert(below.forall(l => !l.contains("Exchange") && !l.contains("Sort")),
+        s"sorted arc side re-shuffles or re-sorts before the join:\n$pv")
+      // control, unsorted: the layout still saves the Exchange, but the
+      // join must sort the arc side itself
+      val base = edges.select($"src", $"dst", $"weight")
+        .unionAll(edges.select($"dst".as("src"), $"src".as("dst"), $"weight"))
+      val (belowU, pu) = arcSide(GraphOps.partitionedCheckpoint(base, "src"))
+      assert(belowU.forall(!_.contains("Exchange")),
+        s"unsorted arc side re-shuffles before the join:\n$pu")
+      assert(belowU.exists(_.contains("Sort")),
+        s"unsorted arc side joined without a Sort:\n$pu")
+    } finally prev.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
   }
 
   test("r9b operators: winnow shuffles only for the output sort; line-dedup and the text gates never window or nest-loop") {
