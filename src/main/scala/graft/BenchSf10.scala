@@ -26,10 +26,7 @@ object BenchSf10 {
     "g_random_walks", "g_node2vec",
     // r13: HyperANF distance profile (standing record 379.3 s, §5 r13)
     "g_reach_profile",
-    // r14: HyperBall harmonic centrality (the same loop + per-node state;
-    // r15 fused the two into one pass; r16 times the pair as a GROUP —
-    // reach cold, harmonic as the memoized second read, attributed via
-    // "memoized_after" in the artifact)
+    // r14: HyperBall harmonic centrality (the same loop + per-node state)
     "g_harmonic_all",
     // r15: one-level deterministic Louvain (5 synchronous ΔQ sweeps)
     "g_louvain")
@@ -122,30 +119,12 @@ object BenchSf10 {
     // the settled JVM the settle() step guarantees), so a burst costs
     // ONE entry, not the window.
     case class Entry(name: String, repsS: Seq[Double],
-        cpuPre: Double, memPre: Double, cpuPost: Double, memPost: Double,
-        memoizedAfter: Option[String] = None)
-    // r16 (VERDICT r15 #6): the G21/G22 loop is FUSED and session-
-    // memoized, but settle() clears the memo between entries — so the
-    // r15 deck paid the full fused pass TWICE (445.2 + 492.2 s for one
-    // loop's information) and round totals double-counted it. When both
-    // entries are in the run they now time as a UNIT per rep: reach pays
-    // the cold fused pass, harmonic is the memoized second read off the
-    // same warm session (no settle in between — that IS the serving
-    // economics: measured at sf10, 675.8 s cold + 8.4 s memoized),
-    // and the artifact attributes it via "memoized_after".
-    val fusedPair = Seq("g_reach_profile", "g_harmonic_all")
-    val groups: Seq[Seq[String]] =
-      if (fusedPair.forall(names.contains))
-        names.filterNot(_ == "g_harmonic_all").map {
-          case "g_reach_profile" => fusedPair
-          case n => Seq(n)
-        }
-      else names.map(Seq(_))
+        cpuPre: Double, memPre: Double, cpuPost: Double, memPost: Double)
     // sentinel stamps survive a dead context too (same rationale as the
     // settle guard): -1 marks "unstampable", which also reads as loud
     def cpuSafe(): Double =
       try Sentinels.cpu(spark) catch { case _: Throwable => -1.0 }
-    val results = groups.flatMap { grp =>
+    val results = names.map { n =>
       val cpuPre = cpuSafe()
       val memPre = mem.run()
       // the mem sentinel just streamed 1 GiB — give GC its moment so
@@ -154,20 +133,8 @@ object BenchSf10 {
       // mask it, GRAFT_SF10_REPS=1 would not)
       System.gc()
       Thread.sleep(1000)
-      // each rep times the whole group in order and settles only AFTER
-      // it — a later group member reads the session the earlier one
-      // warmed (single-name groups degrade to the old per-entry shape)
-      val repTs: Seq[Seq[Double]] = Seq.fill(reps) {
-        val ts = grp.map(timeOne)
-        settle()
-        ts
-      }
-      val cpuPost = cpuSafe()
-      val memPost = mem.run()
-      grp.zipWithIndex.map { case (n, i) =>
-        Entry(n, repTs.map(_(i)), cpuPre, memPre, cpuPost, memPost,
-          memoizedAfter = if (i > 0) Some(grp.head) else None)
-      }
+      val repsS = Seq.fill(reps)(runOnce(n))
+      Entry(n, repsS, cpuPre, memPre, cpuSafe(), mem.run())
     }
     // quiet verdict is SELF-REFERENCED: the window's best stamp is what
     // this host does undisturbed; an entry whose worst stamp exceeds it
@@ -203,13 +170,11 @@ object BenchSf10 {
     val qs = results.map { e =>
       val v = if (e.repsS.exists(_ < 0)) -1.0 else e.repsS.min
       val repsJson = e.repsS.map(t => f"$t%.3f").mkString("[", ",", "]")
-      val attr = e.memoizedAfter
-        .map(a => s""","memoized_after":"$a"""").getOrElse("")
       "\"" + e.name + "\":{" +
         f""""secs":$v%.3f,"reps":$repsJson,""" +
         f""""cpu_pre":${e.cpuPre}%.3f,"cpu_post":${e.cpuPost}%.3f,""" +
         f""""mem_pre":${e.memPre}%.3f,"mem_post":${e.memPost}%.3f,""" +
-        s""""quiet":${quiet(e)}$attr}"""
+        s""""quiet":${quiet(e)}}"""
     }.mkString("{", ",", "}")
     val total = results.map(e => if (e.repsS.exists(_ < 0)) -1.0 else e.repsS.min)
       .filter(_ >= 0).sum

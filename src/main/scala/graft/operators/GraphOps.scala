@@ -157,93 +157,13 @@ object GraphOps {
       .limit(k)
   }
 
-  /** DataFrame-native PageRank — the same fixpoint iteration
-    * staticPageRank runs (init 1.0; r ← 0.15 + 0.85·Σ r_nbr/deg_nbr),
-    * expressed as joins + aggregations so Tungsten codegen owns the hot
-    * loop and each iteration is one shuffle of the (small) rank table
-    * against the cached degree-annotated arc list. Kept as the measured
-    * alternative for the regime where GraphX's per-iteration RDD
-    * scheduling dominates (VERDICT r2 "watch" on g_pagerank); the
-    * sanctioned GraphX path stays the queries entry. GraphSpec pins both
-    * implementations to the same fixture fixpoints. */
-  private[graft] def pageRankDF(edges: DataFrame, iters: Int): DataFrame = {
-    val s = edges.sparkSession
-    import s.implicits._
-    val arcs = edges.select($"src", $"dst")
-      .unionAll(edges.select($"dst".as("src"), $"src".as("dst")))
-    val deg = arcs.groupBy($"src").agg(count(lit(1)).as("deg"))
-    // localCheckpoint truncates lineage each iteration — without it the
-    // logical plan nests one level per iteration and Catalyst analysis
-    // cost grows quadratically (the iterative-DataFrame pitfall).
-    // partitionedCheckpoint (r9): keeps hashpartitioning(src) through
-    // the checkpoint so the 10 per-round joins shuffle only the rank
-    // frame, never the arcs (a bare localCheckpoint loses it under AQE)
-    val arcsD = partitionedCheckpoint(
-      arcs.join(deg, "src").select($"src", $"dst", $"deg"), "src",
-      sorted = true)
-    val verts = deg.select($"src".as("v")).localCheckpoint(eager = true)
-    var ranks = verts.select($"v", lit(1.0).as("rank"))
-      .localCheckpoint(eager = true)
-    // r17: rank state is consumed once per round, so checkpoint every
-    // SECOND round (the communitiesOf cadence argument) — bit-identical,
-    // one node-sized materialization job saved per skipped round.
-    for (i <- 0 until iters) {
-      val contribs = arcsD.join(ranks, $"src" === $"v")
-        .groupBy($"dst").agg(sum($"rank" / $"deg").as("msg"))
-      ranks = verts
-        .join(contribs, $"v" === $"dst", "left")
-        .select($"v", (lit(0.15) + lit(0.85) * coalesce($"msg", lit(0.0))).as("rank"))
-      if (i % 2 == 1 || i == iters - 1)
-        ranks = ranks.localCheckpoint(eager = true)
-    }
-    ranks.select($"v".as("part"), round($"rank", 6).as("rank"))
-      .orderBy($"rank".desc, $"part")
-  }
-
   /** Weighted static PageRank over an arbitrary canonical (src, dst,
     * weight) edge frame: rank mass follows edge weight — msg = rank ·
     * w/wdeg(src) instead of rank/deg(src) — so a product co-purchased
-    * 50× pulls proportionally more rank than a one-off pairing. Same
-    * DataFrame fixpoint loop as pageRankDF (one shuffle of the small
-    * rank table per iteration against the cached weight-normalized arc
-    * list; localCheckpoint truncates lineage). Expression shapes are
-    * mirrored by the DuckDB oracle (CAST(w)/CAST(wdeg), damp folded from
-    * 1.0-0.15) so the result hash-matches at 6dp. */
-  private[graft] def pageRankWeightedOf(edges: DataFrame, iters: Int): DataFrame = {
-    val s = edges.sparkSession
-    import s.implicits._
-    val damp = 1.0 - 0.15 // fold exactly as the oracle's (1.0 - 0.15)
-    val arcs = edges.select($"src", $"dst", $"weight")
-      .unionAll(edges.select($"dst".as("src"), $"src".as("dst"), $"weight"))
-    val wdeg = arcs.groupBy($"src").agg(sum($"weight").as("wdeg"))
-    val arcsD = partitionedCheckpoint(
-      arcs.join(wdeg, "src")
-        .select($"src", $"dst",
-          ($"weight".cast("double") / $"wdeg".cast("double")).as("rw")), "src",
-      sorted = true)
-    val verts = wdeg.select($"src".as("v")).localCheckpoint(eager = true)
-    var ranks = verts.select($"v", lit(1.0).as("rank"))
-      .localCheckpoint(eager = true)
-    // r17: same cadence-2 checkpoint as pageRankDF (single consumer)
-    for (i <- 0 until iters) {
-      val contribs = arcsD.join(ranks, $"src" === $"v")
-        .groupBy($"dst").agg(sum($"rank" * $"rw").as("msg"))
-      ranks = verts
-        .join(contribs, $"v" === $"dst", "left")
-        .select($"v", (lit(0.15) + lit(damp) * coalesce($"msg", lit(0.0))).as("rank"))
-      if (i % 2 == 1 || i == iters - 1)
-        ranks = ranks.localCheckpoint(eager = true)
-    }
-    ranks.select($"v".as("part"), round($"rank", 6).as("rank"))
-  }
-
-  /** Weighted static PageRank on GraphX — the same fixpoint as
-    * pageRankWeightedOf but with GraphX's per-iteration scheduling
-    * instead of DataFrame checkpoints (measured: the DF form's
-    * localCheckpoint materialization made it the slowest bench query at
-    * sf1, 24.6 s vs 16.7 s for unweighted GraphX). Mirrors
-    * PageRank.runWithOptions' caching discipline; expression shapes
-    * (rank·(w/wdeg), 0.15 + (1.0-0.15)·Σ) match the recursive-CTE
+    * 50× pulls proportionally more rank than a one-off pairing. Runs on
+    * GraphX (measured faster than a DataFrame fixpoint loop, SURVEY §5).
+    * Mirrors PageRank.runWithOptions' caching discipline; expression
+    * shapes (rank·(w/wdeg), 0.15 + (1.0-0.15)·Σ) match the recursive-CTE
     * oracle bit-for-bit modulo 6dp-absorbed sum order. */
   private[graft] def pageRankWeightedGX(edges: DataFrame, iters: Int): DataFrame = {
     val s = edges.sparkSession
@@ -275,8 +195,7 @@ object GraphOps {
   }
 
   // G5b — weighted PageRank over the co-purchase graph (the edge weights
-  // G1 computes finally drive the ranking). GraphX path; the DataFrame
-  // twin (pageRankWeightedOf) stays spec-pinned to the same fixpoints.
+  // G1 computes finally drive the ranking).
   def pageRankWeighted(s: SparkSession, dir: String, iters: Int = 10, k: Int = 20): DataFrame = {
     import s.implicits._
     pageRankWeightedGX(edgesUnsorted(s, dir), iters)
@@ -304,12 +223,13 @@ object GraphOps {
     cacheKey.fold(mirror)(key => Caches.cached(key)(mirror))
   }
 
-  /** Candidate-work probe for exact node similarity, memoized per corpus
-    * (same discipline as Dedup's clone-mass gate): from the degree frame,
-    * the number of super-connectors (deg > maxDeg) and the candidate rows
-    * the shared-neighbor self-join will emit after they are dropped —
-    * Σ_{deg(n) ≤ maxDeg} deg(n)². One scalar aggregate over the cached
-    * arcs, amortized against the quadratic join it sizes.
+  /** Candidate-work probe for exact node similarity: from the degree
+    * frame, the number of super-connectors (deg > maxDeg) and the
+    * candidate rows the shared-neighbor self-join will emit after they
+    * are dropped — Σ_{deg(n) ≤ maxDeg} deg(n)². One scalar aggregate over
+    * the cached arcs, run on every call (never memoized: the answer
+    * always reflects the frame as it is now), amortized against the
+    * quadratic join it sizes.
     *
     * Unfiltered degrees are the RIGHT group sizes here, not a conservative
     * proxy (ADVICE r7 re-derived): the self-join groups on the shared-
@@ -318,21 +238,14 @@ object GraphOps {
     * surviving (non-hub) key v is #{a : a→v kept} = every neighbor of v —
     * i.e. v's UNFILTERED degree. So Σ_{non-hub} deg² is exactly the
     * filtered join's candidate volume. */
-  private val pairWorkMemo =
-    scala.collection.concurrent.TrieMap.empty[(String, Int), (Long, Long)]
-
-  private def pairWorkOf(nbrs: DataFrame, maxDeg: Int,
-      cacheKey: Option[String]): (Long, Long) = {
-    def probe: (Long, Long) = {
-      import nbrs.sparkSession.implicits._
-      val r = nbrs.groupBy($"a").agg(count(lit(1)).as("d"))
-        .agg(
-          coalesce(sum(when($"d" > maxDeg, 1L).otherwise(0L)), lit(0L)),
-          coalesce(sum(when($"d" <= maxDeg, $"d" * $"d").otherwise(0L)), lit(0L)))
-        .head()
-      (r.getLong(0), r.getLong(1))
-    }
-    cacheKey.fold(probe)(key => pairWorkMemo.getOrElseUpdate((key, maxDeg), probe))
+  private def pairWorkOf(nbrs: DataFrame, maxDeg: Int): (Long, Long) = {
+    import nbrs.sparkSession.implicits._
+    val r = nbrs.groupBy($"a").agg(count(lit(1)).as("d"))
+      .agg(
+        coalesce(sum(when($"d" > maxDeg, 1L).otherwise(0L)), lit(0L)),
+        coalesce(sum(when($"d" <= maxDeg, $"d" * $"d").otherwise(0L)), lit(0L)))
+      .head()
+    (r.getLong(0), r.getLong(1))
   }
 
   // G9 — node similarity: Jaccard over neighbor sets of the co-purchase
@@ -388,7 +301,7 @@ object GraphOps {
     val s = e.sparkSession
     import s.implicits._
     val nbrs = mirroredNbrs(e, cacheKey)
-    val (nHubs, cappedWork) = pairWorkOf(nbrs, maxDeg, cacheKey)
+    val (nHubs, cappedWork) = pairWorkOf(nbrs, maxDeg)
     if (cappedWork > maxPairWork) {
       // surfaced, not silent (ADVICE r7): above budget the exact operator
       // answers with the probabilistic banding twin — callers needing the
@@ -506,7 +419,7 @@ object GraphOps {
     val s = e.sparkSession
     import s.implicits._
     val nbrs = mirroredNbrs(e, cacheKey)
-    val (nHubs, cappedWork) = pairWorkOf(nbrs, maxDeg, cacheKey)
+    val (nHubs, cappedWork) = pairWorkOf(nbrs, maxDeg)
     if (cappedWork > maxPairWork) {
       log.warn(s"g_adamic_adar: pair work $cappedWork exceeds budget " +
         s"$maxPairWork — rerouting to MinHash-LSH banded candidates " +
@@ -670,69 +583,26 @@ object GraphOps {
     } finally arcs.unpersist()
   }
 
-  /** Hop distances to landmarks for an arbitrary canonical edge frame
-    * (vertices unreachable from a landmark carry no row for it — the
-    * Pregel ShortestPaths contract).
-    *
-    * r10 (ADVICE r9): BOUNDED Pregel — `maxIterations = maxHops` caps the
-    * supersteps, so this leg computes exactly the distances ≤ maxHops the
-    * oracle's recursive CTE (`WHERE hops < maxHops`) and the DF leg's
-    * level loop compute. The stock lib.ShortestPaths runs to convergence,
-    * which made oracle parity depend on corpus eccentricity (~3-4 here)
-    * instead of on the contract; all three legs now share one bound.
-    * State stays the replicated per-vertex Map[landmark→dist] regime the
-    * gate documents (fine at ≤3M edges, the reason the DF leg exists). */
+  /** Hop distances to landmarks for an arbitrary canonical edge frame —
+    * frontier-iteration multi-source BFS (the recursive-CTE oracle
+    * shape, run level-synchronously): seed each landmark (the smallest
+    * nLandmarks node ids) at hop 0, then per level join the frontier
+    * against the cached arc list and anti-join out (node, landmark)
+    * pairs already labeled — BFS discovers each pair at its minimum hop,
+    * so first discovery IS the distance. Each level is two keyed
+    * shuffles of the FRONTIER (≤ V×L rows), never of the full distance
+    * table; localCheckpoint truncates lineage per level (the
+    * iterative-DataFrame pitfall). Levels run to the landmark
+    * eccentricity (~3-4 on the co-purchase graph); `maxHops` bounds the
+    * levels exactly as the oracle's `WHERE hops < maxHops` does, so
+    * parity never depends on corpus eccentricity. Unreachable pairs emit
+    * no row. Every structure is a flat keyed frame that spills under
+    * pressure — no replicated per-vertex Map[landmark→dist] state. */
   private[graft] def shortestPathsOf(edges: DataFrame, nLandmarks: Int,
       maxHops: Int = 8): DataFrame = {
     val s = edges.sparkSession
     import s.implicits._
-    val g = graphOf(edges)
-    val landmarks = g.vertices.map(_._1).takeOrdered(nLandmarks).toSeq
-    val lmSet = landmarks.toSet
-    type SPMap = Map[Long, Long]
-    def merged(a: SPMap, b: SPMap): SPMap =
-      (a.keySet ++ b.keySet).iterator.map { lm =>
-        lm -> math.min(a.getOrElse(lm, Long.MaxValue), b.getOrElse(lm, Long.MaxValue))
-      }.toMap
-    val init: Graph[SPMap, Long] = g.mapVertices((vid, _) =>
-      if (lmSet(vid)) Map(vid -> 0L) else Map.empty[Long, Long])
-    // graphOf mirrors every edge, so src→dst messages walk both directions
-    val res = org.apache.spark.graphx.Pregel(
-        init, Map.empty[Long, Long], maxIterations = maxHops)(
-      (_, attr, msg) => merged(attr, msg),
-      t => {
-        val better = t.srcAttr.iterator
-          .map { case (lm, d) => lm -> (d + 1L) }
-          .filter { case (lm, d) => d < t.dstAttr.getOrElse(lm, Long.MaxValue) }
-          .toMap
-        if (better.nonEmpty) Iterator((t.dstId, better)) else Iterator.empty
-      },
-      merged)
-    val rows = res.vertices.flatMap { case (v, m) => m.map { case (lm, d) => (v, lm, d) } }
-    s.createDataFrame(rows).toDF("part", "landmark", "hops")
-      .orderBy($"part", $"landmark")
-  }
-
-  /** DataFrame leg of G8 — frontier-iteration multi-source BFS (the
-    * recursive-CTE oracle shape, run level-synchronously): seed each
-    * landmark at hop 0, then per level join the frontier against the
-    * cached arc list and anti-join out (node, landmark) pairs already
-    * labeled — BFS discovers each pair at its minimum hop, so first
-    * discovery IS the distance. Each level is two keyed shuffles of the
-    * FRONTIER (≤ V×L rows), never of the full distance table;
-    * localCheckpoint truncates lineage per level (the iterative-DataFrame
-    * pitfall, same as pageRankDF). Levels run to the landmark
-    * eccentricity (~3-4 on the co-purchase graph; `maxHops` bounds
-    * pathological chains). Unreachable pairs emit no row — the Pregel
-    * ShortestPaths contract. Unlike GraphX's replicated per-vertex
-    * Map[landmark→dist] state, every structure here is a flat keyed
-    * frame that spills under pressure instead of dying. */
-  private[graft] def shortestPathsDF(edges: DataFrame, nLandmarks: Int,
-      maxHops: Int = 8): DataFrame = {
-    val s = edges.sparkSession
-    import s.implicits._
     val arcs = loopArcs(edges, withWeight = false)
-    // same landmark choice as the GraphX leg: smallest nLandmarks node ids
     val landmarks = arcs.select($"src").distinct().as[Long]
       .orderBy($"src").limit(nLandmarks).collect().toSeq
     var dist = landmarks.toDF("part")
@@ -754,23 +624,9 @@ object GraphOps {
   }
 
   // G8 — hop distances to landmark products (the Cypher
-  // shortestPath((a)-[*]-(b)) shape, batched over all nodes). Gated like
-  // G7: GraphX Pregel ShortestPaths replicates a Map[landmark→dist] per
-  // vertex into every edge partition that touches it — the same
-  // replicated-state regime that OOMs triangleCount — and was the
-  // slowest sf10 graph query (239 s, r7); above the arc budget the
-  // frontier-iteration DataFrame leg (flat keyed shuffles, spills
-  // instead of dying) answers. Both legs are result-identical (GraphSpec
-  // pins fixture + corpus identity).
+  // shortestPath((a)-[*]-(b)) shape, batched over all nodes).
   def shortestPaths(s: SparkSession, dir: String, nLandmarks: Int = 3): DataFrame =
-    shortestPathsGated(edgesUnsorted(s, dir), nLandmarks)
-
-  private[graft] def shortestPathsGated(edges: DataFrame, nLandmarks: Int,
-      maxGraphXEdges: Long = 3000000L,
-      maxHops: Int = 8): DataFrame = {
-    if (edgeRows(edges) > maxGraphXEdges) shortestPathsDF(edges, nLandmarks, maxHops)
-    else shortestPathsOf(edges, nLandmarks, maxHops)
-  }
+    shortestPathsOf(edgesUnsorted(s, dir), nLandmarks)
 
   // G15 — WEIGHTED shortest paths to the G8 landmarks (the Cypher
   // shortestPath with a cost accessor / GDS Dijkstra surface): traversal
@@ -782,12 +638,11 @@ object GraphOps {
   // fixed-round contract as PageRank's 10 iterations: per round ONE
   // keyed join of the node-sized distance table against the cached arc
   // list and ONE min-aggregation (map-side combinable), localCheckpoint
-  // truncating lineage. No per-vertex replicated maps (the GraphX
-  // regime G8 gates away from) — every structure is a flat keyed frame
-  // that spills instead of dying. Costs are exact BIGINTs (1e6 div w):
-  // min() over integers is order-independent, so the fixed-horizon
-  // result is a pure function of the edge list and hash-matches a
-  // recursive-CTE replay of the same rounds.
+  // truncating lineage. No per-vertex replicated maps — every structure
+  // is a flat keyed frame that spills instead of dying. Costs are exact
+  // BIGINTs (1e6 div w): min() over integers is order-independent, so
+  // the fixed-horizon result is a pure function of the edge list and
+  // hash-matches a recursive-CTE replay of the same rounds.
   def weightedPaths(s: SparkSession, dir: String, nLandmarks: Int = 3,
       maxIter: Int = 6): DataFrame = {
     import s.implicits._
@@ -848,7 +703,7 @@ object GraphOps {
     * only level-sized frames against the ONE pre-partitioned arc
     * checkpoint (the pprOf discipline):
     *
-    *  - FORWARD (the shortestPathsDF shape + path counts): per level,
+    *  - FORWARD (the shortestPathsOf shape + path counts): per level,
     *    frontier rows (source, v, σ) join the arcs, aggregate
     *    σ(dst) = Σ σ(pred) with map-side combine, anti-join out nodes
     *    already labeled. BFS discovers each (source, node) at its
@@ -955,7 +810,7 @@ object GraphOps {
   // Σ 1/d (Boldi-Vigna's recommendation for disconnected graphs, where
   // the classic ratio misbehaves). Harmonic terms round to 6dp and sum
   // as DECIMAL — order-independent, engine-identical; the ratio is one
-  // division of exact BIGINTs. Reuses the G8 gated BFS verbatim, so the
+  // division of exact BIGINTs. Reuses the G8 BFS verbatim, so the
   // scan work is shared with g_shortest_paths under the session cache.
   def closeness(s: SparkSession, dir: String, nLandmarks: Int = 3): DataFrame =
     closenessOf(edgesUnsorted(s, dir), nLandmarks)
@@ -964,7 +819,7 @@ object GraphOps {
   private[graft] def closenessOf(edges: DataFrame, nLandmarks: Int): DataFrame = {
     val s = edges.sparkSession
     import s.implicits._
-    val d = shortestPathsGated(edges, nLandmarks)
+    val d = shortestPathsOf(edges, nLandmarks)
     d.filter($"hops" > 0)
       .groupBy($"part")
       .agg(count(lit(1)).as("n_reached"), sum($"hops").as("sum_hops"),
@@ -1266,12 +1121,12 @@ object GraphOps {
     * elsewhere — teleport mass returns to the SEED SET, not uniformly, so
     * rank measures topology-weighted proximity to the seeds. Fixed
     * synchronous rounds (G5's contract) ⇒ the result is a pure function
-    * of (edges, seeds) and replays as a recursive CTE; same per-iteration
-    * shape as pageRankDF: one shuffle of the node-sized rank frame
-    * against the cached degree-annotated arc list, localCheckpoint
-    * lineage truncation. |S| is the one driver scalar (a count — the
-    * k-means-centroid argument); 1.0/|S| and 0.15·pv are single IEEE
-    * divisions/products written identically by the oracle. */
+    * of (edges, seeds) and replays as a recursive CTE. Per iteration: one
+    * shuffle of the node-sized rank frame against the cached
+    * degree-annotated arc list, localCheckpoint lineage truncation. |S|
+    * is the one driver scalar (a count — the k-means-centroid argument);
+    * 1.0/|S| and 0.15·pv are single IEEE divisions/products written
+    * identically by the oracle. */
   private[graft] def pprOf(edges: DataFrame, seedIds: DataFrame,
       iters: Int): DataFrame = {
     val s = edges.sparkSession
@@ -1317,7 +1172,9 @@ object GraphOps {
     val seedTp = seeds.select($"v".as("dst"), lit(tp).as("tp"))
     var ranks = verts.select($"v", $"pv".as("rank"))
       .localCheckpoint(eager = true)
-    // r17: same cadence-2 checkpoint as pageRankDF (single consumer)
+    // r17: rank state is consumed once per round, so checkpoint every
+    // SECOND round (the communitiesOf cadence argument) — bit-identical,
+    // one node-sized materialization job saved per skipped round.
     for (i <- 0 until iters) {
       ranks = arcsD.join(ranks, $"src" === $"v")
         .groupBy($"dst")
@@ -1719,7 +1576,7 @@ object GraphOps {
   }
 
   def reachProfile(s: SparkSession, dir: String, iters: Int = 6): DataFrame =
-    reachHarmonic(s, dir, iters)._1
+    reachProfileOf(edgesUnsorted(s, dir), iters)
 
   // G22 — HyperBall all-node harmonic centrality (Boldi & Vigna 2013,
   // "In-Core Computation of Geometric Centralities with HyperBall"):
@@ -1788,103 +1645,7 @@ object GraphOps {
   }
 
   def harmonicAll(s: SparkSession, dir: String, iters: Int = 6): DataFrame =
-    reachHarmonic(s, dir, iters)._2
-
-  /** G21+G22 FUSED (r15, VERDICT r14 #3): reachProfileOf and
-    * harmonicAllOf run the IDENTICAL sketch-growth loop — a dashboard
-    * wanting the distance CDF AND the centrality paid ~2× 320-380 s at
-    * sf10 for one loop's information. This core runs the loop ONCE and
-    * emits both frames: the per-round global pair-count scalar is one
-    * extra 1-row aggregate on the state frame harmonicAllOf already
-    * carries (riding the same pass as the convergence checksum), and the
-    * harmonic accumulator is G22's unchanged. The standalone cores stay
-    * as the spec-pinned references; FusedReachSpec asserts both sides of
-    * this pass row-for-row against them (exact in the coupon regime the
-    * fixtures and sf0.001 corpus run in).
-    *
-    * Scale shape = the standalone loops': one node-sized state frame
-    * shuffled per round along the src-partitioned arc checkpoint, one
-    * partitioning-aligned join, O(m) register merges; the profile
-    * scalars are 1-row aggregates. Convergence = the shared register
-    * checksum. */
-  private[graft] def reachHarmonicOf(edges: DataFrame, iters: Int,
-      lgConfigK: Int = 8): (Seq[(Int, Double, Double)], DataFrame) = {
-    val s = edges.sparkSession
-    import s.implicits._
-    val arcs = loopArcs(edges, withWeight = false)
-    var balls = partitionedCheckpoint(
-      arcs.select($"src".as("v")).distinct()
-        .groupBy($"v").agg(hll_sketch_agg($"v", lgConfigK).as("sk"))
-        .select($"v", $"sk",
-          hll_sketch_estimate($"sk").cast("double").as("est"),
-          lit(0.0).as("h")), "v")
-    // G21's per-round scalars, unchanged: pair-count estimate + exact
-    // register-state checksum in ONE pass over the state frame
-    def scalars(b: DataFrame): (Double, Long) = {
-      val r = b.agg(sum(hll_sketch_estimate($"sk")).cast("double"),
-        expr("bit_xor(xxhash64(v, sk))")).first()
-      (r.getDouble(0), r.getLong(1))
-    }
-    val (est0, chk0) = scalars(balls)
-    val rows = scala.collection.mutable.ArrayBuffer((0, est0, est0))
-    var prev = est0
-    var prevChk = chk0
-    var t = 1
-    var converged = false
-    while (t <= iters && !converged) {
-      val nxt = partitionedCheckpoint(
-        arcs.join(balls.select($"v".as("src"), $"sk"), "src")
-          .select($"dst".as("v"), $"sk")
-          .unionAll(balls.select($"v", $"sk"))
-          .groupBy($"v").agg(graft.functions.GraftFunctions
-            .hllRegMaxUnion($"sk", lgConfigK).as("sk"))
-          .join(balls.select($"v", $"est".as("pe"), $"h"), "v")
-          .select($"v", $"sk",
-            hll_sketch_estimate($"sk").cast("double").as("est"), $"pe", $"h")
-          .select($"v", $"sk", $"est",
-            ($"h" + greatest(($"est" - $"pe") / t, lit(0.0))).as("h")), "v")
-      balls.unpersist(blocking = false) // loop discipline: one live frame
-      balls = nxt
-      val (est, chk) = scalars(balls)
-      rows += ((t, est, est - prev))
-      converged = chk == prevChk
-      prev = est
-      prevChk = chk
-      t += 1
-    }
-    while (t <= iters) { rows += ((t, prev, 0.0)); t += 1 }
-    // the final checkpoint stays persisted — the harmonic frame reads it
-    val harmonic = balls.select($"v",
-        round($"est" - 1.0, 3).as("reach"),
-        round($"h", 6).as("harmonic"))
-      .orderBy($"harmonic".desc, $"v")
-    (rows.toSeq, harmonic)
-  }
-
-  /** Session-memoized entry point for the fused pass: the profile rows
-    * are driver-local (deterministic, safe to retain across cache
-    * clears); the harmonic frame rides the Caches registry so the loop
-    * reruns if a harness cleared its checkpoint. A session reading BOTH
-    * entries pays ONE loop. */
-  private val reachProfileMemo =
-    scala.collection.concurrent.TrieMap.empty[String, Seq[(Int, Double, Double)]]
-
-  private[graft] def reachHarmonic(s: SparkSession, dir: String,
-      iters: Int): (DataFrame, DataFrame) = {
-    import s.implicits._
-    val key = s"reach-harmonic:$dir:$iters"
-    val harmonic = Caches.cached(key) {
-      val (rows, h) = reachHarmonicOf(edgesUnsorted(s, dir), iters)
-      reachProfileMemo(key) = rows
-      h
-    }
-    val profile = s.createDataFrame(reachProfileMemo(key))
-      .toDF("t", "est_pairs", "delta_pairs")
-      .select($"t", round($"est_pairs", 3).as("est_pairs"),
-        round($"delta_pairs", 3).as("delta_pairs"))
-      .orderBy($"t")
-    (profile, harmonic)
-  }
+    harmonicAllOf(edgesUnsorted(s, dir), iters)
 
   // G23 — modularity of a community labeling (Newman & Girvan 2004;
   // the `modularity` readout GDS returns from labelPropagation/louvain):
@@ -1993,9 +1754,8 @@ object GraphOps {
     * correction is load-bearing. */
   private[graft] def louvainOf(edges: DataFrame, sweeps: Int,
       degOverride: Option[DataFrame] = None,
-      mOverride: Option[Double] = None,
-      earlyExit: Boolean = true): DataFrame =
-    louvainCounted(edges, sweeps, degOverride, mOverride, earlyExit)._1
+      mOverride: Option[Double] = None): DataFrame =
+    louvainCounted(edges, sweeps, degOverride, mOverride)._1
 
   /** The G24 sweep loop, returning (labels, sweeps actually executed).
     *
@@ -2023,7 +1783,8 @@ object GraphOps {
     * ANSI-overflow risk); the detection window keeps the last
     * `cycleWindow` checkpointed frames alive, which is the loop's
     * existing memory profile (every sweep's checkpoint lives until the
-    * session clears anyway). */
+    * session clears anyway). `earlyExit = false` runs every sweep — the
+    * full-chain reference the specs hold the exit to. */
   private[graft] def louvainCounted(edges: DataFrame, sweeps: Int,
       degOverride: Option[DataFrame] = None,
       mOverride: Option[Double] = None,

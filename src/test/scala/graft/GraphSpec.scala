@@ -90,52 +90,29 @@ class GraphSpec extends SparkSpecBase {
     assert(est == again)
   }
 
-  test("DataFrame pagerank matches GraphX on the fixture fixpoints") {
-    val star = edges((0L, 1L), (0L, 2L), (0L, 3L), (0L, 4L))
-    val gx = GraphOps.pageRankOf(star, iters = 60).collect()
-      .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val df = GraphOps.pageRankDF(star, iters = 60).collect()
-      .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    assert(gx.keySet == df.keySet)
-    gx.foreach { case (v, r) =>
-      assert(math.abs(df(v) - r) < 1e-4, s"vertex $v: graphx $r vs df ${df(v)}")
-    }
-    val k4 = edges((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L), (3L, 4L))
-    GraphOps.pageRankDF(k4, iters = 10).collect().foreach(r =>
-      assert(math.abs(r.getDouble(1) - 1.0) < 1e-6))
-  }
-
   test("weighted pagerank: rank mass follows edge weight") {
     val s = spark
     import s.implicits._
-    // path 1-2-3: unweighted is symmetric (r1 = r3); with edge (2,3)
-    // carrying 9× the weight, vertex 3 must outrank vertex 1
+    // path 1-2-3, weights (1, 9): wdeg = (1, 10, 9), so
+    //   r1 = 0.15 + 0.85·r2/10,  r3 = 0.15 + 0.85·9·r2/10,
+    //   r2 = 0.15 + 0.85·(r1 + r3)
+    // solving: r2 = 0.405 / 0.2775 ≈ 1.459459, r1 ≈ 0.274054,
+    // r3 ≈ 1.266486; the bipartite map contracts by 0.85 per sync
+    // iteration, so 60 iters ≈ 0.85^60 ≈ 6e-5 residual
     val w = Seq((1L, 2L, 1L), (2L, 3L, 9L)).toDF("src", "dst", "weight")
-    val ranks = GraphOps.pageRankWeightedOf(w, iters = 40).collect()
+    val ranks = GraphOps.pageRankWeightedGX(w, iters = 60).collect()
       .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    assert(ranks(3L) > ranks(1L), s"weight ignored: $ranks")
-    assert(ranks(2L) > ranks(3L), "centre must still dominate")
+    Seq(1L -> 0.274054, 2L -> 1.459459, 3L -> 1.266486).foreach { case (v, want) =>
+      assert(math.abs(ranks(v) - want) < 1e-3, s"vertex $v: ${ranks(v)} vs $want")
+    }
     // uniform weights reduce to the unweighted fixpoint (K4 → all 1.0)
     val k4 = edges((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L), (3L, 4L))
-    GraphOps.pageRankWeightedOf(k4, iters = 10).collect().foreach(r =>
+    GraphOps.pageRankWeightedGX(k4, iters = 10).collect().foreach(r =>
       assert(math.abs(r.getDouble(1) - 1.0) < 1e-6))
     // and the weighted fixture differs from the unweighted ranking on w
-    val unw = GraphOps.pageRankDF(w, iters = 40).collect()
+    val unw = GraphOps.pageRankOf(w, iters = 40).collect()
       .map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(math.abs(unw(1L) - unw(3L)) < 1e-6, "unweighted path is symmetric")
-  }
-
-  test("GraphX weighted pagerank matches the DataFrame twin on fixtures") {
-    val s = spark
-    import s.implicits._
-    val w = Seq((1L, 2L, 1L), (2L, 3L, 9L)).toDF("src", "dst", "weight")
-    val df = GraphOps.pageRankWeightedOf(w, iters = 20).collect()
-      .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val gx = GraphOps.pageRankWeightedGX(w, iters = 20).collect()
-      .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    assert(df.keySet == gx.keySet)
-    df.foreach { case (v, r) =>
-      assert(math.abs(gx(v) - r) < 1e-9, s"vertex $v: df $r vs gx ${gx(v)}") }
   }
 
   test("node similarity: triangle + pendant fixture has exact Jaccard") {
@@ -214,6 +191,29 @@ class GraphSpec extends SparkSpecBase {
     assert(rerouted.nonEmpty)
   }
 
+  test("node similarity: the pair-work probe sizes each call, not each cache key") {
+    // one cache key first sizes an under-budget graph, then (after a
+    // cache clear) an over-budget one: the second call must take its own
+    // branch — the one a keyless call on the same graph takes
+    val small = edges((1L, 2L), (1L, 3L), (2L, 3L), (3L, 4L)) // Σ deg² = 18
+    val shared = (100L to 119L)
+    // deg(1) = deg(2) = 20 alone puts Σ deg² far over the budget; the
+    // sparse 3..8 attachments give low-Jaccard pairs banding misses
+    val big = edges(shared.map(n => (1L, n)) ++ shared.map(n => (2L, n)) ++
+      (3L to 8L).map(n => (n, n + 97L)): _*)
+    def run(g: org.apache.spark.sql.DataFrame, key: Option[String]) =
+      GraphOps.nodeSimilarityOf(g, k = 500, key, maxPairWork = 100L).collect().toSeq
+    val exactBig = GraphOps.nodeSimilarityOf(big, k = 500).collect().toSeq
+    val lshBig = run(big, None)
+    assert(lshBig != exactBig, "fixture must tell the two branches apart")
+    val key = Some("nodesim-spec-probe")
+    try {
+      assert(run(small, key) == GraphOps.nodeSimilarityOf(small, k = 500).collect().toSeq)
+      Caches.clearAll()
+      assert(run(big, key) == lshBig, "over-budget graph took the exact branch")
+    } finally Caches.clearAll()
+  }
+
   test("node similarity: duplicate and mirrored arc rows do not inflate the exact path") {
     // triangle + pendant fixture with every edge duplicated and one edge
     // also mirrored — degrees/common counts must match the clean frame
@@ -264,29 +264,6 @@ class GraphSpec extends SparkSpecBase {
       (3L, 1L) -> 2, (3L, 2L) -> 1,
       (4L, 1L) -> 3, (4L, 2L) -> 2)
     assert(got == want, s"got $got") // islands carry no rows: unreachable
-  }
-
-  test("shortest paths: frontier-BFS DF leg ≡ GraphX leg (fixture + gated reroute)") {
-    // same planted path + island; both legs and the gate's reroute side
-    // must agree cell-for-cell, including absent rows for the island
-    val g = edges((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L))
-    def toMap(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
-    val gx = toMap(GraphOps.shortestPathsOf(g, nLandmarks = 2))
-    val df = toMap(GraphOps.shortestPathsDF(g, nLandmarks = 2))
-    assert(df == gx, s"DF leg diverges: $df vs $gx")
-    val rerouted = toMap(GraphOps.shortestPathsGated(g, 2, maxGraphXEdges = 0L))
-    assert(rerouted == gx, "gate reroute changes the result")
-  }
-
-  test("shortest paths: both legs agree on the sf0.001 co-purchase graph") {
-    val e = GraphOps.copurchaseEdges(spark, sfDir)
-      .select("src", "dst", "weight")
-    val gx = GraphOps.shortestPathsOf(e, nLandmarks = 3).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val df = GraphOps.shortestPathsDF(e, nLandmarks = 3).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(df == gx, s"corpus divergence: ${(df diff gx).take(5)} / ${(gx diff df).take(5)}")
   }
 
   test("pagerank on the corpus: positive ranks, top-k size, deterministic order") {

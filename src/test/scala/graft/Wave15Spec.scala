@@ -207,51 +207,18 @@ class Wave15Spec extends SparkSpecBase {
     assert(qMulti >= qOne, s"multi Q=$qMulti < one-level Q=$qOne")
   }
 
-  // --- fused G21+G22 -----------------------------------------------------
+  // --- G21/G22 entries ----------------------------------------------------
 
-  test("fused reach+harmonic ≡ the standalone loops on a path fixture (coupon-exact)") {
+  test("reach profile and harmonic entries: each equals its core and repeats") {
     val s = spark
-    import s.implicits._
-    // path 1-2-3-4-5: known distances, sketches exact in coupon mode
-    val path = (1L to 4L).map(i => (i, i + 1, 1L)).toDF("src", "dst", "weight")
-    val (prof, harm) = GraphOps.reachHarmonicOf(path, 6)
-    val profDf = s.createDataFrame(prof).toDF("t", "est_pairs", "delta_pairs")
-      .select($"t", round($"est_pairs", 3).as("est_pairs"),
-        round($"delta_pairs", 3).as("delta_pairs")).orderBy($"t")
-    assert(profDf.collect().toSeq ==
-      GraphOps.reachProfileOf(path, 6).collect().toSeq)
-    assert(harm.collect().toSeq ==
-      GraphOps.harmonicAllOf(path, 6).collect().toSeq)
-    // and the profile itself is the known closure: N(t) for a 5-path is
-    // 5, 13, 19, 23, 25, then fixpoint
-    assert(profDf.collect().map(r => (r.getInt(0), r.getDouble(1))).toSeq ==
-      Seq((0, 5.0), (1, 13.0), (2, 19.0), (3, 23.0), (4, 25.0), (5, 25.0), (6, 25.0)))
-  }
-
-  test("fused reach+harmonic ≡ the standalone loops on the corpus, row-for-row") {
-    val s = spark
-    import s.implicits._
     val e = GraphOps.edgesUnsorted(s, sfDir)
-    val (prof, harm) = GraphOps.reachHarmonicOf(e, 6)
-    val profDf = s.createDataFrame(prof).toDF("t", "est_pairs", "delta_pairs")
-      .select($"t", round($"est_pairs", 3).as("est_pairs"),
-        round($"delta_pairs", 3).as("delta_pairs")).orderBy($"t")
-    assert(profDf.collect().toSeq ==
-      GraphOps.reachProfileOf(e, 6).collect().toSeq)
-    assert(harm.collect().toSeq ==
-      GraphOps.harmonicAllOf(e, 6).collect().toSeq)
-  }
-
-  test("fused entries: reachProfile and harmonicAll share one memoized pass") {
-    val s = spark
-    import s.implicits._
-    // both public entries must agree with the standalone cores AND with
-    // a repeat call (the memo path)
     val p1 = GraphOps.reachProfile(s, sfDir).collect().toSeq
     val h1 = GraphOps.harmonicAll(s, sfDir).collect().toSeq
+    assert(p1.nonEmpty && h1.nonEmpty)
+    assert(p1 == GraphOps.reachProfileOf(e, 6).collect().toSeq)
+    assert(h1 == GraphOps.harmonicAllOf(e, 6).collect().toSeq)
     assert(p1 == GraphOps.reachProfile(s, sfDir).collect().toSeq)
     assert(h1 == GraphOps.harmonicAll(s, sfDir).collect().toSeq)
-    assert(p1.nonEmpty && h1.nonEmpty)
   }
 
   // --- p_tokenize_shards ---------------------------------------------------
