@@ -14,8 +14,8 @@ import scala.collection.concurrent.TrieMap
   *
   * `cached(key)(build)` persists each distinct (key) once per session and
   * hands every caller the same DataFrame; `clearAll()` unpersists the lot
-  * — Verify/Bench call it between queries so one query's working set never
-  * occupies executor memory during the next.
+  * — Verify and perfbench call it between queries so one query's working
+  * set never occupies executor memory during the next.
   */
 object Caches {
   private val registry = TrieMap.empty[String, DataFrame]
@@ -34,7 +34,7 @@ object Caches {
     * SparkContext died (unpersist on a stopped context throws). */
   def reset(): Unit = registry.clear()
 
-  /** Session-aware deep clear for the bench/verify harnesses (r12):
+  /** Session-aware deep clear for the Verify and perfbench harnesses (r12):
     * `clearAll()` only unpersists REGISTERED SQL frames, but a completed
     * query can leave other persisted RDDs behind — GraphX legs cache
     * their final graph (staticPageRank's returned ranks, Pregel

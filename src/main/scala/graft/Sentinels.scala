@@ -2,9 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Contention sentinels stamped into every bench artifact — shared by
-  * Bench and BenchSf10 so every published JSON carries the same pair and
-  * cross-artifact readings stay comparable.
+/** Contention sentinels stamped into every benchmark run: perfbench's
+  * `Runner` reads both before and after its workload, and `run.py` flags
+  * the run `disturbed` when the readings drift apart.
   *
   *  - `cpu` (r9, VERDICT r8): a fixed-cost in-memory agg — no I/O, no
   *    shuffle variance, pure CPU — catches co-tenant compute bursts.
@@ -35,13 +35,14 @@ object Sentinels {
     * the timings) and fills eagerly; `run()` streams the array with `nt`
     * threads and returns seconds. miB=0 disables the probe (run()=0.0).
     * The array stays strongly reachable for the owner's lifetime — a
-    * documented, env-tunable resident cost (see Bench). */
+    * resident cost the caller sizes (perfbench: its plan's
+    * `mem_sentinel_mib`). */
   final class Mem(miB: Int, nt: Int) {
     // MiB → longs, computed in Long (r13, ADVICE r12): Int math overflows
     // at 16384 MiB (negative array size — startup crash) and wraps to 0 at
     // 32768 (probe silently disabled while the artifact still stamps 0.0)
     private val longs = math.max(0, miB).toLong * 131072L
-    require(longs <= Int.MaxValue, s"GRAFT_MEM_SENTINEL_MIB=$miB exceeds " +
+    require(longs <= Int.MaxValue, s"Sentinels.Mem miB=$miB exceeds " +
       s"the max supported ${Int.MaxValue / 131072} MiB (Java arrays are Int-indexed)")
     private val arr = new Array[Long](longs.toInt)
     java.util.Arrays.fill(arr, 1L)

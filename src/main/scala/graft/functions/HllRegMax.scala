@@ -103,8 +103,6 @@ final class HllRegMaxBuf(lgK: Int) {
   private var nCoupons: Int = 0
   var regs: Array[Byte] = null // non-null once promoted
 
-  def couponCount: Int = nCoupons
-
   private def promote(): Unit = {
     val r = new Array[Byte](k)
     var i = 0

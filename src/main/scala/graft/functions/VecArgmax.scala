@@ -73,8 +73,9 @@ case class VecArgmaxDot(child: Expression, mat: Array[Array[Double]],
 }
 
 /** PQ encoding as one generated double loop: codes(j) = argmax_k
-  * ( u[j·dsub ..] · books(j)(k) − ½|books(j)(k)|² ) — VecPQ.codeOf's
-  * exact argmin-L2-as-argmax-score form, all m subspaces in one pass. */
+  * ( u[j·dsub ..] · books(j)(k) − ½|books(j)(k)|² ) — the argmin-L2 code
+  * of every subspace in one pass. VecPQ's training assignment and its
+  * `encode` both run it. */
 case class PqEncode(child: Expression, books: Array[Array[Array[Double]]])
     extends UnaryExpression {
   require(books.nonEmpty && books.head.nonEmpty)

@@ -2018,9 +2018,9 @@ object GraphOps {
   // on the FULL edge frame + one keyed aggregation (the G23 tagging
   // shape) — linear in arcs, same class as one sweep's vote join — and
   // the level-2 sweeps then run on the strictly smaller coarse graph.
-  // Measured (sf10, BenchOne min-of-2): one level 441.7 s, two levels
-  // 1233.5 s — the added level costs ~1.8× level 1, dominated by the
-  // contraction joins and checkpoints over the 119M-arc frame, NOT by
+  // Measured (sf10, the entry timed alone, min-of-2): one level 441.7 s,
+  // two levels 1233.5 s — the added level costs ~1.8× level 1, dominated
+  // by the contraction joins and checkpoints over the 119M-arc frame, NOT by
   // the coarse sweeps. Final mapping composes the per-level labelings
   // with community-keyed joins (node-sized).
   private[graft] def louvainLevelsOf(edges: DataFrame, sweeps: Int,

@@ -35,7 +35,7 @@ object Ranking {
     * `order` (which must make the sort total — include a unique tiebreak
     * column). `nPartitions` defaults to the session shuffle parallelism;
     * `cacheKey` registers the ranged frame in [[graft.Caches]] so the two
-    * passes share one materialization and Verify/Bench can release it. */
+    * passes share one materialization and `Caches.clearAll` releases it. */
   def rowNumberWithin(df: DataFrame, groupCol: String, order: Seq[Column],
       rankCol: String, cacheKey: String, nPartitions: Int = 0): DataFrame = {
     val spark = df.sparkSession

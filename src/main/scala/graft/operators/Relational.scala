@@ -657,6 +657,8 @@ object Relational {
     val daily = Tables.orders(s, dir)
       .groupBy(to_date($"o_orderdate").as("day"))
       .agg(sum($"o_totalprice".cast(DecimalType(18, 6))).as("rev_dec"))
+    // partition-less by design: `daily` holds one row per order date, so
+    // the single window partition is calendar-sized at any scale
     val w = Window.orderBy($"day").rowsBetween(-6, 0)
     val lagW = Window.orderBy($"day")
     daily

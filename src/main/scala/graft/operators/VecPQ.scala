@@ -14,9 +14,12 @@ import graft.functions.GraftFunctions.vecDot
   * Scale shape, mirroring VecCluster: codebooks are m×ksub×(dim/m)
   * doubles of DRIVER state (bounded by configuration, never the corpus);
   * training is one distributed pass per Lloyd iteration (argmin
-  * assignment via codegen'd subvector dots, per-(subspace, cell, dim)
-  * sums with map-side combine); encoding is a single projection; ADC is
-  * a codegen'd chain of literal-array lookups. 64 floats compress to 8
+  * assignment through the same PqEncode kernel that `encode` runs,
+  * per-(subspace, cell, dim) sums with map-side combine); the kernel
+  * takes the books as a referenced object, not as literals in generated
+  * source, so later iterations reuse the first one's compiled classes;
+  * encoding is a single projection; ADC is a codegen'd chain of
+  * literal-array lookups. 64 floats compress to 8
   * byte-sized codes — the memory/IO cut that makes billion-vector ANN
   * feasible, with exact re-rank of the short ADC candidate list
   * restoring precision.
@@ -26,15 +29,6 @@ object VecPQ {
   /** slice(u) for subspace j (1-based slice; dsub = dim/m). */
   private def subvec(u: Column, j: Int, dsub: Int): Column =
     slice(u, j * dsub + 1, dsub)
-
-  /** argmin_k |sub − c_jk|² as argmax_k (sub·c_jk − ½|c_jk|²), one
-    * codegen'd array_max over (score, code) structs. */
-  private def codeOf(sub: Column, book: Array[Array[Double]]): Column =
-    array_max(array(book.zipWithIndex.map { case (c, i) =>
-      val bias = 0.5 * c.map(x => x * x).sum
-      struct((vecDot(sub, typedLit(c.toSeq)) - lit(bias)).as("score"),
-        lit(i).as("code"))
-    }: _*)).getField("code")
 
   /** Train per-subspace L2 codebooks with Lloyd iterations. `unit` needs
     * (vec_id, u). Returns books(j)(k) = centroid vector of subspace j. */
@@ -53,14 +47,13 @@ object VecPQ {
     var books: Array[Array[Array[Double]]] =
       Array.tabulate(m)(j => seeds.map(_.slice(j * dsub, j * dsub + dsub)))
     for (_ <- 0 until iters) {
-      // one distributed pass covers every subspace: explode to
-      // (j, sub), assign against subspace j's book, sum per dim
-      val subs = unit.select(explode(array((0 until m).map(j =>
-        struct(lit(j).as("j"), subvec($"u", j, dsub).as("sub"))): _*)).as("e"))
-        .select($"e.j", $"e.sub")
-      val assigned = subs.withColumn("code",
-        (0 until m).map(j => (when($"j" === j, codeOf($"sub", books(j)))))
-          .reduceRight(_ otherwise _)) // right-assoc: each when gets ONE otherwise
+      // one distributed pass covers every subspace: encode each row once
+      // (argmin per subspace), explode to (j, sub, code), sum per dim
+      val assigned = unit.select($"u", encode($"u", books).as("codes"))
+        .select(explode(array((0 until m).map(j =>
+          struct(lit(j).as("j"), subvec($"u", j, dsub).as("sub"),
+            $"codes".getItem(j).as("code"))): _*)).as("e"))
+        .select($"e.j", $"e.sub", $"e.code")
       val stats = assigned
         .select($"j", $"code", posexplode($"sub").as(Seq("pos", "x")))
         .groupBy($"j", $"code", $"pos")
@@ -81,11 +74,11 @@ object VecPQ {
     books
   }
 
-  /** Codes column (array of m ints) for a unit-vector column. r14: one
-    * generated loop over all m subspaces (PqEncode) — the m unrolled
-    * codeOf argmaxes (m×ksub vecDots in one projection) blew janino's
-    * 64 KB method limit and silently dropped v_ivfpq_ann's whole coded
-    * stage to interpreted mode; same argmin-L2-as-argmax-score math. */
+  /** Codes column (array of m ints) for a unit-vector column: codes(j) =
+    * argmin_k |u_j − c_jk|² as argmax_k (u_j·c_jk − ½|c_jk|²), one
+    * generated loop over all m subspaces (PqEncode). Unrolled per
+    * centroid, the m×ksub dots blew janino's 64 KB method limit and
+    * dropped v_ivfpq_ann's coded stage to interpreted mode. */
   def encode(u: Column, books: Array[Array[Array[Double]]]): Column =
     graft.functions.GraftFunctions.pqEncode(u, books)
 

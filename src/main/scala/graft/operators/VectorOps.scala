@@ -618,6 +618,8 @@ object VectorOps {
     def rrfTerm(r: Column): Column = coalesce(
       round(lit(1.0) / (lit(rrfK) + r), 6).cast("decimal(18,6)"),
       lit(0).cast("decimal(18,6)"))
+    // both rank windows are partition-less by design: each input is a
+    // limit(legK) top-k, so the single window partition holds ≤ legK rows
     val lex = TextOps.moreLikeThis(s, dir, queryId, legK)
       .withColumn("lex_rank", row_number().over(
         Window.orderBy($"jacc".desc, $"doc_id")).cast("long"))

@@ -3,16 +3,15 @@ package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
-/** Dump `explain("formatted")` for named queries to <outDir>/<name>_<tag>.txt
-  * (r17 optimization-round evidence: the before/after plan files under
-  * plans/r17).
+/** Dump `explain("formatted")` for named queries to <outDir>/<name>_<tag>.txt,
+  * so two trees' plans can be diffed (the before/after files under plans/).
+  * A diagnostic, so it lives in the test tree, outside the library jar.
   *
-  * Usage: runMain graft.PlanDump <outDir> <tag> q1 q2 ...
+  * Usage: sbt "Test/runMain graft.PlanDump <sfDir> <outDir> <tag> q1 q2 ..."
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
-    val Array(outDir, tag, names @ _*) = args
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val Array(sfDir, outDir, tag, names @ _*) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
