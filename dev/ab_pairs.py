@@ -1,0 +1,86 @@
+#!/usr/bin/env python3
+"""Alternating parent/change benchmark pairs with the gain rule applied.
+
+    dev/ab_pairs.py --parent DIR --change DIR --workload W --pairs N --seed0 S
+
+DIR is the root of a graft checkout (the parent can come from
+`git worktree add`). Pair i runs `perfbench/run.py --trace 0` with seed
+S + i in both checkouts; even pairs run the parent first, odd pairs the
+change. The run length and each metric's direction come from the change
+checkout's BENCHMARK.json. Exits non-zero if any run fails or reports
+`correct: false`.
+
+Per end-to-end metric it prints each side's median with quartiles, the
+change's wins (ties count for neither side) and whether a gain claim
+holds: the change wins at least nine tenths of the pairs and the medians
+differ by more than the parent's quartile spread.
+"""
+import argparse
+import json
+import os
+import statistics
+import subprocess
+import sys
+
+
+def run(root, workload, seed, seconds):
+    cmd = [sys.executable, "perfbench/run.py", "--workload", workload,
+           "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"]
+    p = subprocess.run(cmd, cwd=root, capture_output=True, text=True)
+    lines = p.stdout.strip().splitlines()
+    if p.returncode != 0 or not lines:
+        sys.stderr.write(p.stderr[-4000:])
+        raise SystemExit(f"ab_pairs: run failed in {root} (seed {seed}, exit {p.returncode})")
+    out = json.loads(lines[-1])
+    if not out.get("correct"):
+        raise SystemExit(f"ab_pairs: {root} seed {seed} reported correct: false "
+                         f"({out.get('failed')}/{out.get('attempted')} failed)")
+    return {k: v["value"] for k, v in out["metrics"].items()}
+
+
+def quartiles(xs):
+    if len(xs) < 2:
+        return xs[0], xs[0]
+    q = statistics.quantiles(xs, n=4)
+    return q[0], q[2]
+
+
+def main():
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("--parent", required=True)
+    ap.add_argument("--change", required=True)
+    ap.add_argument("--workload", required=True)
+    ap.add_argument("--pairs", type=int, required=True)
+    ap.add_argument("--seed0", type=int, required=True)
+    a = ap.parse_args()
+    with open(os.path.join(a.change, "BENCHMARK.json")) as f:
+        bench = json.load(f)
+    better = {m["name"]: m["better"] for m in bench["end_to_end"]}
+    sides = {"parent": a.parent, "change": a.change}
+    got = {"parent": [], "change": []}
+    for i in range(a.pairs):
+        seed = a.seed0 + i
+        order = ("parent", "change") if i % 2 == 0 else ("change", "parent")
+        for side in order:
+            got[side].append(run(sides[side], a.workload, seed, bench["run_seconds"]))
+        print(f"pair {i} seed {seed}: " + " ".join(
+            f"{k} {got['parent'][-1][k]:.4g}/{got['change'][-1][k]:.4g}" for k in better),
+            flush=True)
+    print(f"\n{a.workload}, {a.pairs} pairs, seeds {a.seed0}..{a.seed0 + a.pairs - 1}; "
+          "median [q1, q3], parent -> change")
+    for k, direction in better.items():
+        p = [r[k] for r in got["parent"]]
+        c = [r[k] for r in got["change"]]
+        sign = 1 if direction == "lower" else -1
+        wins = sum(sign * (x - y) > 0 for x, y in zip(p, c))
+        pm, cm = statistics.median(p), statistics.median(c)
+        pq1, pq3 = quartiles(p)
+        cq1, cq3 = quartiles(c)
+        gain = wins >= 0.9 * a.pairs and sign * (pm - cm) > pq3 - pq1
+        print(f"{k}: {pm:.4g} [{pq1:.4g}, {pq3:.4g}] -> {cm:.4g} [{cq1:.4g}, {cq3:.4g}]  "
+              f"wins {wins}/{a.pairs}  gap {pm - cm:+.4g} vs parent IQR {pq3 - pq1:.4g}  "
+              f"gain rule {'holds' if gain else 'does not hold'}")
+
+
+if __name__ == "__main__":
+    main()

@@ -1553,7 +1553,7 @@ object GraphOps {
           .select($"dst".as("v"), $"sk")
           .unionAll(balls.select($"v", $"sk"))
           .groupBy($"v").agg(graft.functions.GraftFunctions.hllRegMaxUnion($"sk", lgConfigK).as("sk")), "v")
-      balls.unpersist(blocking = false) // loop discipline: one live frame
+      GraftCheckpoint.release(balls) // loop discipline: one live frame
       balls = nxt
       val (est, chk) = scalars(balls)
       rows += ((t, est, est - prev))
@@ -1568,7 +1568,8 @@ object GraphOps {
       t += 1
     }
     while (t <= iters) { rows += ((t, prev, 0.0)); t += 1 }
-    balls.unpersist(blocking = false)
+    GraftCheckpoint.release(balls)
+    GraftCheckpoint.release(arcs)
     s.createDataFrame(rows.toSeq).toDF("t", "est_pairs", "delta_pairs")
       .select($"t", round($"est_pairs", 3).as("est_pairs"),
         round($"delta_pairs", 3).as("delta_pairs"))
@@ -1629,13 +1630,14 @@ object GraphOps {
             hll_sketch_estimate($"sk").cast("double").as("est"), $"pe", $"h")
           .select($"v", $"sk", $"est",
             ($"h" + greatest(($"est" - $"pe") / t, lit(0.0))).as("h")), "v")
-      balls.unpersist(blocking = false) // loop discipline: one live frame
+      GraftCheckpoint.release(balls) // loop discipline: one live frame
       balls = nxt
       val c = chk(balls)
       converged = c == prevChk
       prevChk = c
       t += 1
     }
+    GraftCheckpoint.release(arcs)
     // the final checkpoint stays persisted — the returned frame reads it
     // (the iterative-loop contract everywhere here; harnesses clearAll)
     balls.select($"v",

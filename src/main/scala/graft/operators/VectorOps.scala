@@ -287,8 +287,9 @@ object VectorOps {
   /** V4c — the SERVING shape of banded LSH ANN: the band signatures are
     * query-independent, so a deployment computes them ONCE and persists
     * them bucketed by `sig_key = band * 2^bits + bv` (TableWriter's
-    * layout). Per query the scan then reads only the probed buckets —
-    * bucket pruning, no signature recomputation, no corpus scan. The
+    * layout: one file per bucket). Per query the scan then reads only the
+    * probed buckets, one file each — bucket pruning, no signature
+    * recomputation, no corpus scan. The
     * sf1/sf3 probes showed the inline form (`lshAnn`) is linear in the
     * corpus precisely because it re-derives 128 dot products per vector
     * per query; this splits that cost into one offline build. */
@@ -311,15 +312,18 @@ object VectorOps {
     * (each kept once, so no distinct and no shuffle) and exact-re-rank
     * against the query's v and nrm passed by value — no second scan of the
     * corpus for the query row, no query broadcast. Per call: the query
-    * collect, the candidate broadcast, the re-rank. Returns identical rows
-    * to `lshAnn` at probeRadius=1 — asserted in VectorScaleSpec.
+    * collect, the candidate broadcast, the re-rank; the candidate scan
+    * opens one file per probed bucket. Returns identical rows to `lshAnn`
+    * at probeRadius=1 — VectorScaleSpec asserts both.
     *
-    * Serving config: Spark's DisableUnnecessaryBucketedScan rule drops
-    * the bucketed layout when no join/agg keys on it (this query only
-    * FILTERS on the bucket key), which silently forfeits bucket pruning
-    * — a serving session must set
-    * `spark.sql.sources.bucketing.autoBucketedScan.enabled=false` for
-    * the probed-bucket read to materialize (the spec pins this). */
+    * Scan shape: this query only FILTERS on the bucket key, so with
+    * `spark.sql.sources.bucketing.autoBucketedScan.enabled` on (Spark's
+    * default) DisableUnnecessaryBucketedScan plans a plain file scan. In
+    * Spark 4.1.2 that scan still skips the files of unprobed buckets and
+    * packs the rest into a few tasks (sf0.01 probe: 57 files, 4 tasks).
+    * With the flag off the scan stays bucketed: one task per bucket, and
+    * the plan reports `SelectedBucketsCount` (the spec runs this shape).
+    * Both read the same files and return the same rows. */
   def lshAnnIndexed(s: SparkSession, dir: String, table: String,
       queryId: Long = 0L, k: Int = 5, bands: Int = 16, bits: Int = 8): DataFrame = {
     import s.implicits._
@@ -908,9 +912,8 @@ object VectorOps {
     * a broadcast key→query frame then attributes candidates per query.
     * Ground truth is unchanged: the exact leg IS the definition of
     * recall, one cached panel-sim scan shared with `annRecall`. Returns
-    * identical rows to `annRecall` — spec-pinned. Same serving-session
-    * conf caveat as lshAnnIndexed: autoBucketedScan must be off for the
-    * probed-bucket read to materialize — AND bucket pruning only bites
+    * identical rows to `annRecall` — spec-pinned. Same scan shapes as
+    * lshAnnIndexed, and bucket pruning only bites
     * when the table's bucket count exceeds the panel's probe-key fanout
     * (a full 8-query radius-1 panel probes ~1.1k keys, so a 100 TB
     * store sizes nBuckets in the thousands; at the 64-bucket test

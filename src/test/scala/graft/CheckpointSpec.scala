@@ -1,13 +1,16 @@
 package graft
 
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.{GraftCheckpoint, LogicalRDD}
 import org.apache.spark.sql.functions._
 import graft.operators.GraphOps
 
 /** The contract of `GraphOps.partitionedCheckpoint`: the layout it
   * records follows the caller's `spark.sql.shuffle.partitions`, every row
   * sits in the partition that layout names, `sorted` orders each
-  * partition, and the caller's session is left as it was. */
+  * partition, and the caller's session is left as it was. Also the
+  * contract of `GraftCheckpoint.release`: it frees what a checkpoint
+  * holds in storage, which `Dataset.unpersist` does not. */
 class CheckpointSpec extends SparkSpecBase {
 
   private val spk = "spark.sql.shuffle.partitions"
@@ -64,5 +67,19 @@ class CheckpointSpec extends SparkSpecBase {
     GraphOps.partitionedCheckpoint(frame, "src", sorted = true)
     assert(spark.conf.getOption(aqe) == aqeBefore)
     assert(spark.catalog.listTables(gtDb).collect().map(_.name).toSet == before)
+  }
+
+  test("release returns the checkpoint's storage; unpersist leaves it") {
+    val ck = GraphOps.partitionedCheckpoint(
+      spark.range(0, 200000).select(col("id").as("src"), (col("id") * 3).as("dst")), "src")
+    val rddIds = ck.queryExecution.logical.collect { case r: LogicalRDD => r.rdd.id }
+    assert(rddIds.nonEmpty)
+    def stored: Long = spark.sparkContext.getRDDStorageInfo
+      .filter(i => rddIds.contains(i.id)).map(i => i.memSize + i.diskSize).sum
+    assert(stored > 0, "the checkpoint holds no storage")
+    ck.unpersist(blocking = true)
+    assert(stored > 0, "unpersist freed the checkpoint's blocks")
+    GraftCheckpoint.release(ck)
+    assert(stored == 0, s"$stored bytes left after release")
   }
 }

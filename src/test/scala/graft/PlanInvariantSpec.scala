@@ -1,8 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.GraftTestBridge
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import graft.operators.Relational
 
 /** Physical-plan invariants for the headline queries: the properties the
@@ -385,29 +382,6 @@ class PlanInvariantSpec extends SparkSpecBase {
         !p.contains("BroadcastNestedLoopJoin"), s"$q non-keyed join:\n$p")
       assert(!p.contains("Window"), s"$q uses a window:\n$p")
     }
-  }
-
-  /** Spark jobs `body` starts, counted by a listener on a tag local to the
-    * calling thread (so other work in the shared session stays out), read
-    * once the listener bus has drained. */
-  private def jobsOf(body: => Any): Int = {
-    val sc = spark.sparkContext
-    val key = "graft.spec.jobTag"
-    val tag = java.util.UUID.randomUUID.toString
-    val n = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty(key) == tag)) n.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    sc.setLocalProperty(key, tag)
-    try body
-    finally {
-      sc.setLocalProperty(key, null)
-      GraftTestBridge.drainListeners(sc)
-      sc.removeSparkListener(listener)
-    }
-    n.get
   }
 
   test("request path: a Tables read runs no job; sku, search and stock run one each") {

@@ -1,11 +1,36 @@
 package graft
 
 import java.nio.file.Files
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.datasources.BucketingUtils
 import org.apache.spark.sql.functions._
 import graft.sinks.TableWriter
 import graft.operators.VectorOps
 
 class SinksSpec extends SparkSpecBase {
+
+  /** Data files per partition directory of the table at `path`. */
+  private def filesPerPartition(path: String): Map[String, Int] =
+    new java.io.File(path).listFiles.filter(_.isDirectory).map(d => d.getName ->
+      d.listFiles.count(f => f.isFile && !f.getName.startsWith(".") &&
+        !f.getName.startsWith("_"))).toMap
+
+  /** `TableWriter.mergeInto`, then the layout invariant: every partition
+    * directory of the table, each written by some merge, holds exactly one
+    * data file. */
+  private def merge(path: String, updates: DataFrame, keyCols: Seq[String],
+      partitionCol: String, assumeStablePartitionKeys: Boolean = false): Unit = {
+    TableWriter.mergeInto(spark, path, updates, keyCols, partitionCol, assumeStablePartitionKeys)
+    val files = filesPerPartition(path)
+    assert(files.nonEmpty && files.values.forall(_ == 1), s"files per partition: $files")
+  }
+
+  private val spk = "spark.sql.shuffle.partitions"
+
+  /** Bucket ids of the table's data files, one entry per file. */
+  private def fileBuckets(table: String): Seq[Int] =
+    spark.table(table).inputFiles.toSeq.map(f =>
+      BucketingUtils.getBucketId(new org.apache.hadoop.fs.Path(f).getName).get)
 
   test("partitioned write: a partition filter prunes to one directory") {
     val out = Files.createTempDirectory("partw").toString + "/li"
@@ -38,6 +63,36 @@ class SinksSpec extends SparkSpecBase {
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 
+  test("bucketed write: one file per non-empty bucket, whatever shuffle.partitions is") {
+    val df = spark.range(0, 5000).select((col("id") * 7919 % 1009).as("k"), col("id").as("v"))
+    val nonEmpty = df.select(pmod(hash(col("k")), lit(64))).distinct().collect()
+      .map(_.getInt(0)).sorted.toSeq
+    val prev = spark.conf.getOption(spk)
+    // 4 divides 64; 6 does not (gcd 2)
+    for (n <- Seq(4, 6)) try {
+      spark.conf.set(spk, n.toString)
+      TableWriter.writeBucketed(df, s"one_file_b$n", "k", 64)
+      val buckets = fileBuckets(s"one_file_b$n")
+      assert(buckets.sorted == nonEmpty,
+        s"shuffle.partitions=$n: ${buckets.length} files for ${nonEmpty.length} non-empty buckets")
+      assert(spark.table(s"one_file_b$n").count() == 5000)
+    } finally prev.fold(spark.conf.unset(spk))(spark.conf.set(spk, _))
+  }
+
+  test("mergeInto: a merge of a local delta runs at most 5 jobs") {
+    val s = spark
+    import s.implicits._
+    val path = Files.createTempDirectory("mergejobs").toString + "/t"
+    val table = (1L to 40L).map(i => (i, s"n$i", i * 10, s"c${i % 5}")).toDF("pk", "name", "price", "cat")
+    merge(path, table, Seq("pk"), "cat")
+    // an update, a move and an insert across three partitions
+    val delta = Seq((1L, "n1-v2", 11L, "c1"), (2L, "n2-v2", 21L, "c4"), (99L, "new", 990L, "c0"))
+      .toDF("pk", "name", "price", "cat")
+    val jobs = jobsOf(merge(path, delta, Seq("pk"), "cat"))
+    assert(jobs <= 5, s"a merge ran $jobs jobs")
+    assert(spark.read.parquet(path).count() == 41)
+  }
+
   test("compaction: thousands of tiny files collapse to the target count, content intact") {
     val base = Files.createTempDirectory("compact").toString
     val li = Tables.lineitem(spark, sfDir).select("l_orderkey", "l_linenumber", "l_quantity")
@@ -63,7 +118,7 @@ class SinksSpec extends SparkSpecBase {
       (3L, "cable", 30L, "wires"), (4L, "plug", 40L, "wires"))
       .toDF("pk", "name", "price", "cat")
     // first merge = create
-    TableWriter.mergeInto(spark, path, table, Seq("pk"), "cat")
+    merge(path, table, Seq("pk"), "cat")
     assert(spark.read.parquet(path).count() == 4)
     // delta: update pk=1 (tools), insert pk=5 (tools); wires untouched
     // inputFiles is pre-pruning (see the partitioned-write test), so
@@ -72,7 +127,7 @@ class SinksSpec extends SparkSpecBase {
       .inputFiles.filter(_.contains("cat=wires")).sorted.toSeq
     val delta = Seq((1L, "widget-v2", 11L, "tools"), (5L, "fuse", 50L, "tools"))
       .toDF("pk", "name", "price", "cat")
-    TableWriter.mergeInto(spark, path, delta, Seq("pk"), "cat")
+    merge(path, delta, Seq("pk"), "cat")
     val after = spark.read.parquet(path).collect()
       .map(r => r.getLong(0) -> ((r.getString(1), r.getLong(2)))).toMap
     assert(after == Map(
@@ -85,10 +140,14 @@ class SinksSpec extends SparkSpecBase {
       .inputFiles.filter(_.contains("cat=wires")).sorted.toSeq
     assert(wiresAfter == wiresFiles, "untouched partition was rewritten")
     // idempotent: re-merging the same delta changes nothing
-    TableWriter.mergeInto(spark, path, delta, Seq("pk"), "cat")
+    merge(path, delta, Seq("pk"), "cat")
     val again = spark.read.parquet(path).collect()
       .map(r => r.getLong(0) -> ((r.getString(1), r.getLong(2)))).toMap
     assert(again == after)
+    // an empty delta touches no partition
+    val files = spark.read.parquet(path).inputFiles.sorted.toSeq
+    merge(path, delta.limit(0), Seq("pk"), "cat")
+    assert(spark.read.parquet(path).inputFiles.sorted.toSeq == files)
   }
 
   test("mergeInto: a path with no table takes the first-write branch") {
@@ -97,7 +156,7 @@ class SinksSpec extends SparkSpecBase {
     val path = Files.createTempDirectory("merge-new").toString + "/a/b/t"
     assert(!Files.exists(java.nio.file.Paths.get(path)))
     val delta = Seq((1L, "widget", "tools"), (2L, "cable", "wires")).toDF("pk", "name", "cat")
-    TableWriter.mergeInto(spark, path, delta, Seq("pk"), "cat")
+    merge(path, delta, Seq("pk"), "cat")
     val dirs = new java.io.File(path).list().filter(_.startsWith("cat=")).sorted.toSeq
     assert(dirs == Seq("cat=tools", "cat=wires"))
     assert(Tables.read(spark, path).select("pk", "name", "cat").orderBy("pk").collect().toSeq ==
@@ -118,10 +177,10 @@ class SinksSpec extends SparkSpecBase {
       (1L, "widget", 10L, "tools"), (3L, "cable", 30L, "wires"),
       (4L, "plug", 40L, "wires"), (6L, "lamp", 60L, "lights"))
       .toDF("pk", "name", "price", "cat")
-    TableWriter.mergeInto(spark, path, table, Seq("pk"), "cat")
+    merge(path, table, Seq("pk"), "cat")
     val delta = Seq((3L, "cable-v2", 31L, "tools"), (6L, "lamp-v2", 61L, "tools"))
       .toDF("pk", "name", "price", "cat")
-    TableWriter.mergeInto(spark, path, delta, Seq("pk"), "cat")
+    merge(path, delta, Seq("pk"), "cat")
     val after = spark.read.parquet(path).collect()
       .map(r => r.getLong(0) -> ((r.getString(1), r.getLong(2), r.getString(3))))
       .toMap
@@ -133,12 +192,12 @@ class SinksSpec extends SparkSpecBase {
     // the emptied lights partition directory is gone
     assert(!spark.read.parquet(path).inputFiles.exists(_.contains("cat=lights")))
     // re-merge stays idempotent after the move
-    TableWriter.mergeInto(spark, path, delta, Seq("pk"), "cat")
+    merge(path, delta, Seq("pk"), "cat")
     assert(spark.read.parquet(path).count() == 4)
     // the fast path honors its documented contract when keys are stable:
     // an in-place update under assumeStablePartitionKeys=true still works
     val delta2 = Seq((4L, "plug-v2", 41L, "wires")).toDF("pk", "name", "price", "cat")
-    TableWriter.mergeInto(spark, path, delta2, Seq("pk"), "cat",
+    merge(path, delta2, Seq("pk"), "cat",
       assumeStablePartitionKeys = true)
     val p4 = spark.read.parquet(path).filter($"pk" === 4L).collect()
     assert(p4.length == 1 && p4(0).getString(1) == "plug-v2")
@@ -158,13 +217,13 @@ class SinksSpec extends SparkSpecBase {
       (1L, "widget", Some("tools")), (2L, "gadget", Some("tools")),
       (3L, "mystery", None), (4L, "enigma", None))
       .toDF("pk", "name", "cat")
-    TableWriter.mergeInto(spark, path, table, Seq("pk"), "cat")
+    merge(path, table, Seq("pk"), "cat")
     assert(spark.read.parquet(path).count() == 4)
     // update pk=3 in place (stays null): pk=4's row must SURVIVE — the
     // pre-fix filter missed the null partition entirely and the dynamic
     // overwrite then rewrote it with only the delta's row
     val delta = Seq((3L, "mystery-v2", None: Option[String])).toDF("pk", "name", "cat")
-    TableWriter.mergeInto(spark, path, delta, Seq("pk"), "cat")
+    merge(path, delta, Seq("pk"), "cat")
     val after = spark.read.parquet(path).collect()
       .map(r => r.getLong(0) -> ((r.getString(1), Option(r.getString(2))))).toMap
     assert(after == Map(
@@ -174,7 +233,7 @@ class SinksSpec extends SparkSpecBase {
     // __HIVE_DEFAULT_PARTITION__ directory must disappear
     val delta2 = Seq((3L, "mystery-v3", Some("tools")), (4L, "enigma-v2", Some("tools")))
       .toDF("pk", "name", "cat")
-    TableWriter.mergeInto(spark, path, delta2, Seq("pk"), "cat")
+    merge(path, delta2, Seq("pk"), "cat")
     val back = spark.read.parquet(path)
     assert(back.count() == 4)
     assert(back.filter($"cat".isNull).count() == 0, "stale null-partition rows survive")
@@ -186,9 +245,9 @@ class SinksSpec extends SparkSpecBase {
     val t1 = java.sql.Timestamp.valueOf("2024-02-01 00:00:00")
     val path2 = Files.createTempDirectory("mergets").toString + "/t"
     val ttable = Seq((1L, "a", t0), (2L, "b", t1)).toDF("pk", "name", "day")
-    TableWriter.mergeInto(spark, path2, ttable, Seq("pk"), "day")
+    merge(path2, ttable, Seq("pk"), "day")
     val tdelta = Seq((1L, "a-v2", t1)).toDF("pk", "name", "day")
-    TableWriter.mergeInto(spark, path2, tdelta, Seq("pk"), "day")
+    merge(path2, tdelta, Seq("pk"), "day")
     val tafter = spark.read.parquet(path2)
     assert(tafter.count() == 2, "stale moved timestamp-partition row survives")
     assert(!tafter.inputFiles.exists(_.contains("2024-01-01")),
@@ -208,11 +267,11 @@ class SinksSpec extends SparkSpecBase {
     val path = Files.createTempDirectory("mergeempty").toString + "/t"
     val table = Seq((1L, "widget", Some("tools")), (2L, "mystery", None: Option[String]))
       .toDF("pk", "name", "cat")
-    TableWriter.mergeInto(spark, path, table, Seq("pk"), "cat")
+    merge(path, table, Seq("pk"), "cat")
     // pk=2 updated with cat='' — same default-partition class as its
     // current null home
     val delta = Seq((2L, "mystery-v2", Some(""))).toDF("pk", "name", "cat")
-    TableWriter.mergeInto(spark, path, delta, Seq("pk"), "cat")
+    merge(path, delta, Seq("pk"), "cat")
     val after = spark.read.parquet(path).collect()
       .map(r => r.getLong(0) -> ((r.getString(1), Option(r.getString(2))))).toMap
     // read-back re-infers the default dir as null
@@ -221,7 +280,7 @@ class SinksSpec extends SparkSpecBase {
     // and the symmetric direction: a '' delta row inserting NEW data next
     // to surviving null rows must not strand or delete either class
     val delta2 = Seq((3L, "enigma", Some(""))).toDF("pk", "name", "cat")
-    TableWriter.mergeInto(spark, path, delta2, Seq("pk"), "cat")
+    merge(path, delta2, Seq("pk"), "cat")
     val back = spark.read.parquet(path)
     assert(back.count() == 3)
     assert(back.filter($"cat".isNull).count() == 2, "default-class rows lost")

@@ -1,6 +1,9 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.datasources.FilePartition
 import org.apache.spark.sql.functions._
 import graft.operators.{Dedup, VecCluster, VectorOps}
 
@@ -10,7 +13,7 @@ import graft.operators.{Dedup, VecCluster, VectorOps}
   * from a small candidate fraction, and k-means IVF must beat a trivial
   * quantizer's recall at the same probe budget.
   */
-class VectorScaleSpec extends SparkSpecBase {
+class VectorScaleSpec extends SparkSpecBase with AdaptiveSparkPlanHelper {
 
   /** Deterministic planted corpus: `nBase` seed vectors, each with one
     * near-dup at cosine ≥ 0.97 (tiny perturbation), plus isotropic noise
@@ -124,10 +127,9 @@ class VectorScaleSpec extends SparkSpecBase {
   }
 
   test("indexed LSH ANN: prebuilt bucketed sigs give identical results, scan prunes buckets") {
-    // without this, DisableUnnecessaryBucketedScan silently drops the
-    // bucketed layout (the query only FILTERS on the bucket key) and the
-    // scan reads every bucket — the serving-session config documented on
-    // lshAnnIndexed
+    // the bucketed scan shape (see lshAnnIndexed): with the flag on,
+    // DisableUnnecessaryBucketedScan plans a plain file scan, which prunes
+    // the same files but reports no SelectedBucketsCount
     val prior = spark.conf.get("spark.sql.sources.bucketing.autoBucketedScan.enabled")
     spark.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
     try {
@@ -148,6 +150,16 @@ class VectorScaleSpec extends SparkSpecBase {
     assert(sel.isDefined, s"no bucket pruning in:\n$plan")
     val pruned = sel.get.group(0).split(" ")(1).toInt
     assert(pruned < sel.get.group(1).toInt, s"scan read every bucket: ${sel.get.group(0)}")
+    // one file per bucket: the index holds 64 files, and the pruned scan
+    // opens one per selected bucket (Spark's numFiles metric counts the
+    // listing before bucket pruning, so the scan's partitions are counted)
+    val scan = collect(indexed.queryExecution.executedPlan) {
+      case f: FileSourceScanExec if f.tableIdentifier.exists(_.table == "lsh_sigs") => f
+    }.head
+    assert(scan.metrics("numFiles").value == sel.get.group(1).toLong)
+    val filesRead = scan.inputRDDs().head.partitions
+      .map(_.asInstanceOf[FilePartition].files.length).sum
+    assert(filesRead == pruned, s"$filesRead files read for $pruned selected buckets")
     } finally spark.conf
       .set("spark.sql.sources.bucketing.autoBucketedScan.enabled", prior)
   }
