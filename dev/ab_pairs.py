@@ -7,13 +7,18 @@ DIR is the root of a graft checkout (the parent can come from
 `git worktree add`). Pair i runs `perfbench/run.py --trace 0` with seed
 S + i in both checkouts; even pairs run the parent first, odd pairs the
 change. The run length and each metric's direction come from the change
-checkout's BENCHMARK.json. Exits non-zero if any run fails or reports
-`correct: false`.
+checkout's BENCHMARK.json. Exits non-zero at once if a run does not
+complete, and after the summary if any run failed ops (`correct: false`).
 
-Per end-to-end metric it prints each side's median with quartiles, the
-change's wins (ties count for neither side) and whether a gain claim
-holds: the change wins at least nine tenths of the pairs and the medians
-differ by more than the parent's quartile spread.
+Per pair it prints each side's failed/attempted ops and marks a pair
+whose two sides attempted different op counts (a run that fits one more
+request cycle reads lower latencies for that reason alone). Per side it
+prints the failed/attempted totals. Per end-to-end metric it prints each
+side's median with quartiles, the change's wins (ties count for neither
+side), whether a gain claim holds (the change wins at least nine tenths
+of the pairs and the medians differ by more than the parent's quartile
+spread) and whether the change's median is worse than the parent's by
+more than the metric's `bound`, a fraction of the parent's median.
 """
 import argparse
 import json
@@ -32,10 +37,7 @@ def run(root, workload, seed, seconds):
         sys.stderr.write(p.stderr[-4000:])
         raise SystemExit(f"ab_pairs: run failed in {root} (seed {seed}, exit {p.returncode})")
     out = json.loads(lines[-1])
-    if not out.get("correct"):
-        raise SystemExit(f"ab_pairs: {root} seed {seed} reported correct: false "
-                         f"({out.get('failed')}/{out.get('attempted')} failed)")
-    return {k: v["value"] for k, v in out["metrics"].items()}
+    return {k: v["value"] for k, v in out["metrics"].items()}, out["attempted"], out["failed"]
 
 
 def quartiles(xs):
@@ -56,18 +58,29 @@ def main():
     with open(os.path.join(a.change, "BENCHMARK.json")) as f:
         bench = json.load(f)
     better = {m["name"]: m["better"] for m in bench["end_to_end"]}
+    bound = {m["name"]: m["bound"] for m in bench["end_to_end"]}
     sides = {"parent": a.parent, "change": a.change}
     got = {"parent": [], "change": []}
+    ops = {"parent": [], "change": []}
     for i in range(a.pairs):
         seed = a.seed0 + i
         order = ("parent", "change") if i % 2 == 0 else ("change", "parent")
         for side in order:
-            got[side].append(run(sides[side], a.workload, seed, bench["run_seconds"]))
-        print(f"pair {i} seed {seed}: " + " ".join(
+            metrics, attempted, failed = run(sides[side], a.workload, seed, bench["run_seconds"])
+            got[side].append(metrics)
+            ops[side].append((attempted, failed))
+        (pa, pf), (ca, cf) = ops["parent"][-1], ops["change"][-1]
+        print(f"pair {i} seed {seed}: failed/attempted {pf}/{pa} vs {cf}/{ca}"
+              + (" [op counts differ]" if pa != ca else "") + "; " + " ".join(
             f"{k} {got['parent'][-1][k]:.4g}/{got['change'][-1][k]:.4g}" for k in better),
             flush=True)
     print(f"\n{a.workload}, {a.pairs} pairs, seeds {a.seed0}..{a.seed0 + a.pairs - 1}; "
           "median [q1, q3], parent -> change")
+    for side in ("parent", "change"):
+        print(f"{side}: {sum(f for _, f in ops[side])}/{sum(n for n, _ in ops[side])} "
+              "ops failed")
+    differ = sum(p[0] != c[0] for p, c in zip(ops["parent"], ops["change"]))
+    print(f"pairs with different op counts: {differ}/{a.pairs}")
     for k, direction in better.items():
         p = [r[k] for r in got["parent"]]
         c = [r[k] for r in got["change"]]
@@ -77,9 +90,14 @@ def main():
         pq1, pq3 = quartiles(p)
         cq1, cq3 = quartiles(c)
         gain = wins >= 0.9 * a.pairs and sign * (pm - cm) > pq3 - pq1
+        worse = sign * (cm - pm) > bound[k] * abs(pm)
         print(f"{k}: {pm:.4g} [{pq1:.4g}, {pq3:.4g}] -> {cm:.4g} [{cq1:.4g}, {cq3:.4g}]  "
               f"wins {wins}/{a.pairs}  gap {pm - cm:+.4g} vs parent IQR {pq3 - pq1:.4g}  "
-              f"gain rule {'holds' if gain else 'does not hold'}")
+              f"gain rule {'holds' if gain else 'does not hold'}  "
+              f"{'WORSE than' if worse else 'within'} bound {bound[k]:g}")
+    bad = sum(f > 0 for side in ops.values() for _, f in side)
+    if bad:
+        raise SystemExit(f"ab_pairs: {bad} runs failed ops (correct: false)")
 
 
 if __name__ == "__main__":

@@ -368,7 +368,7 @@ object GraphOps {
     val sigs = {
       def build = Dedup.minhashBandSigs(
         nbrs.select($"a".as("doc_id"), $"nb".cast("string").as("s")), nPerm, bandSize)
-      cacheKey.fold(build)(key => Caches.cached(s"$key:sigs")(build))
+      cacheKey.fold(build)(key => Caches.cached(s"$key:sigs:$nPerm:$bandSize")(build))
     }
     val cand = sigs.as("x")
       .join(sigs.as("y"),
@@ -479,7 +479,7 @@ object GraphOps {
     val sigs = {
       def build = Dedup.minhashBandSigs(
         nbrs.select($"a".as("doc_id"), $"nb".cast("string").as("s")), nPerm, bandSize)
-      cacheKey.fold(build)(key => Caches.cached(s"$key:sigs")(build))
+      cacheKey.fold(build)(key => Caches.cached(s"$key:sigs:$nPerm:$bandSize")(build))
     }
     val deg = nbrs.groupBy($"a").agg(count(lit(1)).as("d"))
     val cand = sigs.as("x")

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
 import graft.{Caches, Tables}
 import graft.functions.VecDot
 import graft.functions.GraftFunctions.{vecAbsMax, vecDot, vecNorm, vecQuantAbsSum, vecQuantSelfDot, vecScale, vecSignPack, vecToDouble}
@@ -292,13 +293,38 @@ object VectorOps {
     * recomputation, no corpus scan. The
     * sf1/sf3 probes showed the inline form (`lshAnn`) is linear in the
     * corpus precisely because it re-derives 128 dot products per vector
-    * per query; this splits that cost into one offline build. */
+    * per query; this splits that cost into one offline build.
+    *
+    * The bucket count is sized to the index (`lshBucketCount`): one
+    * bucket per `spark.sql.files.openCostInBytes` of estimated index
+    * bytes, so a small index is one file read by one task and a large
+    * one gets enough buckets for a query's probe keys to prune. The
+    * corpus row count is one `count()` of the cached `normed` frame,
+    * which materializes the cache the write reads anyway. */
   def lshIndexBuild(s: SparkSession, dir: String, table: String,
-      bands: Int = 16, bits: Int = 8, nBuckets: Int = 64): Unit = {
+      bands: Int = 16, bits: Int = 8): Unit = {
     import s.implicits._
-    val sigs = bandSigs(normed(s, dir).select($"vec_id", $"u"), bands, bits)
+    val e = normed(s, dir)
+    val sigs = bandSigs(e.select($"vec_id", $"u"), bands, bits)
       .select($"vec_id", ($"k" * (1 << bits) + $"bv").as("sig_key"))
+    val nBuckets = lshBucketCount(e.count(), bands, bits,
+      EstimationUtils.getSizePerRow(sigs.queryExecution.analyzed.output).toLong,
+      s.sessionState.conf.filesOpenCostInBytes)
     graft.sinks.TableWriter.writeBucketed(sigs, table, "sig_key", nBuckets)
+  }
+
+  /** Buckets for an index of `corpusRows × bands` rows of `rowBytes`
+    * each: one per `openCost` bytes (Spark's cost of opening a file, the
+    * size below which a file is not worth a split of its own), clamped to
+    * `[1, bands · 2^bits]` (the number of distinct `sig_key` values) and
+    * rounded down to a power of two, so `writeBucketed`'s
+    * `gcd(nBuckets, shuffle.partitions)` write tasks grow with the
+    * index. */
+  private[graft] def lshBucketCount(corpusRows: Long, bands: Int, bits: Int,
+      rowBytes: Long, openCost: Long): Int = {
+    val bytes = BigInt(corpusRows) * bands * rowBytes
+    val n = (bytes / openCost.max(1L)).min(BigInt(bands.toLong << bits)).max(BigInt(1))
+    Integer.highestOneBit(n.toInt)
   }
 
   /** Query against a prebuilt `lshIndexBuild` table. The query row
@@ -316,14 +342,18 @@ object VectorOps {
     * opens one file per probed bucket. Returns identical rows to `lshAnn`
     * at probeRadius=1 — VectorScaleSpec asserts both.
     *
-    * Scan shape: this query only FILTERS on the bucket key, so with
+    * Scan shape: the index's bucket count follows its size
+    * (`lshBucketCount`), so an index under one
+    * `spark.sql.files.openCostInBytes` (sf0.1: 32,000 rows, about 640 kB)
+    * is one bucket: one file read by one task whatever the scan shape.
+    * With more buckets, this query only FILTERS on the bucket key, so with
     * `spark.sql.sources.bucketing.autoBucketedScan.enabled` on (Spark's
-    * default) DisableUnnecessaryBucketedScan plans a plain file scan. In
-    * Spark 4.1.2 that scan still skips the files of unprobed buckets and
-    * packs the rest into a few tasks (sf0.01 probe: 57 files, 4 tasks).
-    * With the flag off the scan stays bucketed: one task per bucket, and
-    * the plan reports `SelectedBucketsCount` (the spec runs this shape).
-    * Both read the same files and return the same rows. */
+    * default) DisableUnnecessaryBucketedScan plans a plain file scan that
+    * still skips the files of unprobed buckets and packs the rest into a
+    * few tasks. With the flag off the scan stays bucketed: one task per
+    * selected bucket, and the plan reports `SelectedBucketsCount` (the
+    * specs run this shape). Both read the same files and return the same
+    * rows. */
   def lshAnnIndexed(s: SparkSession, dir: String, table: String,
       queryId: Long = 0L, k: Int = 5, bands: Int = 16, bits: Int = 8): DataFrame = {
     import s.implicits._
@@ -915,10 +945,12 @@ object VectorOps {
     * identical rows to `annRecall` — spec-pinned. Same scan shapes as
     * lshAnnIndexed, and bucket pruning only bites
     * when the table's bucket count exceeds the panel's probe-key fanout
-    * (a full 8-query radius-1 panel probes ~1.1k keys, so a 100 TB
-    * store sizes nBuckets in the thousands; at the 64-bucket test
-    * layout the win reduces to skipping the signature pass, which is
-    * the dominant cost anyway). */
+    * (a full 8-query radius-1 panel probes ~1.1k keys). `lshIndexBuild`
+    * sizes the count to the index, one bucket per open cost of index
+    * bytes up to one per `sig_key`, so pruning engages once the index is
+    * large enough that skipping a file saves a file's worth of reading;
+    * below that the win is skipping the signature pass, which is the
+    * dominant cost anyway. */
   def annRecallIndexed(s: SparkSession, dir: String, table: String,
       nQueries: Int = 8, k: Int = 5, probeRadius: Int = 1, bands: Int = 16,
       bits: Int = 8): DataFrame = {

@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** S17 — streaming heavy hitters: "which users dominate the event stream
@@ -18,7 +17,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * Sharding by key hash keeps each group's arrival order deterministic
   * under replay (within a shard, batches fold in event_id order — the
   * repo's streaming convention), and a top-k over the union of shard
-  * summaries serves the dashboard. The batch twin is the exact count.
+  * summaries serves the dashboard.
   */
 object HeavyHitters {
 
@@ -65,13 +64,5 @@ object HeavyHitters {
       .groupByKey(e => (math.floorMod(e.user_id, nShards.toLong)).toInt)
       .flatMapGroupsWithState[ShardState, ShardSummary](
         OutputMode.Append(), GroupStateTimeout.NoTimeout())(update(capacity))
-  }
-
-  /** Batch twin: exact per-user counts, top-k. */
-  def batchTopK(events: DataFrame, k: Int = 20): DataFrame = {
-    import events.sparkSession.implicits._
-    events.groupBy($"user_id").agg(count(lit(1)).as("n"))
-      .orderBy($"n".desc, $"user_id")
-      .limit(k)
   }
 }

@@ -155,6 +155,24 @@ class GraphSpec extends SparkSpecBase {
     lsh.foreach { case (p, v) => assert(exact.get(p).contains(v), s"phantom pair $p") }
   }
 
+  test("node similarity LSH: one cache key keeps one signature set per nPerm") {
+    // a second nPerm under the same cache key must band its own
+    // signatures, i.e. return what a keyless call with that nPerm returns
+    val rnd = new scala.util.Random(7)
+    val g = edges((for (a <- 1L to 30L; b <- a + 1 to 30L if rnd.nextDouble() < 0.25)
+      yield (a, b)): _*)
+    def sim(nPerm: Int, key: Option[String]) =
+      GraphOps.nodeSimilarityLshOf(g, k = 1000, key, nPerm = nPerm).collect().toSet
+    def aa(nPerm: Int, key: Option[String]) =
+      GraphOps.adamicAdarLshOf(g, k = 1000, key, nPerm = nPerm).collect().toSet
+    val (few, many) = (sim(2, None), sim(24, None))
+    assert(few != many, "fixture: 2 and 24 permutations must find different pairs")
+    val key = Some("spec-sig-params")
+    assert(sim(24, key) == many)
+    assert(sim(2, key) == few)
+    assert(aa(2, key) == aa(2, None))
+  }
+
   test("node similarity: super-connector cap drops hub-only pairs, stays exact elsewhere") {
     // hub 99 connects to 1..5 (deg 5); 1 and 2 also share real neighbor 10.
     // With maxDeg = 4 the hub is a stop-neighbor: it leaves every neighbor

@@ -15,6 +15,8 @@ import graft.operators.{Dedup, VecCluster, VectorOps}
   */
 class VectorScaleSpec extends SparkSpecBase with AdaptiveSparkPlanHelper {
 
+  private val openCost = "spark.sql.files.openCostInBytes"
+
   /** Deterministic planted corpus: `nBase` seed vectors, each with one
     * near-dup at cosine ≥ 0.97 (tiny perturbation), plus isotropic noise
     * vectors. Returns a normed frame (vec_id, v, nrm, u) like
@@ -131,7 +133,11 @@ class VectorScaleSpec extends SparkSpecBase with AdaptiveSparkPlanHelper {
     // DisableUnnecessaryBucketedScan plans a plain file scan, which prunes
     // the same files but reports no SelectedBucketsCount
     val prior = spark.conf.get("spark.sql.sources.bucketing.autoBucketedScan.enabled")
+    val priorOpenCost = spark.conf.get(openCost)
     spark.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
+    // 500 vectors × 16 bands × 20 B = 160 kB of index; a 2 kB open cost
+    // sizes it at 64 buckets, enough for the 144 probe keys to prune
+    spark.conf.set(openCost, "2048")
     try {
     VectorOps.lshIndexBuild(spark, sfDir, "lsh_sigs")
     val indexed = VectorOps.lshAnnIndexed(spark, sfDir, "lsh_sigs")
@@ -160,6 +166,45 @@ class VectorScaleSpec extends SparkSpecBase with AdaptiveSparkPlanHelper {
     val filesRead = scan.inputRDDs().head.partitions
       .map(_.asInstanceOf[FilePartition].files.length).sum
     assert(filesRead == pruned, s"$filesRead files read for $pruned selected buckets")
+    } finally {
+      spark.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", prior)
+      spark.conf.set(openCost, priorOpenCost)
+    }
+  }
+
+  test("LSH index bucket count: a power of two per open cost of index bytes, at most one per sig_key") {
+    val fourMb = 4L << 20
+    def count(rows: Long) = VectorOps.lshBucketCount(rows, bands = 16, bits = 8,
+      rowBytes = 20L, openCost = fourMb)
+    val corpus = Tables.embeddings(spark, sfDir).count()
+    assert(count(corpus) == 1, s"sf0.001's $corpus vectors got ${count(corpus)} buckets")
+    val sizes = Seq(0L, 1L, corpus, 26214L, 26215L, 100000L, 1000000L, 10000000L, 1L << 40)
+    val counts = sizes.map(count)
+    assert(counts.forall(n => n > 0 && Integer.bitCount(n) == 1), s"not powers of two: $counts")
+    assert(counts.zip(counts.tail).forall { case (a, b) => a <= b }, s"not monotone: $counts")
+    // 26,215 vectors (× 16 rows × 20 B) are the first index of two open costs
+    assert(count(26214L) == 1 && count(26215L) == 2)
+    assert(count(1000000L) == 64 && count(1000000L) < count(10000000L))
+    assert(count(1L << 40) == 16 * 256, "more buckets than distinct sig_key values")
+    assert(VectorOps.lshBucketCount(1L << 40, bands = 3, bits = 2, 20L, fourMb) == 8)
+  }
+
+  test("indexed LSH ANN on a default-built small index: one file, one scan task, at most 3 jobs") {
+    val prior = spark.conf.get("spark.sql.sources.bucketing.autoBucketedScan.enabled")
+    spark.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
+    try {
+      VectorOps.lshIndexBuild(spark, sfDir, "lsh_sigs_default")
+      assert(spark.table("lsh_sigs_default").inputFiles.length == 1)
+      val q = VectorOps.lshAnnIndexed(spark, sfDir, "lsh_sigs_default", 3L)
+      val scan = collect(q.queryExecution.executedPlan) {
+        case f: FileSourceScanExec if f.tableIdentifier.exists(_.table == "lsh_sigs_default") => f
+      }.head
+      assert(scan.inputRDDs().head.partitions.length == 1, "the candidate scan is not one task")
+      for (id <- Seq(0L, 3L, 17L, 42L)) assert(
+        VectorOps.lshAnnIndexed(spark, sfDir, "lsh_sigs_default", id).collect().toSeq ==
+          VectorOps.lshAnn(spark, sfDir, id).collect().toSeq, s"query $id")
+      val jobs = jobsOf(VectorOps.lshAnnIndexed(spark, sfDir, "lsh_sigs_default", 17L).collect())
+      assert(jobs <= 3, s"an indexed ANN call ran $jobs jobs")
     } finally spark.conf
       .set("spark.sql.sources.bucketing.autoBucketedScan.enabled", prior)
   }

@@ -206,7 +206,10 @@ class Wave14Spec extends SparkSpecBase {
   test("ann recall indexed: the serving-table eval equals the inline eval and prunes buckets") {
     val s = spark
     val prior = s.conf.get("spark.sql.sources.bucketing.autoBucketedScan.enabled")
+    val priorOpenCost = s.conf.get("spark.sql.files.openCostInBytes")
     s.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
+    // a 2 kB open cost sizes sf0.001's 160 kB index at 64 buckets
+    s.conf.set("spark.sql.files.openCostInBytes", "2048")
     try {
       graft.operators.VectorOps.lshIndexBuild(s, sfDir, "r14_lsh_sigs")
       val indexed = graft.operators.VectorOps.annRecallIndexed(s, sfDir, "r14_lsh_sigs")
@@ -225,8 +228,10 @@ class Wave14Spec extends SparkSpecBase {
       assert(sel.isDefined, s"no bucket pruning in:\n$plan")
       assert(sel.get.group(1).toInt <= 16 && sel.get.group(2).toInt == 64,
         s"unexpected bucket selection: ${sel.get.group(0)}")
-    } finally s.conf
-      .set("spark.sql.sources.bucketing.autoBucketedScan.enabled", prior)
+    } finally {
+      s.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", prior)
+      s.conf.set("spark.sql.files.openCostInBytes", priorOpenCost)
+    }
   }
 
   test("decontaminate_rewrite: corpus invariants at sf0.001") {
