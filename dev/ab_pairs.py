@@ -12,8 +12,13 @@ complete, and after the summary if any run failed ops (`correct: false`).
 
 Per pair it prints each side's failed/attempted ops and marks a pair
 whose two sides attempted different op counts (a run that fits one more
-request cycle reads lower latencies for that reason alone). Per side it
-prints the failed/attempted totals. Per end-to-end metric it prints each
+request cycle reads lower latencies for that reason alone). It also
+marks each run the harness flagged `disturbed` on its `run:` line (a
+cpu or mem sentinel moved more than 5x across the run) with that run's
+measured op count and `setup_s` reps: a disturbed run can widen the quartile
+spread the gain rule tests against. Disturbed runs are reported, never
+dropped. Per side it prints the failed/attempted totals and the
+disturbed runs. Per end-to-end metric it prints each
 side's median with quartiles, the change's wins (ties count for neither
 side), whether a gain claim holds (the change wins at least nine tenths
 of the pairs and the medians differ by more than the parent's quartile
@@ -37,7 +42,17 @@ def run(root, workload, seed, seconds):
         sys.stderr.write(p.stderr[-4000:])
         raise SystemExit(f"ab_pairs: run failed in {root} (seed {seed}, exit {p.returncode})")
     out = json.loads(lines[-1])
-    return {k: v["value"] for k, v in out["metrics"].items()}, out["attempted"], out["failed"]
+    info = next(json.loads(l[len("run: "):]) for l in lines if l.startswith("run: "))
+    return ({k: v["value"] for k, v in out["metrics"].items()}, out["attempted"],
+            out["failed"], info)
+
+
+def disturbance(info):
+    """The `disturbed` mark of one run, or '' for an undisturbed run."""
+    if not info["disturbed"]:
+        return ""
+    reps = ", ".join(f"{x:.2f}" for x in info["setup_s_reps"])
+    return f"disturbed ({sum(info['executed'].values())} measured ops, setup_s reps [{reps}])"
 
 
 def quartiles(xs):
@@ -62,16 +77,21 @@ def main():
     sides = {"parent": a.parent, "change": a.change}
     got = {"parent": [], "change": []}
     ops = {"parent": [], "change": []}
+    marks = {"parent": [], "change": []}
     for i in range(a.pairs):
         seed = a.seed0 + i
         order = ("parent", "change") if i % 2 == 0 else ("change", "parent")
         for side in order:
-            metrics, attempted, failed = run(sides[side], a.workload, seed, bench["run_seconds"])
+            metrics, attempted, failed, info = run(sides[side], a.workload, seed,
+                                                   bench["run_seconds"])
             got[side].append(metrics)
             ops[side].append((attempted, failed))
+            marks[side].append(disturbance(info))
         (pa, pf), (ca, cf) = ops["parent"][-1], ops["change"][-1]
         print(f"pair {i} seed {seed}: failed/attempted {pf}/{pa} vs {cf}/{ca}"
-              + (" [op counts differ]" if pa != ca else "") + "; " + " ".join(
+              + (" [op counts differ]" if pa != ca else "")
+              + "".join(f" [{side} {marks[side][-1]}]" for side in sides if marks[side][-1])
+              + "; " + " ".join(
             f"{k} {got['parent'][-1][k]:.4g}/{got['change'][-1][k]:.4g}" for k in better),
             flush=True)
     print(f"\n{a.workload}, {a.pairs} pairs, seeds {a.seed0}..{a.seed0 + a.pairs - 1}; "
@@ -79,6 +99,9 @@ def main():
     for side in ("parent", "change"):
         print(f"{side}: {sum(f for _, f in ops[side])}/{sum(n for n, _ in ops[side])} "
               "ops failed")
+        bad_runs = [f"pair {i} {m}" for i, m in enumerate(marks[side]) if m]
+        print(f"{side}: {len(bad_runs)}/{a.pairs} runs disturbed"
+              + "".join(f"\n  {r}" for r in bad_runs))
     differ = sum(p[0] != c[0] for p, c in zip(ops["parent"], ops["change"]))
     print(f"pairs with different op counts: {differ}/{a.pairs}")
     for k, direction in better.items():

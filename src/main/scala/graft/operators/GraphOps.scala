@@ -6,6 +6,7 @@ import org.apache.spark.sql.execution.GraftCheckpoint
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import graft.{Caches, Tables}
+import graft.functions.Param
 
 /** Graph surface of the reference's Neo4j product/category graph
   * (backend/src/api/services/neo4j_service.py: IN_CATEGORY traversals,
@@ -614,7 +615,7 @@ object GraphOps {
       val next = frontier.join(arcs, $"part" === $"src")
         .select($"dst".as("part"), $"landmark").distinct()
         .join(dist.select($"part", $"landmark"), Seq("part", "landmark"), "left_anti")
-        .select($"part", $"landmark", lit(hop).as("hops"))
+        .select($"part", $"landmark", Param(hop).as("hops"))
         .localCheckpoint(eager = true)
       dist = dist.unionAll(next).localCheckpoint(eager = true)
       frontier = next
@@ -744,7 +745,7 @@ object GraphOps {
         .groupBy($"s", $"dst").agg(sum($"sigma").as("sigma"))
         .select($"s", $"dst".as("v"), $"sigma")
         .join(visited, Seq("s", "v"), "left_anti")
-        .select($"s", $"v", $"sigma", lit(d).as("dist"))
+        .select($"s", $"v", $"sigma", Param(d).as("dist"))
         .localCheckpoint(eager = true)
       // r17: one emptiness probe per level, not two — the old loop asked
       // isEmpty here AND again at the while-condition on the same frame

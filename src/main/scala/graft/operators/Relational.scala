@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.Tables
+import graft.functions.Param
 
 /** Relational query surface of the reference (PostgreSQL CRUD + agent tools:
   * reference backend/src/api/services/db_service.py, tools.py, routers).
@@ -187,7 +188,7 @@ object Relational {
   def productBySku(s: SparkSession, dir: String, sku: Long = 42L): DataFrame = {
     import s.implicits._
     Tables.part(s, dir)
-      .filter($"p_partkey" === sku)
+      .filter($"p_partkey" === Param(sku))
       .select($"p_partkey", $"p_name", $"p_brand", $"p_type", $"p_size",
         $"p_retailprice")
   }
@@ -249,7 +250,7 @@ object Relational {
   // (db_service.py:155 get_user_orders + joinedload(items)).
   def userOrders(s: SparkSession, dir: String, custkey: Long = 42L): DataFrame = {
     import s.implicits._
-    val o = Tables.orders(s, dir).filter($"o_custkey" === custkey)
+    val o = Tables.orders(s, dir).filter($"o_custkey" === Param(custkey))
     val li = Tables.lineitem(s, dir)
     // orders side is tiny after the filter → broadcast it into the fact scan
     li.join(broadcast(o), $"l_orderkey" === $"o_orderkey")
@@ -293,7 +294,7 @@ object Relational {
   def cancelEligible(s: SparkSession, dir: String, custkey: Long = 42L): DataFrame = {
     import s.implicits._
     Tables.orders(s, dir)
-      .filter($"o_custkey" === custkey && $"o_orderstatus".isin("O", "P"))
+      .filter($"o_custkey" === Param(custkey) && $"o_orderstatus".isin("O", "P"))
       .select($"o_orderkey", $"o_orderstatus", $"o_totalprice", $"o_orderdate")
       // bounded by one customer's orders: one-partition sort, no sampling job
       .repartition(1)

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.functions.Param
 
 /** Text-analysis operators for LLM-pipeline data prep, over `documents`
   * (reference analogue: the scraped social/web text the agent ingests —
@@ -337,13 +338,13 @@ object TextOps {
       queryId: Long = 42L, k: Int = 10): DataFrame = {
     import s.implicits._
     val sets = Dedup.docSets(s, dir) // (doc_id, ss, n) — session-cached
-    val q = sets.filter($"doc_id" === queryId)
+    val q = sets.filter($"doc_id" === Param(queryId))
       .select($"ss".as("qs"), $"n".as("qn"))
-    val qsh = Dedup.cappedShingles(s, dir).filter($"doc_id" === queryId)
+    val qsh = Dedup.cappedShingles(s, dir).filter($"doc_id" === Param(queryId))
       .select($"s")
     val cand = Dedup.cappedShingles(s, dir)
       .join(broadcast(qsh), "s")
-      .filter($"doc_id" =!= queryId)
+      .filter($"doc_id" =!= Param(queryId))
       .select($"doc_id").distinct()
     cand.join(sets, "doc_id")
       .crossJoin(broadcast(q))

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.GraftFunctions.vecDot
+import graft.functions.Param
 
 /** Product quantization (PQ) for vector compression + ANN: split each
   * unit vector into `m` subvectors, learn a `ksub`-centroid L2 codebook
@@ -108,15 +109,15 @@ object VecPQ {
     val books = train(e.select($"vec_id", $"u"), m, ksub, iters)
     if (books.isEmpty)
       return e.select($"vec_id", lit(0.0).as("approx_sim"), lit(0.0).as("sim")).limit(0)
-    val qRow = e.filter($"vec_id" === queryId)
+    val qRow = e.filter($"vec_id" === Param(queryId))
       .select($"u", $"v", $"nrm").collect()
     if (qRow.isEmpty)
       return e.select($"vec_id", lit(0.0).as("approx_sim"), lit(0.0).as("sim")).limit(0)
     val qu = qRow(0).getSeq[Double](0).toArray
     val table = adcTable(qu, books)
-    val q = e.filter($"vec_id" === queryId)
+    val q = e.filter($"vec_id" === Param(queryId))
       .select($"v".as("qv"), $"nrm".as("qnrm"))
-    e.filter($"vec_id" =!= queryId)
+    e.filter($"vec_id" =!= Param(queryId))
       .withColumn("codes", encode($"u", books))
       .withColumn("approx_sim", round(adcScore($"codes", table), 6))
       .orderBy($"approx_sim".desc, $"vec_id")

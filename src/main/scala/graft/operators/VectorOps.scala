@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
 import graft.{Caches, Tables}
-import graft.functions.VecDot
+import graft.functions.{Param, VecDot}
 import graft.functions.GraftFunctions.{vecAbsMax, vecDot, vecNorm, vecQuantAbsSum, vecQuantSelfDot, vecScale, vecSignPack, vecToDouble}
 
 /** Vector-retrieval surface of the reference's Chroma collections
@@ -53,9 +53,9 @@ object VectorOps {
   def cosineTopK(s: SparkSession, dir: String, queryId: Long = 0L, k: Int = 5): DataFrame = {
     import s.implicits._
     val e = normed(s, dir)
-    val q = e.filter($"vec_id" === queryId)
+    val q = e.filter($"vec_id" === Param(queryId))
       .select($"v".as("qv"), $"nrm".as("qnrm"))
-    e.filter($"vec_id" =!= queryId)
+    e.filter($"vec_id" =!= Param(queryId))
       .crossJoin(broadcast(q))
       .withColumn("sim", round(dot($"v", $"qv") / ($"nrm" * $"qnrm"), 6))
       .select($"vec_id", $"sim")
@@ -139,9 +139,9 @@ object VectorOps {
       nCand: Int, k: Int, lam: Double, lamBar: Double): DataFrame = {
     val s = e.sparkSession
     import s.implicits._
-    val q = e.filter($"vec_id" === queryId)
+    val q = e.filter($"vec_id" === Param(queryId))
       .select($"v".as("qv"), $"nrm".as("qnrm"))
-    val cand = e.filter($"vec_id" =!= queryId)
+    val cand = e.filter($"vec_id" =!= Param(queryId))
       .crossJoin(broadcast(q))
       .withColumn("simq", round(dot($"v", $"qv") / ($"nrm" * $"qnrm"), 6))
       .select($"vec_id", $"simq", $"v", $"nrm")
@@ -254,8 +254,8 @@ object VectorOps {
     import s.implicits._
     val sigs = bandSigs(normed(s, dir).select($"vec_id", $"u"), bands, bits)
       .select($"vec_id", $"k", $"bv")
-    val q = sigs.filter($"vec_id" === queryId).select($"k", $"bv".as("qbv"))
-    sigs.filter($"vec_id" =!= queryId)
+    val q = sigs.filter($"vec_id" === Param(queryId)).select($"k", $"bv".as("qbv"))
+    sigs.filter($"vec_id" =!= Param(queryId))
       .join(broadcast(q), Seq("k"))
       .filter(expr(s"bit_count(bv ^ qbv) <= $probeRadius"))
       .select($"vec_id")
@@ -275,7 +275,7 @@ object VectorOps {
     import s.implicits._
     val e = normed(s, dir)
     val cands = lshCandidates(s, dir, queryId, probeRadius, bands, bitsPerBand)
-    val q = e.filter($"vec_id" === queryId)
+    val q = e.filter($"vec_id" === Param(queryId))
       .select($"v".as("qv"), $"nrm".as("qnrm"))
     e.join(cands, "vec_id")
       .crossJoin(broadcast(q))
@@ -334,10 +334,10 @@ object VectorOps {
     * sign bits are bit-identical), then expand to the multi-probe key set
     * (exact bucket + all radius-1 bit flips, the same candidate set as
     * lshAnn's `bit_count(bv^qbv) <= 1`). The bucketed scan prunes to those
-    * buckets through a static `isin`; the candidates semi-join the corpus
-    * (each kept once, so no distinct and no shuffle) and exact-re-rank
-    * against the query's v and nrm passed by value — no second scan of the
-    * corpus for the query row, no query broadcast. Per call: the query
+    * buckets through a referenced key set (`Param.in`, still an `InSet`);
+    * the candidates semi-join the corpus (each kept once: no distinct, no
+    * shuffle) and exact-re-rank against the query's v and nrm as `Param`s:
+    * no corpus rescan, no query broadcast, no new class. Per call: the query
     * collect, the candidate broadcast, the re-rank; the candidate scan
     * opens one file per probed bucket. Returns identical rows to `lshAnn`
     * at probeRadius=1 — VectorScaleSpec asserts both.
@@ -358,7 +358,7 @@ object VectorOps {
       queryId: Long = 0L, k: Int = 5, bands: Int = 16, bits: Int = 8): DataFrame = {
     import s.implicits._
     val e = normed(s, dir)
-    val q = e.filter($"vec_id" === queryId).select($"u", $"v", $"nrm").collect().headOption
+    val q = e.filter($"vec_id" === Param(queryId)).select($"u", $"v", $"nrm").collect().headOption
     val probeKeys = q.toSeq.flatMap { r =>
       bandValues(r.getSeq[Double](0).toArray, bands, bits).zipWithIndex.flatMap { case (bv, band) =>
         (bv +: (0 until bits).map(t => bv ^ (1 << t))).map(band * (1 << bits) + _)
@@ -367,10 +367,10 @@ object VectorOps {
     val qv = q.fold(Seq.empty[Double])(_.getSeq[Double](1))
     val qnrm = q.fold(0.0)(_.getDouble(2))
     val cands = s.table(table)
-      .filter($"sig_key".isin(probeKeys: _*) && $"vec_id" =!= queryId)
+      .filter(Param.in($"sig_key", probeKeys) && $"vec_id" =!= Param(queryId))
       .select($"vec_id")
     e.join(cands, Seq("vec_id"), "left_semi")
-      .withColumn("sim", round(dot($"v", typedLit(qv)) / ($"nrm" * lit(qnrm)), 6))
+      .withColumn("sim", round(dot($"v", typedLit(qv)) / ($"nrm" * Param(qnrm)), 6))
       .select($"vec_id", $"sim")
       .orderBy($"sim".desc, $"vec_id")
       .limit(k)
@@ -404,7 +404,7 @@ object VectorOps {
     if (cents.isEmpty) // empty corpus → no centroids, no candidates
       return e.select($"vec_id", lit(0).as("cell"), lit(0.0).as("sim")).limit(0)
     val assigned = e.withColumn("cell", VecCluster.cellOf($"u", cents))
-    val q = e.filter($"vec_id" === queryId)
+    val q = e.filter($"vec_id" === Param(queryId))
       .select($"v".as("qv"), $"nrm".as("qnrm"), $"u".as("qu"))
     val centsDf = s.createDataFrame(
       cents.zipWithIndex.map { case (c, i) => (i, c.toSeq) }).toDF("cell", "cv")
@@ -413,7 +413,7 @@ object VectorOps {
       .orderBy($"csim".desc, $"cell")
       .limit(nProbe)
       .select($"cell")
-    assigned.filter($"vec_id" =!= queryId)
+    assigned.filter($"vec_id" =!= Param(queryId))
       .join(broadcast(probeCells), "cell")
       .crossJoin(broadcast(q))
       .withColumn("sim", round(dot($"v", $"qv") / ($"nrm" * $"qnrm"), 6))
@@ -455,14 +455,14 @@ object VectorOps {
     val fBooks = Future(VecPQ.train(e.select($"vec_id", $"u"), m, ksub, pqIters))
     val cents = Await.result(fCents, Duration.Inf)
     val books = Await.result(fBooks, Duration.Inf)
-    val qRow = e.filter($"vec_id" === queryId)
+    val qRow = e.filter($"vec_id" === Param(queryId))
       .select($"u", $"v", $"nrm").collect()
     if (cents.isEmpty || books.isEmpty || qRow.isEmpty)
       return e.select($"vec_id", lit(0).as("cell"),
         lit(0.0).as("approx_sim"), lit(0.0).as("sim")).limit(0)
     val qu = qRow(0).getSeq[Double](0).toArray
     val table = VecPQ.adcTable(qu, books)
-    val q = e.filter($"vec_id" === queryId)
+    val q = e.filter($"vec_id" === Param(queryId))
       .select($"v".as("qv"), $"nrm".as("qnrm"), $"u".as("qu"))
     val centsDf = s.createDataFrame(
       cents.zipWithIndex.map { case (c, i) => (i, c.toSeq) }).toDF("cell", "cv")
@@ -472,7 +472,7 @@ object VectorOps {
       .limit(nProbe)
       .select($"cell")
     e.withColumn("cell", VecCluster.cellOf($"u", cents))
-      .filter($"vec_id" =!= queryId)
+      .filter($"vec_id" =!= Param(queryId))
       .join(broadcast(probeCells), "cell")
       .withColumn("approx_sim",
         round(VecPQ.adcScore(VecPQ.encode($"u", books), table), 6))
@@ -588,9 +588,9 @@ object VectorOps {
       .withColumn("dq", expr(
         "transform(v, x -> cast(cast(round(x * 127.0 / mx) AS int) AS double) * mx / 127.0)"))
       .withColumn("nrm", vecNorm($"dq"))
-    val q = e.filter($"vec_id" === queryId)
+    val q = e.filter($"vec_id" === Param(queryId))
       .select($"dq".as("qv"), $"nrm".as("qnrm"))
-    e.filter($"vec_id" =!= queryId)
+    e.filter($"vec_id" =!= Param(queryId))
       .crossJoin(broadcast(q))
       .withColumn("sim", round(dot($"dq", $"qv") / ($"nrm" * $"qnrm"), 6))
       .select($"vec_id", $"sim")
@@ -687,15 +687,15 @@ object VectorOps {
     val e = normed(s, dir)
     val pre = e.select($"vec_id", slice($"v", 1, prefixDims).as("pv"))
       .withColumn("pnrm", vecNorm($"pv"))
-    val qp = pre.filter($"vec_id" === queryId)
+    val qp = pre.filter($"vec_id" === Param(queryId))
       .select($"pv".as("qpv"), $"pnrm".as("qpnrm"))
-    val cand = pre.filter($"vec_id" =!= queryId)
+    val cand = pre.filter($"vec_id" =!= Param(queryId))
       .crossJoin(broadcast(qp))
       .withColumn("psim", round(dot($"pv", $"qpv") / ($"pnrm" * $"qpnrm"), 6))
       .orderBy($"psim".desc, $"vec_id") // TakeOrdered — the candidate budget
       .limit(cands)
       .select($"vec_id", $"psim")
-    val q = e.filter($"vec_id" === queryId)
+    val q = e.filter($"vec_id" === Param(queryId))
       .select($"v".as("qv"), $"nrm".as("qnrm"))
     e.join(cand, "vec_id")
       .crossJoin(broadcast(q))
@@ -735,16 +735,16 @@ object VectorOps {
     import s.implicits._
     val e = normed(s, dir)
     val sigs = bqSigsOf(e)
-    val qs = sigs.filter($"vec_id" === queryId)
+    val qs = sigs.filter($"vec_id" === Param(queryId))
       .select($"sig_lo".as("qlo"), $"sig_hi".as("qhi"))
-    val cand = sigs.filter($"vec_id" =!= queryId)
+    val cand = sigs.filter($"vec_id" =!= Param(queryId))
       .crossJoin(broadcast(qs))
       .withColumn("ham", (expr("bit_count(sig_lo ^ qlo)") +
         expr("bit_count(sig_hi ^ qhi)")).cast("int"))
       .orderBy($"ham", $"vec_id") // TakeOrdered — the candidate budget
       .limit(cands)
       .select($"vec_id", $"ham")
-    val q = e.filter($"vec_id" === queryId)
+    val q = e.filter($"vec_id" === Param(queryId))
       .select($"v".as("qv"), $"nrm".as("qnrm"))
     e.join(cand, "vec_id")
       .crossJoin(broadcast(q))

@@ -5,6 +5,7 @@ import org.apache.spark.sql.{AnalysisException, DataFrame, Encoders, SparkSessio
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.execution.GraftCheckpoint
 import org.apache.spark.sql.functions.{col, collect_set, count_if, when}
+import graft.functions.Param
 
 /** Parquet layout writers for downstream scale. Each leaves ONE file per
   * unit a reader prunes to, so a pruned read opens one file per unit:
@@ -129,14 +130,14 @@ object TableWriter {
     val parts = footprint.as(Encoders.STRING)
       .mapPartitions(_.toSet.iterator)(Encoders.STRING)
       .collect().distinct
-    // isin never matches NULL (three-valued logic) — a footprint holding
+    // the set test never matches NULL (three-valued logic) — a footprint holding
     // the null class needs its own leg, or the dynamic overwrite would
     // DROP that partition's unmatched rows
     val named = parts.filter(_ != null)
     val partFilter =
-      if (!parts.contains(null)) partClass.isin(named: _*)
+      if (!parts.contains(null)) Param.in(partClass, named)
       else if (named.isEmpty) partClass.isNull
-      else partClass.isin(named: _*) || partClass.isNull
+      else Param.in(partClass, named) || partClass.isNull
     val survivors = target.filter(partFilter).join(keys, keyCols, "left_anti")
     // the rewrite READS the same files the overwrite deletes, so the
     // merged slice is materialized (spillable checkpoint) before the

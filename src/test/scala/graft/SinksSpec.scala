@@ -93,6 +93,29 @@ class SinksSpec extends SparkSpecBase {
     assert(spark.read.parquet(path).count() == 41)
   }
 
+  test("mergeInto: a footprint of a new size compiles no more classes than a repeat") {
+    val s = spark
+    import s.implicits._
+    val prev = spark.conf.getOption(spk)
+    try {
+      // 4 tasks for every footprint of at least 4 classes
+      spark.conf.set(spk, "4")
+      val path = Files.createTempDirectory("mergesize").toString + "/t"
+      val cols = Seq("pk", "name", "price", "cat")
+      merge(path, (1L to 60L).map(i => (i, s"n$i", i, s"c${i % 20}")).toDF(cols: _*), Seq("pk"), "cat")
+      // one row per class: a delta of n keys touches n partitions
+      def delta(n: Int, v: Long) =
+        (1L to n.toLong).map(i => (i, s"n$i-v$v", v, s"c${i % 20}")).toDF(cols: _*)
+      merge(path, delta(4, 1L), Seq("pk"), "cat")
+      val repeat = compilesOf(merge(path, delta(4, 2L), Seq("pk"), "cat"))
+      for ((n, v) <- Seq((5, 3L), (12, 4L))) {
+        val c = compilesOf(merge(path, delta(n, v), Seq("pk"), "cat"))
+        assert(c <= repeat, s"a $n-class merge compiled $c classes, a repeat $repeat")
+      }
+      assert(spark.read.parquet(path).count() == 60)
+    } finally prev.fold(spark.conf.unset(spk))(spark.conf.set(spk, _))
+  }
+
   test("compaction: thousands of tiny files collapse to the target count, content intact") {
     val base = Files.createTempDirectory("compact").toString
     val li = Tables.lineitem(spark, sfDir).select("l_orderkey", "l_linenumber", "l_quantity")

@@ -2,6 +2,7 @@ package graft
 
 import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.GraftTestBridge
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
@@ -36,6 +37,14 @@ trait SparkSpecBase extends AnyFunSuite with BeforeAndAfterAll {
       sc.removeSparkListener(listener)
     }
     n.get
+  }
+
+  /** Classes janino compiles while `body` runs (codegen cache misses),
+    * counted process-wide: specs run one at a time in the test JVM. */
+  protected def compilesOf(body: => Any): Long = {
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    body
+    CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
   }
 }
 
