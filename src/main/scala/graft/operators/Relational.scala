@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.GraftCheckpoint
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -49,14 +50,16 @@ object Relational {
   }
 
   // R2 — fuzzy full-text product search with a relevance score
-  // (reference neo4j_service.py:76 fulltext queryNodes + tools.py search).
+  // (reference neo4j_service.py:76 fulltext queryNodes + tools.py search):
+  // the score is how many of the (lower-cased) terms the name contains.
+  // The terms are one array literal, a reference in generated code, so
+  // term lists of every length share one compiled class; an empty list
+  // scores every row 0 and returns no rows.
   def productSearch(s: SparkSession, dir: String, terms: Seq[String] = Seq("red", "bolt")): DataFrame = {
     import s.implicits._
-    val score = terms
-      .map(t => when(lower($"p_name").contains(t.toLowerCase), 1).otherwise(0))
-      .reduce(_ + _)
+    val nm = lower($"p_name")
     Tables.part(s, dir)
-      .withColumn("score", score)
+      .withColumn("score", size(filter(typedLit(terms.map(_.toLowerCase)), nm.contains(_))))
       .filter($"score" >= 1)
       .select($"p_partkey", $"p_name", $"p_retailprice", $"score")
       .orderBy($"score".desc, $"p_partkey")
@@ -66,37 +69,26 @@ object Relational {
   // R2b — typo-tolerant (fuzzy) product search. The reference's #1 query
   // shape is `CALL db.index.fulltext.queryNodes("product_name_index",
   // "term~")` (neo4j_service.py:71): the `~` is Lucene fuzzy matching, so
-  // a one-edit typo ("bolte") still finds the product ("bolt"). Spark
-  // formulation: tokenize the name, per query term take the min edit
-  // distance over tokens (levenshtein is codegen'd), a term matches at
-  // distance ≤ 2; rank by terms-matched desc, then total distance asc.
-  // 100 TB: the catalog is a dimension — the explode is per-token over a
-  // bounded scan, the groupBy map-side combines back to one row per
-  // product, and the top-k is TakeOrderedAndProject.
+  // a one-edit typo ("bolte") still finds the product ("bolt"). Per query
+  // term, the least edit distance over the name's tokens; a term matches
+  // at distance ≤ maxDist; rank by terms matched desc, then total distance
+  // asc. Each row is scored alone — one scan stage, no exchange, and the
+  // top-k is TakeOrderedAndProject. That equals scoring per product
+  // because p_partkey is the catalog key (mergeInto keeps it unique). The
+  // terms are one array literal, as in R2.
   def fuzzySearch(s: SparkSession, dir: String,
       terms: Seq[String] = Seq("bolte", "gizmmo"), maxDist: Int = 2): DataFrame = {
     import s.implicits._
-    val toks = Tables.part(s, dir)
+    val toks = filter(split(lower($"p_name"), "[^a-z]+"), _ =!= "")
+    val dists = transform(typedLit(terms.map(_.toLowerCase)),
+      t => array_min(transform(toks, levenshtein(_, t))))
+    val hits = filter($"dists", _ <= maxDist)
+    Tables.part(s, dir)
+      .select($"p_partkey", $"p_name", $"p_retailprice", dists.as("dists"))
       .select($"p_partkey", $"p_name", $"p_retailprice",
-        explode(split(lower($"p_name"), "[^a-z]+")).as("tok"))
-      .filter($"tok" =!= "")
-    // One groupBy carries every per-term min-distance (map-side combine
-    // folds the exploded tokens back to one row per product pre-shuffle).
-    val dists = terms.zipWithIndex.map { case (t, i) =>
-      min(levenshtein($"tok", lit(t.toLowerCase))).as(s"_d$i")
-    }
-    val agg = toks.groupBy($"p_partkey")
-      .agg(min($"p_name").as("p_name"),
-        min($"p_retailprice").as("p_retailprice") +: dists: _*)
-    val matched = terms.indices
-      .map(i => when(col(s"_d$i") <= maxDist, 1).otherwise(0)).reduce(_ + _)
-    val totalDist = terms.indices
-      .map(i => when(col(s"_d$i") <= maxDist, col(s"_d$i")).otherwise(0)).reduce(_ + _)
-    agg
-      .withColumn("terms_matched", matched.cast("long"))
-      .withColumn("total_dist", totalDist.cast("long"))
+        size(hits).cast("long").as("terms_matched"),
+        aggregate(hits, lit(0), _ + _).cast("long").as("total_dist"))
       .filter($"terms_matched" >= 1)
-      .select($"p_partkey", $"p_name", $"p_retailprice", $"terms_matched", $"total_dist")
       .orderBy($"terms_matched".desc, $"total_dist".asc, $"p_partkey")
       .limit(10)
   }
@@ -226,7 +218,10 @@ object Relational {
     * Returns the lowest key within the strongest tier present anywhere in
     * the catalog, as ONE scan: `orderBy(stage, p_partkey).limit(1)` is a
     * TakeOrderedAndProject, so the global min tier needs no aggregate and
-    * no broadcast join back. A blank query matches nothing. */
+    * no broadcast join back. The first two words are one array literal
+    * (tier 2 holds when the name contains each), so phrases of any word
+    * count share one compiled class; for one word, tier 2 is tier 1. A
+    * blank query matches nothing. */
   def checkStock(s: SparkSession, dir: String, query: String = "red bolt turbo"): DataFrame = {
     import s.implicits._
     val phrase = query.trim.toLowerCase
@@ -234,8 +229,8 @@ object Relational {
     val nm = lower($"p_name")
     val stage = words match {
       case Seq() => lit(null).cast("int")
-      case w0 +: rest => when(nm.contains(phrase), 1)
-        .when(rest.headOption.fold(lit(false))(w1 => nm.contains(w0) && nm.contains(w1)), 2)
+      case w0 +: _ => when(nm.contains(phrase), 1)
+        .when(forall(typedLit(words.take(2)), nm.contains(_)), 2)
         .when(nm.contains(w0), 3)
     }
     Tables.part(s, dir)
@@ -246,20 +241,25 @@ object Relational {
       .limit(1)
   }
 
+  /** `df` sorted in one partition, run as one job. For a result bounded
+    * by one customer: a range sort would sample split points in a job of
+    * its own (a second fact scan), and under AQE the one-partition
+    * exchange would be a job too. The scan before the exchange keeps its
+    * splits; `coalesce(1)` would funnel it through one task. */
+  private def sortedInOne(df: DataFrame, order: Column*): DataFrame =
+    GraftCheckpoint.nonAdaptive(df.repartition(1).sortWithinPartitions(order: _*))
+
   // R6 — per-user order history with items, newest first
-  // (db_service.py:155 get_user_orders + joinedload(items)).
+  // (db_service.py:155 get_user_orders + joinedload(items)). The tiny
+  // filtered orders side is broadcast into the fact scan (one job), and
+  // the customer's lines are sorted in one partition (one job).
   def userOrders(s: SparkSession, dir: String, custkey: Long = 42L): DataFrame = {
     import s.implicits._
     val o = Tables.orders(s, dir).filter($"o_custkey" === Param(custkey))
-    val li = Tables.lineitem(s, dir)
-    // orders side is tiny after the filter → broadcast it into the fact scan
-    li.join(broadcast(o), $"l_orderkey" === $"o_orderkey")
+    val lines = Tables.lineitem(s, dir).join(broadcast(o), $"l_orderkey" === $"o_orderkey")
       .select($"o_orderkey", $"o_orderdate", $"o_totalprice",
         $"l_linenumber", $"l_partkey", $"l_quantity", $"l_extendedprice")
-      // bounded by one customer's lines: sorting them in one partition
-      // skips the range sort's sampling job (a second fact scan)
-      .repartition(1)
-      .sortWithinPartitions($"o_orderdate".desc, $"o_orderkey", $"l_linenumber")
+    sortedInOne(lines, $"o_orderdate".desc, $"o_orderkey", $"l_linenumber")
   }
 
   // R6b — admin all-orders listing with nested items, newest first
@@ -291,14 +291,13 @@ object Relational {
 
   // R8 — cancel-eligible orders: only open statuses may be cancelled
   // (db_service.py:168 cancel_user_order: PENDING|PROCESSING ≈ 'O'|'P').
+  // One customer's orders, sorted in one partition: one job.
   def cancelEligible(s: SparkSession, dir: String, custkey: Long = 42L): DataFrame = {
     import s.implicits._
-    Tables.orders(s, dir)
+    sortedInOne(Tables.orders(s, dir)
       .filter($"o_custkey" === Param(custkey) && $"o_orderstatus".isin("O", "P"))
-      .select($"o_orderkey", $"o_orderstatus", $"o_totalprice", $"o_orderdate")
-      // bounded by one customer's orders: one-partition sort, no sampling job
-      .repartition(1)
-      .sortWithinPartitions($"o_orderkey")
+      .select($"o_orderkey", $"o_orderstatus", $"o_totalprice", $"o_orderdate"),
+      $"o_orderkey")
   }
 
   // R9 — top customers by lifetime revenue (admin customer oversight).

@@ -43,6 +43,11 @@ class OperatorSpec extends SparkSpecBase {
     assert(fuzzy == Relational.fuzzySearch(spark, sfDir, Seq("bolte", "gizmmo")).collect().toSeq)
   }
 
+  test("product and fuzzy search: an empty term list returns no rows") {
+    assert(Relational.productSearch(spark, sfDir, Seq()).collect().isEmpty)
+    assert(Relational.fuzzySearch(spark, sfDir, Seq()).collect().isEmpty)
+  }
+
   test("fuzzy search: a one-edit typo still finds the product") {
     // 'bolte' is one edit from 'bolt'; exact-token search returns nothing.
     val exact = Relational.productSearch(spark, sfDir, Seq("bolte")).count()
