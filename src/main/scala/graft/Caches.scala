@@ -34,19 +34,14 @@ object Caches {
     * SparkContext died (unpersist on a stopped context throws). */
   def reset(): Unit = registry.clear()
 
-  /** Session-aware deep clear for the Verify and perfbench harnesses (r12):
-    * `clearAll()` only unpersists REGISTERED SQL frames, but a completed
-    * query can leave other persisted RDDs behind — GraphX legs cache
-    * their final graph (staticPageRank's returned ranks, Pregel
-    * leftovers), and localCheckpoint frames pin their materialized
-    * partitions. Across bench reps those accumulate: measured at sf10,
-    * g_pagerank reps DEGRADED 149 → 294 s as leaked graphs filled the
-    * heap and GC pressure compounded. Between queries nothing in-flight
-    * references them (each queries(name) call derives fresh frames), so
-    * the harnesses drop everything still persisted. NOT for use inside
-    * operators — a mid-query clear would sever live localCheckpoint
-    * lineage (unpersisting a local checkpoint makes the frame
-    * unrecomputable). */
+  /** Session-aware deep clear for the Verify and perfbench harnesses:
+    * unpersists the registered frames and every RDD still persisted.
+    * Each iterative operator frees its own working set on return
+    * (`GraftCheckpoint.scoped`), keeping only what its answer reads; this
+    * sweep drops that between queries and stays as a backstop (leaked
+    * graphs and checkpoints once made g_pagerank's sf10 reps degrade
+    * 149 → 294 s). NOT for use inside operators — unpersisting a live
+    * local checkpoint makes its frame unrecomputable. */
   def clearAll(spark: org.apache.spark.sql.SparkSession): Unit = {
     clearAll()
     spark.sparkContext.getPersistentRDDs.values

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.execution.GraftCheckpoint
 import org.apache.spark.sql.functions._
 import graft.Tables
 
@@ -74,16 +75,17 @@ object Bpe {
     * per-round lineage like the PageRank loop. Symbols start as
     * characters plus the standard end-of-word marker so learned units
     * can't leak across word boundaries. */
-  private[graft] def bpeMergesOf(texts: DataFrame, nMerges: Int): DataFrame = {
+  private[graft] def bpeMergesOf(texts: DataFrame,
+      nMerges: Int): DataFrame = GraftCheckpoint.scoped { scope =>
     val s = texts.sparkSession
     import s.implicits._
-    var vocab: Dataset[(List[String], Long)] = texts
+    val state = scope.rounds()
+    var vocab: Dataset[(List[String], Long)] = state.checkpoint(texts
       .select(explode(split(lower(col("text")), " ")).as("w"))
       .filter(length($"w") > 0)
       .groupBy($"w").agg(count(lit(1)).as("cnt"))
       .as[(String, Long)]
-      .map { case (w, c) => (w.map(_.toString).toList :+ "</w>", c) }
-      .localCheckpoint()
+      .map { case (w, c) => (w.map(_.toString).toList :+ "</w>", c) })
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, String, Long)]
     var r = 1
     var done = false
@@ -99,8 +101,8 @@ object Bpe {
       else {
         val (a, b, c) = (best(0).getString(0), best(0).getString(1), best(0).getLong(2))
         merges += ((r, a, b, a + b, c))
-        vocab = vocab.map { case (syms, cnt) => (mergeOnce(syms, a, b), cnt) }
-          .localCheckpoint()
+        vocab = state.checkpoint(
+          vocab.map { case (syms, cnt) => (mergeOnce(syms, a, b), cnt) })
         r += 1
       }
     }

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.GraftCheckpoint
 import org.apache.spark.sql.functions._
 import graft.{Caches, Tables}
 import graft.operators.TextOps.h64
@@ -649,29 +650,26 @@ object Dedup {
 
   /** D7 core: components of an undirected pair list, joined back to the
     * full id universe (fixture-testable). */
-  private[graft] def dupClustersOf(ids: DataFrame, pairs: DataFrame): DataFrame = {
+  private[graft] def dupClustersOf(ids: DataFrame,
+      pairs: DataFrame): DataFrame = GraftCheckpoint.scoped { scope =>
     import ids.sparkSession.implicits._
-    val arcs = pairs.select($"doc_a".as("src"), $"doc_b".as("dst"))
-      .unionAll(pairs.select($"doc_b".as("src"), $"doc_a".as("dst")))
-      .localCheckpoint(eager = true)
-    var labels = arcs.select($"src".as("node")).distinct()
-      .select($"node", $"node".as("lbl"))
-      .localCheckpoint(eager = true)
+    val arcs = scope.checkpoint(pairs.select($"doc_a".as("src"), $"doc_b".as("dst"))
+      .unionAll(pairs.select($"doc_b".as("src"), $"doc_a".as("dst"))))
+    val state = scope.rounds()
+    var labels = state.checkpoint(arcs.select($"src".as("node")).distinct()
+      .select($"node", $"node".as("lbl")))
     var changed = 1L
     while (changed > 0) {
       val nbrMin = arcs.join(labels, $"dst" === $"node")
         .groupBy($"src").agg(min($"lbl").as("nlbl"))
-      // r17: the convergence test used to JOIN next back against labels
-      // (one extra join + count job per iteration). The new label is a
-      // pure function of the old row, so carry a changed flag through
-      // the same projection and count it off the checkpoint — identical
-      // label chain, identical change counts, one scan instead of a join.
+      // a changed flag rides the projection; the round's checkpoint pass
+      // counts it (observed, no job of its own)
       val next = labels.join(nbrMin, $"node" === $"src", "left")
         .withColumn("nlbl2", least($"lbl", coalesce($"nlbl", $"lbl")))
         .select($"node", $"nlbl2".as("newlbl"), ($"nlbl2" =!= $"lbl").as("chg"))
-        .localCheckpoint(eager = true)
-      changed = next.filter($"chg").count()
-      labels = next.select($"node", $"newlbl".as("lbl"))
+        .observe("dup_changed", count_if($"chg"))
+      labels = state.checkpoint(next).select($"node", $"newlbl".as("lbl"))
+      changed = next.queryExecution.observedMetrics("dup_changed").getLong(0)
     }
     ids.join(labels.select($"node".as("doc_id"), $"lbl"), Seq("doc_id"), "left")
       .select($"doc_id", coalesce($"lbl", $"doc_id").as("cluster_id"))

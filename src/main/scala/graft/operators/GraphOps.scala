@@ -137,14 +137,16 @@ object GraphOps {
     edges.queryExecution.optimizedPlan.stats.rowCount
       .map(_.toLong).getOrElse(edges.count())
 
-  /** Static PageRank ranks for an arbitrary canonical edge frame. */
-  private[graft] def pageRankOf(edges: DataFrame, iters: Int): DataFrame = {
-    val s = edges.sparkSession
-    import s.implicits._
-    val ranks = graphOf(edges).staticPageRank(iters).vertices
-    s.createDataFrame(ranks).toDF("part", "rank_raw")
-      .select($"part", round($"rank_raw", 6).as("rank"))
-  }
+  /** Static PageRank ranks for an arbitrary canonical edge frame; the
+    * answer keeps only the final rank vertices persisted. */
+  private[graft] def pageRankOf(edges: DataFrame, iters: Int): DataFrame =
+    GraftCheckpoint.scoped { scope =>
+      val s = edges.sparkSession
+      import s.implicits._
+      val ranks = scope.graph(graphOf(edges).staticPageRank(iters)).vertices
+      s.createDataFrame(ranks).toDF("part", "rank_raw")
+        .select($"part", round($"rank_raw", 6).as("rank"))
+    }
 
   // G5 — PageRank centrality over the co-purchase graph (GraphX). Hash-
   // matched since r6: the fixed-iteration update replays as a DuckDB
@@ -162,38 +164,35 @@ object GraphOps {
     * weight) edge frame: rank mass follows edge weight — msg = rank ·
     * w/wdeg(src) instead of rank/deg(src) — so a product co-purchased
     * 50× pulls proportionally more rank than a one-off pairing. Runs on
-    * GraphX (measured faster than a DataFrame fixpoint loop, SURVEY §5).
-    * Mirrors PageRank.runWithOptions' caching discipline; expression
-    * shapes (rank·(w/wdeg), 0.15 + (1.0-0.15)·Σ) match the recursive-CTE
-    * oracle bit-for-bit modulo 6dp-absorbed sum order. */
-  private[graft] def pageRankWeightedGX(edges: DataFrame, iters: Int): DataFrame = {
-    val s = edges.sparkSession
-    import s.implicits._
-    val g = graphOf(edges) // edge attr = weight, both arcs materialized
-    val wdeg = g.aggregateMessages[Long](
-      ctx => ctx.sendToSrc(ctx.attr), _ + _,
-      org.apache.spark.graphx.TripletFields.EdgeOnly)
-    var rank: Graph[Double, Double] = g
-      .outerJoinVertices(wdeg) { (_, _, d) => d.getOrElse(0L) }
-      .mapTriplets(e => e.attr.toDouble / e.srcAttr.toDouble,
-        org.apache.spark.graphx.TripletFields.Src)
-      .mapVertices((_, _) => 1.0)
-    rank.cache()
-    for (_ <- 0 until iters) {
-      val msgs = rank.aggregateMessages[Double](
-        ctx => ctx.sendToDst(ctx.srcAttr * ctx.attr), _ + _,
-        org.apache.spark.graphx.TripletFields.Src)
-      val prev = rank
-      rank = rank.outerJoinVertices(msgs) { (_, _, m) =>
-        0.15 + (1.0 - 0.15) * m.getOrElse(0.0)
-      }.cache()
-      rank.edges.foreachPartition(_ => ()) // materialize before unpersisting prev
-      prev.unpersistVertices(blocking = false)
-      prev.edges.unpersist(blocking = false)
+    * GraphX (measured faster than a DataFrame fixpoint loop, SURVEY §5);
+    * each iteration's graph is a round, as in PageRank.runWithOptions.
+    * Expression shapes (rank·(w/wdeg), 0.15 + (1.0-0.15)·Σ) match the
+    * recursive-CTE oracle bit-for-bit modulo 6dp-absorbed sum order. */
+  private[graft] def pageRankWeightedGX(edges: DataFrame, iters: Int): DataFrame =
+    GraftCheckpoint.scoped { scope =>
+      val s = edges.sparkSession
+      import s.implicits._
+      val g = graphOf(edges) // edge attr = weight, both arcs materialized
+      val wdeg = g.aggregateMessages[Long](
+        ctx => ctx.sendToSrc(ctx.attr), _ + _,
+        org.apache.spark.graphx.TripletFields.EdgeOnly)
+      val state = scope.rounds()
+      var rank: Graph[Double, Double] = state.graph(g
+        .outerJoinVertices(wdeg) { (_, _, d) => d.getOrElse(0L) }
+        .mapTriplets(e => e.attr.toDouble / e.srcAttr.toDouble,
+          org.apache.spark.graphx.TripletFields.Src)
+        .mapVertices((_, _) => 1.0))
+      for (_ <- 0 until iters) {
+        val msgs = rank.aggregateMessages[Double](
+          ctx => ctx.sendToDst(ctx.srcAttr * ctx.attr), _ + _,
+          org.apache.spark.graphx.TripletFields.Src)
+        rank = state.graph(rank.outerJoinVertices(msgs) { (_, _, m) =>
+          0.15 + (1.0 - 0.15) * m.getOrElse(0.0)
+        })
+      }
+      s.createDataFrame(rank.vertices).toDF("part", "rank_raw")
+        .select($"part", round($"rank_raw", 6).as("rank"))
     }
-    s.createDataFrame(rank.vertices).toDF("part", "rank_raw")
-      .select($"part", round($"rank_raw", 6).as("rank"))
-  }
 
   // G5b — weighted PageRank over the co-purchase graph (the edge weights
   // G1 computes finally drive the ranking).
@@ -504,15 +503,16 @@ object GraphOps {
   }
 
   /** Component sizes for an arbitrary canonical edge frame. */
-  private[graft] def connectedComponentsOf(edges: DataFrame): DataFrame = {
-    val s = edges.sparkSession
-    import s.implicits._
-    val cc = graphOf(edges).connectedComponents().vertices
-    s.createDataFrame(cc).toDF("part", "component")
-      .groupBy($"component")
-      .agg(count(lit(1)).as("size"))
-      .orderBy($"size".desc, $"component")
-  }
+  private[graft] def connectedComponentsOf(edges: DataFrame): DataFrame =
+    GraftCheckpoint.scoped { scope =>
+      val s = edges.sparkSession
+      import s.implicits._
+      val cc = scope.graph(graphOf(edges).connectedComponents()).vertices
+      s.createDataFrame(cc).toDF("part", "component")
+        .groupBy($"component")
+        .agg(count(lit(1)).as("size"))
+        .orderBy($"size".desc, $"component")
+    }
 
   // G6 — product communities: connected components + size (GraphX min-id
   // labels). Hash-matched since r6 via a min-label-propagation recursive
@@ -536,8 +536,8 @@ object GraphOps {
 
   /** G14 core over an arbitrary canonical edge frame (fixture-testable).
     *
-    * Delta-based peel: the arc frame is built once, persisted, and only
-    * ever SCANNED — per round the peeled nodes' neighbors lose exactly
+    * Delta-based peel: the arc frame is checkpointed once by its peel
+    * key and only ever SCANNED — per round the peeled nodes' neighbors lose exactly
     * their arcs into the peeled set, so the node-degree frame (the only
     * state that mutates, node-sized) updates from one arcs⋈bad join +
     * aggregate, localCheckpoint truncating its lineage. The naive form
@@ -547,22 +547,21 @@ object GraphOps {
     * the maintained degrees ARE the in-core degrees, so the output
     * needs no final arc pass. Rounds ≤ peel depth (corpus: 3–5);
     * `maxIters` bounds both the loop and the oracle's CTE replay. */
-  private[graft] def kCoreOf(edges: DataFrame, k: Int, maxIters: Int = 20): DataFrame = {
-    val s = edges.sparkSession
-    import s.implicits._
-    val ee = edges.select($"src", $"dst").filter($"src" =!= $"dst")
-    val arcs = ee.select($"src".as("a"), $"dst".as("b"))
-      .unionAll(ee.select($"dst".as("a"), $"src".as("b")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      var deg = arcs.groupBy($"a").agg(count(lit(1)).as("d")).localCheckpoint()
+  private[graft] def kCoreOf(edges: DataFrame, k: Int, maxIters: Int = 20): DataFrame =
+    GraftCheckpoint.scoped { scope =>
+      val s = edges.sparkSession
+      import s.implicits._
+      val ee = edges.select($"src", $"dst").filter($"src" =!= $"dst")
+      val arcs = scope.hold(partitionedCheckpoint(
+        ee.select($"src".as("a"), $"dst".as("b"))
+          .unionAll(ee.select($"dst".as("a"), $"src".as("b"))), "a"))
+      val degs = scope.rounds()
+      var deg = degs.checkpoint(arcs.groupBy($"a").agg(count(lit(1)).as("d")))
       var it = 0
       var converged = false
       while (!converged && it < maxIters) {
-        // r17: bad stays LAZY — it is a narrow filter over the already-
-        // checkpointed degree frame (node-sized, no shuffle), so its
-        // three consumers (emptiness probe, peel join, anti-join) re-run
-        // a cheap scan instead of paying a materialization job per round
+        // bad stays lazy: a narrow filter over the checkpointed degrees,
+        // cheap to rescan for each of its three consumers
         val bad = deg.filter($"d" < k).select($"a")
         if (bad.isEmpty) converged = true
         else {
@@ -570,10 +569,9 @@ object GraphOps {
           // (AQE broadcasts the bad side while it is small)
           val delta = arcs.join(bad, "a")
             .groupBy($"b").agg(count(lit(1)).as("lost"))
-          deg = deg.join(bad, Seq("a"), "left_anti")
+          deg = degs.checkpoint(deg.join(bad, Seq("a"), "left_anti")
             .join(delta.select($"b".as("a"), $"lost"), Seq("a"), "left")
-            .select($"a", ($"d" - coalesce($"lost", lit(0L))).as("d"))
-            .localCheckpoint()
+            .select($"a", ($"d" - coalesce($"lost", lit(0L))).as("d")))
           it += 1
         }
       }
@@ -581,8 +579,7 @@ object GraphOps {
         log.warn(s"g_kcore: peel did not reach fixpoint within $maxIters rounds" +
           " — result equals the oracle's bounded replay but is not the true core")
       deg.select($"a".as("part"), $"d".as("core_deg")).orderBy($"part")
-    } finally arcs.unpersist()
-  }
+    }
 
   /** Hop distances to landmarks for an arbitrary canonical edge frame —
     * frontier-iteration multi-source BFS (the recursive-CTE oracle
@@ -600,24 +597,23 @@ object GraphOps {
     * no row. Every structure is a flat keyed frame that spills under
     * pressure — no replicated per-vertex Map[landmark→dist] state. */
   private[graft] def shortestPathsOf(edges: DataFrame, nLandmarks: Int,
-      maxHops: Int = 8): DataFrame = {
+      maxHops: Int = 8): DataFrame = GraftCheckpoint.scoped { scope =>
     val s = edges.sparkSession
     import s.implicits._
-    val arcs = loopArcs(edges, withWeight = false)
+    val arcs = scope.hold(loopArcs(edges, withWeight = false))
     val landmarks = arcs.select($"src").distinct().as[Long]
       .orderBy($"src").limit(nLandmarks).collect().toSeq
-    var dist = landmarks.toDF("part")
-      .select($"part", $"part".as("landmark"), lit(0L).as("hops"))
-      .localCheckpoint(eager = true)
+    val (dists, fronts) = (scope.rounds(), scope.rounds())
+    var dist = dists.checkpoint(landmarks.toDF("part")
+      .select($"part", $"part".as("landmark"), lit(0L).as("hops")))
     var frontier = dist
     var hop = 1L
     while (hop <= maxHops && !frontier.isEmpty) {
-      val next = frontier.join(arcs, $"part" === $"src")
+      val next = fronts.checkpoint(frontier.join(arcs, $"part" === $"src")
         .select($"dst".as("part"), $"landmark").distinct()
         .join(dist.select($"part", $"landmark"), Seq("part", "landmark"), "left_anti")
-        .select($"part", $"landmark", Param(hop).as("hops"))
-        .localCheckpoint(eager = true)
-      dist = dist.unionAll(next).localCheckpoint(eager = true)
+        .select($"part", $"landmark", Param(hop).as("hops")))
+      dist = dists.checkpoint(dist.unionAll(next))
       frontier = next
       hop += 1
     }
@@ -652,30 +648,28 @@ object GraphOps {
   }
 
   private[graft] def weightedPathsOf(edges: DataFrame, nLandmarks: Int,
-      maxIter: Int): DataFrame = {
+      maxIter: Int): DataFrame = GraftCheckpoint.scoped { scope =>
     val s = edges.sparkSession
     import s.implicits._
     val cost = expr("cast(1000000 as bigint) div weight")
-    // src-partitioned (r9): each of the maxIter relaxation rounds joins
-    // on src — the checkpointed layout turns those into frontier-only
-    // shuffles instead of re-exchanging 2|E| arcs per round
-    val arcs = partitionedCheckpoint(
+    // src-partitioned: each relaxation round joins on src, so only the
+    // node-sized distance frame shuffles
+    val arcs = scope.hold(partitionedCheckpoint(
       edges.select($"src", $"dst", cost.as("cost"))
         .unionAll(edges.select($"dst".as("src"), $"src".as("dst"), cost.as("cost"))),
-      "src", sorted = true)
+      "src", sorted = true))
     // same landmark choice as G8: smallest nLandmarks node ids
     val landmarks = arcs.select($"src").distinct().as[Long]
       .orderBy($"src").limit(nLandmarks).collect().toSeq
-    var dist = landmarks.toDF("landmark")
-      .select($"landmark", $"landmark".as("part"), lit(0L).as("wcost"))
-      .localCheckpoint(eager = true)
+    val dists = scope.rounds()
+    var dist = dists.checkpoint(landmarks.toDF("landmark")
+      .select($"landmark", $"landmark".as("part"), lit(0L).as("wcost")))
     for (_ <- 1 to maxIter) {
       val relaxed = dist.join(arcs, dist("part") === arcs("src"))
         .select(dist("landmark"), arcs("dst").as("part"),
           (dist("wcost") + arcs("cost")).as("wcost"))
-      dist = dist.unionAll(relaxed)
-        .groupBy($"landmark", $"part").agg(min($"wcost").as("wcost"))
-        .localCheckpoint(eager = true)
+      dist = dists.checkpoint(dist.unionAll(relaxed)
+        .groupBy($"landmark", $"part").agg(min($"wcost").as("wcost")))
     }
     dist
   }
@@ -726,60 +720,50 @@ object GraphOps {
     * Brandes sum (GDS's samplingSize semantics; no n/|S| extrapolation,
     * so the number is comparable across runs with the same sample). */
   private[graft] def betweennessOf(edges: DataFrame, nSources: Int,
-      maxDepth: Int): DataFrame = {
+      maxDepth: Int): DataFrame = GraftCheckpoint.scoped { scope =>
     val s = edges.sparkSession
     import s.implicits._
-    val arcs = loopArcs(edges, withWeight = false)
+    val arcs = scope.hold(loopArcs(edges, withWeight = false))
     val sources = arcs.select($"src").distinct().as[Long]
       .orderBy($"src").limit(nSources).collect().toSeq
-    // ---- forward: levels with shortest-path counts
-    var frontier = sources.toDF("s")
-      .select($"s", $"s".as("v"), lit(1L).as("sigma"), lit(0).as("dist"))
-      .localCheckpoint(eager = true)
+    // ---- forward: levels with shortest-path counts (all kept for later)
+    var frontier = scope.checkpoint(sources.toDF("s")
+      .select($"s", $"s".as("v"), lit(1L).as("sigma"), lit(0).as("dist")))
     var levels = Vector(frontier)
-    var visited = frontier.select($"s", $"v").localCheckpoint(eager = true)
+    val seen = scope.rounds()
+    var visited = seen.checkpoint(frontier.select($"s", $"v"))
     var d = 1
     var frontierEmpty = false // seed frontier is non-empty by construction
     while (d <= maxDepth && !frontierEmpty) {
-      val next = frontier.join(arcs, $"v" === $"src")
+      val next = scope.checkpoint(frontier.join(arcs, $"v" === $"src")
         .groupBy($"s", $"dst").agg(sum($"sigma").as("sigma"))
         .select($"s", $"dst".as("v"), $"sigma")
         .join(visited, Seq("s", "v"), "left_anti")
-        .select($"s", $"v", $"sigma", Param(d).as("dist"))
-        .localCheckpoint(eager = true)
-      // r17: one emptiness probe per level, not two — the old loop asked
-      // isEmpty here AND again at the while-condition on the same frame
+        .select($"s", $"v", $"sigma", Param(d).as("dist")))
+      // one emptiness probe per level
       frontierEmpty = next.isEmpty
       if (!frontierEmpty) {
         levels = levels :+ next
-        visited = visited.unionAll(next.select($"s", $"v"))
-          .localCheckpoint(eager = true)
+        visited = seen.checkpoint(visited.unionAll(next.select($"s", $"v")))
       }
       frontier = next
       d += 1
     }
     // ---- backward: dependency accumulation, deepest level first
     val maxLev = levels.length - 1
-    var deltas = levels(maxLev)
-      .select($"s", $"v", $"sigma", lit(0.0).as("delta"))
-      .localCheckpoint(eager = true)
+    var deltas = scope.checkpoint(levels(maxLev)
+      .select($"s", $"v", $"sigma", lit(0.0).as("delta")))
     var acc = deltas
     for (lev <- (maxLev - 1) to 0 by -1) {
       // predecessors of w: the arcs INTO w — but the frame is MIRRORED
       // (loopArcs), so {src = w}.dst is the identical neighbor set as
-      // {dst = w}.src. Joining on src (r10, VERDICT r9 #3) rides the
-      // checkpoint's hashpartitioning(src): only the level-sized delta
-      // frame shuffles, where the dst-keyed join re-exchanged all 2|E|
-      // arcs at EVERY backward level (the bulk of the 349 s sf10 cost).
-      // r18: 3 joins/level → 2. The old backward level inner-joined the
-      // contributions onto levels(lev) and then LEFT-joined the result
-      // back onto levels(lev) to backfill delta = 0 rows. The backfill
-      // now rides the SAME aggregation as a union of zero terms: every
-      // real term is strictly positive (σ, σw ≥ 1, δw ≥ 0), and IEEE
-      // x + 0.0 == x for finite x ≥ 0, so summing {0.0} ∪ terms in any
-      // partial order is bit-identical to coalesce(Σ terms, 0.0); σ is
-      // an exact BIGINT equal on every row of a (s, v) group, so
-      // max(σ) ≡ the joined σ. One (s, v)-keyed join removed per level.
+      // {dst = w}.src, and joining on src rides the checkpoint's
+      // hashpartitioning(src): only the level-sized delta frame shuffles.
+      // The delta = 0 backfill rides the same aggregation as a union of
+      // zero terms: every real term is strictly positive (σ, σw ≥ 1,
+      // δw ≥ 0) and IEEE x + 0.0 == x, so summing {0.0} ∪ terms in any
+      // order is bit-identical to coalesce(Σ terms, 0.0); σ is an exact
+      // BIGINT equal on every row of a (s, v) group, so max(σ) ≡ σ.
       val terms = deltas // rows at lev+1: (s, w, σw, δw)
         .select($"s", $"v".as("w"), $"sigma".as("sw"), $"delta".as("dw"))
         .join(arcs, $"w" === $"src")
@@ -788,13 +772,12 @@ object GraphOps {
         .select($"s", $"v", $"sigma",
           ($"sigma".cast("double") / $"sw".cast("double") *
             (lit(1.0) + $"dw")).as("term"))
-      deltas = levels(lev)
+      deltas = scope.checkpoint(levels(lev)
         .select($"s", $"v", $"sigma", lit(0.0).as("term"))
         .unionAll(terms)
         .groupBy($"s", $"v")
         .agg(max($"sigma").as("sigma"), sum($"term").as("delta"))
-        .select($"s", $"v", $"sigma", $"delta")
-        .localCheckpoint(eager = true)
+        .select($"s", $"v", $"sigma", $"delta"))
       acc = acc.unionAll(deltas)
     }
     acc.filter($"v" =!= $"s")
@@ -833,16 +816,17 @@ object GraphOps {
 
   /** GraphX leg of G7 — kept for the regime where the replicated
     * per-vertex neighbor sets fit memory (see triangleCountOf's gate). */
-  private[graft] def triangleCountGraphX(edges: DataFrame): DataFrame = {
-    val s = edges.sparkSession
-    import s.implicits._
-    val tc = graphOf(edges)
-      .partitionBy(PartitionStrategy.RandomVertexCut)
-      .triangleCount().vertices
-      .mapValues(_.toLong)
-    s.createDataFrame(tc).toDF("part", "triangles")
-      .orderBy($"part")
-  }
+  private[graft] def triangleCountGraphX(edges: DataFrame): DataFrame =
+    GraftCheckpoint.scoped { scope =>
+      val s = edges.sparkSession
+      import s.implicits._
+      val tc = scope.graph(graphOf(edges)
+        .partitionBy(PartitionStrategy.RandomVertexCut)
+        .triangleCount()).vertices
+        .mapValues(_.toLong)
+      s.createDataFrame(tc).toDF("part", "triangles")
+        .orderBy($"part")
+    }
 
   /** DataFrame leg of G7 — the compact-forward / degree-oriented exact
     * triangle count (Latapy 2008, the standard external-memory-friendly
@@ -1027,28 +1011,25 @@ object GraphOps {
     * localCheckpoint truncates lineage like the PageRank loop. Votes are
     * BIGINT weight sums — no float drift between engines.
     *
-    * The arc frame is repartitioned by `src` BEFORE the checkpoint (the
-    * pprOf/hitsOf join-order lesson): every per-round join then reuses
-    * that hashpartitioning and shuffles only the node-sized label frame,
-    * never the 2|E| mirrored arcs (at sf10 that per-round arc shuffle
-    * was 240M rows × 5 rounds — the r8 bench's heavy tail). The argmax
+    * The arc frame is checkpointed partitioned by `src`: every per-round
+    * join reuses that layout and shuffles only the node-sized label
+    * frame, never the 2|E| mirrored arcs. The argmax
     * is a hash AGGREGATION, not a sort window: min(struct(-vote, lbl))
     * has the identical (vote DESC, lbl ASC) ordering but combines
     * map-side, so the second shuffle carries one row per (dst, lbl)
     * rather than sorting whole per-node vote groups. */
-  private[graft] def communitiesOf(edges: DataFrame, iters: Int): DataFrame = {
+  private[graft] def communitiesOf(edges: DataFrame,
+      iters: Int): DataFrame = GraftCheckpoint.scoped { scope =>
     val s = edges.sparkSession
     import s.implicits._
-    val arcs = loopArcs(edges, withWeight = true)
-    var labels = arcs.select($"src".as("v")).distinct()
-      .select($"v", $"v".as("lbl")).localCheckpoint(eager = true)
-    // checkpoint every SECOND round: the label frame is consumed exactly
-    // once per round (the next vote join), so chaining two rounds into
-    // one lazy plan is bit-identical and drops one node-sized
-    // materialization job per skipped round. Plan depth is bounded at two
-    // rounds per checkpoint, so neither planning time nor the
-    // checkpoint-stats compounding hazard (checkpointFlat scaladoc: it
-    // needs state referenced >1× per round to bite) can grow.
+    val arcs = scope.hold(loopArcs(edges, withWeight = true))
+    val state = scope.rounds()
+    var labels = state.checkpoint(arcs.select($"src".as("v")).distinct()
+      .select($"v", $"v".as("lbl")))
+    // checkpoint every SECOND round: the label frame is consumed once per
+    // round, so chaining two rounds into one lazy plan is bit-identical
+    // and saves a job; plan depth stays bounded, and the stats hazard
+    // (flatStats) needs state referenced >1× per round to bite
     for (i <- 0 until iters) {
       val votes = arcs.join(labels, $"src" === $"v")
         .groupBy($"dst", $"lbl").agg(sum($"weight").as("vote"))
@@ -1057,7 +1038,7 @@ object GraphOps {
         .agg(min(struct((-$"vote").as("nv"), $"lbl".as("lbl"))).as("m"))
         .select($"dst".as("v"), $"m.lbl".as("lbl"))
       if (i % 2 == 1 || i == iters - 1)
-        labels = labels.localCheckpoint(eager = true)
+        labels = state.checkpoint(labels)
     }
     labels
   }
@@ -1129,71 +1110,61 @@ object GraphOps {
     * 1.0/|S| and 0.15·pv are single IEEE divisions/products written
     * identically by the oracle. */
   private[graft] def pprOf(edges: DataFrame, seedIds: DataFrame,
-      iters: Int): DataFrame = {
+      iters: Int): DataFrame = GraftCheckpoint.scoped { scope =>
     val s = edges.sparkSession
     import s.implicits._
     val arcs = edges.select($"src", $"dst")
       .unionAll(edges.select($"dst".as("src"), $"src".as("dst")))
     val deg = arcs.groupBy($"src").agg(count(lit(1)).as("deg"))
-    val seeds = deg.select($"src".as("v"))
-      .join(broadcast(seedIds.select($"pk".as("v"))), Seq("v"), "semi")
-      .localCheckpoint(eager = true)
+    val seeds = scope.checkpoint(deg.select($"src".as("v"))
+      .join(broadcast(seedIds.select($"pk".as("v"))), Seq("v"), "semi"))
     val nSeeds = seeds.count()
-    if (nSeeds == 0) // no in-graph seed (or empty graph): empty relation,
-      return deg.select($"src".as("part"), lit(0.0).as("ppr")).limit(0)
-    val pv = 1.0 / nSeeds
-    val verts = deg.select($"src".as("v"))
-      .join(seeds.withColumn("sd", lit(true)), Seq("v"), "left")
-      .select($"v", when($"sd", lit(pv)).otherwise(lit(0.0)).as("pv"))
-      .localCheckpoint(eager = true)
-    // Per round: ONE keyed join + ONE narrow-key agg + a BROADCAST
-    // teleport attach. The teleport term 0.15·pv is nonzero only on the
-    // seed set (≈ one customer's parts), so it never needs a vertex-wide
-    // join or a widened group key — the tiny seed frame broadcasts and
-    // the add happens map-side. Bitwise identical to the oracle's
-    // 0.15·pv + 0.85·Σ: non-seeds compute 0.15·0.0 + x ≡ 0.0 + x there
-    // and coalesce(null→0.0) + x here — the same IEEE sum. Every vertex
-    // of the mirrored graph has in-arcs, so the message agg covers the
-    // whole vertex set each round (no left-join backfill). The arc
-    // frame goes through partitionedCheckpoint (r9: a bare
-    // localCheckpoint under AQE records UnknownPartitioning and every
-    // round re-shuffled the arcs — the join-order comment here used to
-    // claim otherwise) so per-round joins shuffle only the node-sized
-    // rank frame. rdeg = 1.0/deg is PRECOMPUTED on the arc frame (r9,
-    // ADVICE r8): the oracle's darcs carries rdeg = 1.0/COUNT(...) and
-    // sums r * rdeg, so the loop below multiplies by the same
-    // reciprocal — term-for-term IEEE-identical, no division-vs-
-    // reciprocal ulp gap (and one divide per arc per round becomes a
-    // multiply).
-    val arcsD = partitionedCheckpoint(
-      arcs.join(deg, "src")
-        .select($"src", $"dst", (lit(1.0) / $"deg").as("rdeg")), "src",
-      sorted = true)
-    val tp = 0.15 * pv // one IEEE product, the oracle's 0.15 * pv.pv
-    val seedTp = seeds.select($"v".as("dst"), lit(tp).as("tp"))
-    var ranks = verts.select($"v", $"pv".as("rank"))
-      .localCheckpoint(eager = true)
-    // r17: rank state is consumed once per round, so checkpoint every
-    // SECOND round (the communitiesOf cadence argument) — bit-identical,
-    // one node-sized materialization job saved per skipped round.
-    for (i <- 0 until iters) {
-      ranks = arcsD.join(ranks, $"src" === $"v")
-        .groupBy($"dst")
-        .agg(sum($"rank" * $"rdeg").as("msg"))
-        .join(broadcast(seedTp), Seq("dst"), "left")
-        .select($"dst".as("v"),
-          (coalesce($"tp", lit(0.0)) + lit(0.85) * $"msg").as("rank"))
-      if (i % 2 == 1 || i == iters - 1)
-        ranks = ranks.localCheckpoint(eager = true)
+    if (nSeeds == 0) // no in-graph seed (or empty graph): empty relation
+      deg.select($"src".as("part"), lit(0.0).as("ppr")).limit(0)
+    else {
+      val pv = 1.0 / nSeeds
+      val verts = scope.checkpoint(deg.select($"src".as("v"))
+        .join(seeds.withColumn("sd", lit(true)), Seq("v"), "left")
+        .select($"v", when($"sd", lit(pv)).otherwise(lit(0.0)).as("pv")))
+      // Per round: ONE keyed join + ONE narrow-key agg + a BROADCAST
+      // teleport attach. The teleport term 0.15·pv is nonzero only on the
+      // seed set, so the tiny seed frame broadcasts and the add happens
+      // map-side. Bitwise identical to the oracle's 0.15·pv + 0.85·Σ:
+      // non-seeds compute 0.15·0.0 + x ≡ 0.0 + x there and
+      // coalesce(null→0.0) + x here. Every vertex of the mirrored graph has
+      // in-arcs, so the message agg covers the whole vertex set each round.
+      // The src-partitioned arc checkpoint keeps per-round joins to the
+      // node-sized rank frame. rdeg = 1.0/deg rides the arcs exactly as the
+      // oracle's darcs carries it, so the loop multiplies by the same
+      // reciprocal — term-for-term IEEE-identical.
+      val arcsD = scope.hold(partitionedCheckpoint(
+        arcs.join(deg, "src")
+          .select($"src", $"dst", (lit(1.0) / $"deg").as("rdeg")), "src",
+        sorted = true))
+      val tp = 0.15 * pv // one IEEE product, the oracle's 0.15 * pv.pv
+      val seedTp = seeds.select($"v".as("dst"), lit(tp).as("tp"))
+      val state = scope.rounds()
+      var ranks = state.checkpoint(verts.select($"v", $"pv".as("rank")))
+      // rank state is consumed once per round: checkpoint every SECOND
+      // round (the communitiesOf cadence argument), bit-identical
+      for (i <- 0 until iters) {
+        ranks = arcsD.join(ranks, $"src" === $"v")
+          .groupBy($"dst")
+          .agg(sum($"rank" * $"rdeg").as("msg"))
+          .join(broadcast(seedTp), Seq("dst"), "left")
+          .select($"dst".as("v"),
+            (coalesce($"tp", lit(0.0)) + lit(0.85) * $"msg").as("rank"))
+        if (i % 2 == 1 || i == iters - 1)
+          ranks = state.checkpoint(ranks)
+      }
+      ranks.select($"v".as("part"), round($"rank", 6).as("ppr"))
     }
-    ranks.select($"v".as("part"), round($"rank", 6).as("ppr"))
   }
 
-  /** GraphX aggregateMessages twin of pprOf (r9): PPR is PageRank with
-    * a seed-biased teleport — primitive-double messages, ONE
-    * send/reduce per round — exactly the regime where GraphX beats the
-    * checkpointed-DF loop (the r9 control measurement: PageRank GX
-    * 16.5 s vs DF 25.9 s at sf1, 77-104 s vs 326 s at sf10). Identical
+  /** GraphX aggregateMessages twin of pprOf: PPR is PageRank with a
+    * seed-biased teleport — primitive-double messages, ONE send/reduce
+    * per round — the regime where GraphX beats the checkpointed-DF loop
+    * (PageRank GX 16.5 s vs DF 25.9 s at sf1). Identical
     * update arithmetic: edge attr rdeg = 1.0/deg(src), vertex update
     * tp + 0.85·Σ(rank·rdeg) with tp = 0.15·pv folded once (the pprOf
     * broadcast-teleport shape — the seed set rides a broadcast
@@ -1201,37 +1172,34 @@ object GraphOps {
     * leg only in fp association order — G5's 6dp-absorbed class
     * (GraphSpec pins leg identity). */
   private[graft] def pprGX(edges: DataFrame, seedIds: DataFrame,
-      iters: Int): DataFrame = {
+      iters: Int): DataFrame = GraftCheckpoint.scoped { scope =>
     val s = edges.sparkSession
     import s.implicits._
     val seedSet = seedIds.select($"pk").as[Long].collect().toSet
-    val g = graphOf(edges)
+    val g = scope.graph(graphOf(edges))
     val bSeeds = s.sparkContext.broadcast(seedSet)
     val nSeeds = g.vertices.filter { case (vid, _) => bSeeds.value(vid) }.count()
-    if (nSeeds == 0)
-      return Seq.empty[(Long, Double)].toDF("part", "ppr")
-    val pv = 1.0 / nSeeds
-    val tp = 0.15 * pv // one IEEE product, the pprOf/oracle shape
-    var rank: Graph[Double, Double] = g
-      .outerJoinVertices(g.outDegrees) { (_, _, d) => d.getOrElse(0) }
-      .mapTriplets(e => 1.0 / e.srcAttr,
-        org.apache.spark.graphx.TripletFields.Src)
-      .mapVertices((vid, _) => if (bSeeds.value(vid)) pv else 0.0)
-    rank.cache()
-    for (_ <- 0 until iters) {
-      val msgs = rank.aggregateMessages[Double](
-        ctx => ctx.sendToDst(ctx.srcAttr * ctx.attr), _ + _,
-        org.apache.spark.graphx.TripletFields.Src)
-      val prev = rank
-      rank = rank.outerJoinVertices(msgs) { (vid, _, m) =>
-        (if (bSeeds.value(vid)) tp else 0.0) + 0.85 * m.getOrElse(0.0)
-      }.cache()
-      rank.edges.foreachPartition(_ => ()) // materialize before unpersist
-      prev.unpersistVertices(blocking = false)
-      prev.edges.unpersist(blocking = false)
+    if (nSeeds == 0) Seq.empty[(Long, Double)].toDF("part", "ppr")
+    else {
+      val pv = 1.0 / nSeeds
+      val tp = 0.15 * pv // one IEEE product, the pprOf/oracle shape
+      val state = scope.rounds()
+      var rank: Graph[Double, Double] = state.graph(g
+        .outerJoinVertices(g.outDegrees) { (_, _, d) => d.getOrElse(0) }
+        .mapTriplets(e => 1.0 / e.srcAttr,
+          org.apache.spark.graphx.TripletFields.Src)
+        .mapVertices((vid, _) => if (bSeeds.value(vid)) pv else 0.0))
+      for (_ <- 0 until iters) {
+        val msgs = rank.aggregateMessages[Double](
+          ctx => ctx.sendToDst(ctx.srcAttr * ctx.attr), _ + _,
+          org.apache.spark.graphx.TripletFields.Src)
+        rank = state.graph(rank.outerJoinVertices(msgs) { (vid, _, m) =>
+          (if (bSeeds.value(vid)) tp else 0.0) + 0.85 * m.getOrElse(0.0)
+        })
+      }
+      s.createDataFrame(rank.vertices).toDF("part", "raw")
+        .select($"part", round($"raw", 6).as("ppr"))
     }
-    s.createDataFrame(rank.vertices).toDF("part", "raw")
-      .select($"part", round($"raw", 6).as("ppr"))
   }
 
   /** Gate for G16 (r9): GraphX in the primitive-message at-memory
@@ -1251,11 +1219,10 @@ object GraphOps {
     * convention), so the corpus hash-matches a recursive-CTE replay and
     * re-runs are reproducible without seeds-in-files.
     *
-    * INDEXED SELECTION, not candidate scoring (r9): the r8 form hashed
-    * every (walk, neighbor) pair and aggregated an argmin — |frontier|
-    * × deg rows of md5 per hop (888M at sf10 — the measured 355 s
-    * bound was hashing, not shuffling). Picking by index needs ONE
-    * hash per (walk, step) and ZERO candidate expansion: the frontier
+    * INDEXED SELECTION, not candidate scoring: scoring every (walk,
+    * neighbor) pair costs |frontier| × deg md5 hashes per hop, where
+    * picking by index needs ONE hash per (walk, step) and ZERO candidate
+    * expansion: the frontier
     * joins the per-node sorted adjacency array (src-partitioned, built
     * once beside the arcs) and `element_at` reads the chosen neighbor
     * in place. Per hop: one frontier-sized shuffle, |frontier| hashes.
@@ -1263,36 +1230,34 @@ object GraphOps {
     * bound the old expansion paid deg times over). localCheckpoint per
     * hop (iterative-DF discipline). */
   private[graft] def randomWalksOf(edges: DataFrame, nWalks: Int,
-      steps: Int): DataFrame = {
+      steps: Int): DataFrame = GraftCheckpoint.scoped { scope =>
     val s = edges.sparkSession
     import s.implicits._
-    // r17: the mirrored arc frame is consumed ONCE (building adj), so the
-    // loopArcs checkpoint bought no reuse — one arc-sized materialization
-    // + exchange removed; the adjacency checkpoint is the loop's layout.
+    // the mirrored arcs are consumed once (building adj): the adjacency
+    // checkpoint is the loop's layout
     val base = edges.select($"src", $"dst")
       .unionAll(edges.select($"dst".as("src"), $"src".as("dst")))
     // sorted adjacency arrays, partitioned like the arcs: the per-hop
     // join shuffles only the frontier
-    val adj = partitionedCheckpoint(
+    val adj = scope.hold(partitionedCheckpoint(
       base.groupBy($"src")
         .agg(sort_array(collect_list($"dst")).as("nbrs"),
-          count(lit(1)).as("deg")), "src", sorted = true)
+          count(lit(1)).as("deg")), "src", sorted = true))
     val verts = adj.select($"src".as("v"))
-    var cur = verts
+    // every hop stays: the walk corpus reads them all
+    var cur = scope.checkpoint(verts
       .select($"v".as("start"),
         explode(sequence(lit(0), lit(nWalks - 1))).as("walk"),
         lit(0).as("step"), $"v".as("node"))
-      .select($"start", $"walk".cast("long").as("walk"), $"step", $"node")
-      .localCheckpoint(eager = true)
+      .select($"start", $"walk".cast("long").as("walk"), $"step", $"node"))
     var acc = cur
     for (st <- 1 to steps) {
-      cur = cur.join(adj, $"node" === $"src")
+      cur = scope.checkpoint(cur.join(adj, $"node" === $"src")
         .withColumn("r", graft.operators.TextOps.h64(concat(
           lit("w:"), $"start".cast("string"), lit(":"),
           $"walk".cast("string"), lit(":"), lit(st).cast("string"))) % $"deg")
         .select($"start", $"walk", lit(st).as("step"),
-          element_at($"nbrs", ($"r" + 1).cast("int")).as("node"))
-        .localCheckpoint(eager = true)
+          element_at($"nbrs", ($"r" + 1).cast("int")).as("node")))
       acc = acc.unionByName(cur)
     }
     acc
@@ -1318,10 +1283,8 @@ object GraphOps {
     * candidate `common` (dst ∈ N(start) by construction) — uniform,
     * node2vec's first-step contract, with no special case.
     *
-    * IN-ROW KERNEL, not candidate expansion (r9): the first form
-    * expanded |frontier|·deg candidate rows per hop and paid two
-    * (start, walk)-keyed sort windows plus a (prev, dst) membership
-    * shuffle over them — 134.8 s at sf1. Here each frontier row picks
+    * IN-ROW KERNEL, not candidate expansion (|frontier|·deg rows, two
+    * sort windows and a membership shuffle per hop): each frontier row picks
     * in place via the codegen'd Node2VecPick merge-walk over the two
     * sorted adjacency arrays (N(node) scanned, N(prev) co-walked for
     * the common test — both ascending, one O(deg) pass, identical
@@ -1329,39 +1292,37 @@ object GraphOps {
     * node-keyed frontier-sized joins against the src-partitioned
     * adjacency frame, |frontier| hashes, no window, no expansion. */
   private[graft] def node2vecWalksOf(edges: DataFrame, nWalks: Int,
-      steps: Int, wReturn: Long, wCommon: Long, wOut: Long): DataFrame = {
+      steps: Int, wReturn: Long, wCommon: Long,
+      wOut: Long): DataFrame = GraftCheckpoint.scoped { scope =>
     val s = edges.sparkSession
     import s.implicits._
-    // r17: same single-consumer argument as randomWalksOf — skip the
-    // loopArcs checkpoint, aggregate the lazy mirror straight into adj.
+    // single-consumer arcs, as in randomWalksOf
     val base = edges.select($"src", $"dst")
       .unionAll(edges.select($"dst".as("src"), $"src".as("dst")))
-    val adj = partitionedCheckpoint(
+    val adj = scope.hold(partitionedCheckpoint(
       base.groupBy($"src")
         .agg(sort_array(collect_list($"dst")).as("nbrs")), "src",
-      sorted = true)
+      sorted = true))
     val verts = adj.select($"src".as("v"))
-    var cur = verts
+    var cur = scope.checkpoint(verts
       .select($"v".as("start"),
         explode(sequence(lit(0), lit(nWalks - 1))).as("walk"),
         lit(0).as("step"), $"v".as("node"), $"v".as("prev"))
       .select($"start", $"walk".cast("long").as("walk"), $"step",
-        $"node", $"prev")
-      .localCheckpoint(eager = true)
+        $"node", $"prev"))
     var acc = cur.select($"start", $"walk", $"step", $"node")
     for (st <- 1 to steps) {
       val h = graft.operators.TextOps.h64(concat(
         lit("n2v:"), $"start".cast("string"), lit(":"),
         $"walk".cast("string"), lit(":"), lit(st).cast("string")))
-      cur = cur
+      cur = scope.checkpoint(cur
         .join(adj, $"node" === $"src").drop("src")
         .join(adj.select($"src".as("pv2"), $"nbrs".as("nprev")),
           $"prev" === $"pv2")
         .select($"start", $"walk", lit(st).as("step"),
           graft.functions.GraftFunctions.node2vecPick(
             $"nbrs", $"nprev", $"prev", h, wReturn, wCommon, wOut).as("node"),
-          $"node".as("prev"))
-        .localCheckpoint(eager = true)
+          $"node".as("prev")))
       acc = acc.unionByName(cur.select($"start", $"walk", $"step", $"node"))
     }
     acc
@@ -1406,52 +1367,42 @@ object GraphOps {
     * Per round: two keyed shuffles of node-sized frames against the
     * cached arc list + two 1-row max aggs broadcast back;
     * localCheckpoint truncates lineage (the iterative-DF discipline). */
-  private[graft] def hitsOf(ed: DataFrame, iters: Int): DataFrame = {
+  private[graft] def hitsOf(ed: DataFrame,
+      iters: Int): DataFrame = GraftCheckpoint.scoped { scope =>
     val s = ed.sparkSession
     import s.implicits._
-    // one arc copy PER JOIN KEY, each pre-partitioned and checkpointed
-    // via partitionedCheckpoint (r9: a bare repartition+localCheckpoint
-    // loses its partitioning under AQE): the per-round joins then
-    // shuffle only the node-sized score frames, never the arc list
-    val edU = partitionedCheckpoint(ed.select($"u", $"p"), "u", sorted = true)
-    val edP = partitionedCheckpoint(ed.select($"u", $"p"), "p", sorted = true)
-    var hub = edU.select($"u".as("id")).distinct()
-      .withColumn("v", lit(1.0)).localCheckpoint(eager = true)
-    var auth = edP.select($"p".as("id")).distinct()
-      .withColumn("v", lit(1.0)).localCheckpoint(eager = true)
+    // one arc copy PER JOIN KEY, each a partitionedCheckpoint: the
+    // per-round joins shuffle only the node-sized score frames
+    val edU = scope.hold(partitionedCheckpoint(ed.select($"u", $"p"), "u", sorted = true))
+    val edP = scope.hold(partitionedCheckpoint(ed.select($"u", $"p"), "p", sorted = true))
+    // two rounds live per side: a round's raw frame is still read by the
+    // other side's next-round job, which runs beside this side's next one
+    val (hubs, auths) = (scope.rounds(keep = 2), scope.rounds(keep = 2))
+    var hub = hubs.checkpoint(edU.select($"u".as("id")).distinct()
+      .withColumn("v", lit(1.0)))
+    var auth = auths.checkpoint(edP.select($"p".as("id")).distinct()
+      .withColumn("v", lit(1.0)))
     for (_ <- 0 until iters) {
-      // r17 (guide §2.6): the Jacobi update's two legs are independent —
-      // rawA reads only hub_t, rawH only auth_t — so their eager
-      // materializations are submitted concurrently instead of back to
-      // back; the scheduler backfills the second job into the first
-      // job's straggler tail. Results are the exact same frames (each
-      // job's internal reduction order is untouched), only the driver's
-      // submission order changes.
+      // the Jacobi update's two legs are independent (rawA reads only
+      // hub_t, rawH only auth_t), so their checkpoints run concurrently;
+      // each job's reduction order, and so each frame, is unchanged
       import scala.concurrent.{Await, Future}
       import scala.concurrent.ExecutionContext.Implicits.global
       import scala.concurrent.duration.Duration
       val (hubT, authT) = (hub, auth)
-      val fA = Future {
-        edU.join(hubT.select($"id".as("u"), $"v"), "u")
-          .groupBy($"p").agg(sum($"v").as("raw"))
-          .localCheckpoint(eager = true) // feeds the max agg AND the divide
+      val fA = Future { // feeds the max agg AND the divide
+        auths.checkpoint(edU.join(hubT.select($"id".as("u"), $"v"), "u")
+          .groupBy($"p").agg(sum($"v").as("raw")))
       }
       val fH = Future {
-        edP.join(authT.select($"id".as("p"), $"v"), "p")
-          .groupBy($"u").agg(sum($"v").as("raw"))
-          .localCheckpoint(eager = true)
+        hubs.checkpoint(edP.join(authT.select($"id".as("p"), $"v"), "p")
+          .groupBy($"u").agg(sum($"v").as("raw")))
       }
       val rawA = Await.result(fA, Duration.Inf)
       val rawH = Await.result(fH, Duration.Inf)
-      // r17: the normalized frames stay LAZY — each is consumed exactly
-      // once (the next round's join; the final round's auth by the
-      // contract projection), so an eager checkpoint here bought no
-      // reuse and cost one materialization job per frame per round
-      // (2 × iters jobs, measured 88 jobs → 52 at sf0.1). Lineage stays
-      // bounded: the division hangs one broadcast-scalar node off the
-      // ALREADY-checkpointed raw frame, so plan depth per round is
-      // constant and the BigInt stats hazard (checkpointFlat scaladoc)
-      // cannot compound — rawA/rawH reset the chain every round.
+      // the normalized frames stay lazy: each is consumed once, and the
+      // division hangs one broadcast scalar off the checkpointed raw
+      // frame, so plan depth per round is constant (no flatStats needed)
       auth = rawA.crossJoin(broadcast(rawA.agg(max($"raw").as("mx"))))
         .select($"p".as("id"), ($"raw" / $"mx").as("v"))
       hub = rawH.crossJoin(broadcast(rawH.agg(max($"raw").as("mx"))))
@@ -1511,32 +1462,29 @@ object GraphOps {
   // register-merges per round regardless of ball size. Spark-native:
   // the sketch column is a datasketches HLL binary via the codegen'd
   // hll_sketch_agg / hll_union_agg built-ins; each node's ball flows
-  // OUT along its arcs (join on src — the key the loopArcs checkpoint
-  // is partitioned on, so only the node-sized ball frame shuffles per
-  // round, the same contract as every iterative loop here); per-round
-  // total = one sum over node rows. lgConfigK=8 (256 registers,
-  // ~6.5% per-node rel. err — errors average out in the sum; HyperANF
-  // itself ran coarser) keeps the shuffled sketch payload ~300 B/arc (HLL_8 updatable form: 2^lgK register bytes + header).
+  // OUT along its arcs (join on src, the loopArcs checkpoint's key, so
+  // only the node-sized ball frame shuffles per round); per-round total
+  // = one sum over node rows. lgConfigK=8 (256 registers, ~6.5% per-node
+  // rel. err, averaging out in the sum) keeps the sketch ~300 B/arc.
   // Register merge is per-register max — commutative/associative — so
   // the profile is deterministic under any partitioning; estimates are
   // floats ⇒ rows-only (spec: exact on a coupon-mode fixture, ≡ exact
   // BFS closure within tolerance on the sf graph, monotone, n²
   // fixpoint on a connected graph).
   private[graft] def reachProfileOf(edges: DataFrame, iters: Int,
-      lgConfigK: Int = 8): DataFrame = {
+      lgConfigK: Int = 8): DataFrame = GraftCheckpoint.scoped { scope =>
     val s = edges.sparkSession
     import s.implicits._
-    val arcs = loopArcs(edges, withWeight = false)
-    var balls = partitionedCheckpoint(
+    val arcs = scope.hold(loopArcs(edges, withWeight = false))
+    val state = scope.rounds()
+    var balls = state.hold(partitionedCheckpoint(
       arcs.select($"src".as("v")).distinct()
-        .groupBy($"v").agg(hll_sketch_agg($"v", lgConfigK).as("sk")), "v")
+        .groupBy($"v").agg(hll_sketch_agg($"v", lgConfigK).as("sk")), "v"))
     // per-round scalars in ONE pass: the pair-count estimate plus an
-    // exact register-state checksum — sketch binaries are deterministic,
-    // so checksum equality across rounds means every ball is literally
-    // unchanged (a true fixpoint, not an estimate coincidence)
-    // bit_xor, not sum: a long SUM of per-node hashes overflows ANSI-mode
-    // BIGINT; XOR is order-independent, closed on longs, and equality is
-    // all the fixpoint test needs
+    // exact register-state checksum (sketch binaries are deterministic, so
+    // equal checksums mean every ball is unchanged: a true fixpoint).
+    // bit_xor, not sum: a long SUM overflows ANSI-mode BIGINT, and XOR is
+    // order-independent
     def scalars(b: DataFrame): (Double, Long) = {
       val r = b.agg(sum(hll_sketch_estimate($"sk")).cast("double"),
         expr("bit_xor(xxhash64(v, sk))")).first()
@@ -1549,28 +1497,22 @@ object GraphOps {
     var t = 1
     var converged = false
     while (t <= iters && !converged) {
-      val nxt = partitionedCheckpoint(
+      balls = state.hold(partitionedCheckpoint(
         arcs.join(balls.select($"v".as("src"), $"sk"), "src")
           .select($"dst".as("v"), $"sk")
           .unionAll(balls.select($"v", $"sk"))
-          .groupBy($"v").agg(graft.functions.GraftFunctions.hllRegMaxUnion($"sk", lgConfigK).as("sk")), "v")
-      GraftCheckpoint.release(balls) // loop discipline: one live frame
-      balls = nxt
+          .groupBy($"v").agg(graft.functions.GraftFunctions.hllRegMaxUnion($"sk", lgConfigK).as("sk")), "v"))
       val (est, chk) = scalars(balls)
       rows += ((t, est, est - prev))
       // HyperANF's own stopping rule: past the diameter every union is a
       // no-op — once the register state repeats, all later rounds are
       // bit-identical, so emit them as rows WITHOUT paying the joins
-      // (at sf10 the graph converges by t≈3 while the contract asks 6:
-      // the skipped rounds were ~1/3 of the 411 s first measurement)
       converged = chk == prevChk
       prev = est
       prevChk = chk
       t += 1
     }
     while (t <= iters) { rows += ((t, prev, 0.0)); t += 1 }
-    GraftCheckpoint.release(balls)
-    GraftCheckpoint.release(arcs)
     s.createDataFrame(rows.toSeq).toDF("t", "est_pairs", "delta_pairs")
       .select($"t", round($"est_pairs", 3).as("est_pairs"),
         round($"delta_pairs", 3).as("delta_pairs"))
@@ -1604,23 +1546,24 @@ object GraphOps {
   // is a no-op and every delta is 0, so converged rounds add nothing
   // and the loop stops paying for them.
   private[graft] def harmonicAllOf(edges: DataFrame, iters: Int,
-      lgConfigK: Int = 8): DataFrame = {
+      lgConfigK: Int = 8): DataFrame = GraftCheckpoint.scoped { scope =>
     val s = edges.sparkSession
     import s.implicits._
-    val arcs = loopArcs(edges, withWeight = false)
-    var balls = partitionedCheckpoint(
+    val arcs = scope.hold(loopArcs(edges, withWeight = false))
+    val state = scope.rounds()
+    var balls = state.hold(partitionedCheckpoint(
       arcs.select($"src".as("v")).distinct()
         .groupBy($"v").agg(hll_sketch_agg($"v", lgConfigK).as("sk"))
         .select($"v", $"sk",
           hll_sketch_estimate($"sk").cast("double").as("est"),
-          lit(0.0).as("h")), "v")
+          lit(0.0).as("h")), "v"))
     def chk(b: DataFrame): Long =
       b.agg(expr("bit_xor(xxhash64(v, sk))")).first().getLong(0)
     var prevChk = chk(balls)
     var t = 1
     var converged = false
     while (t <= iters && !converged) {
-      val nxt = partitionedCheckpoint(
+      balls = state.hold(partitionedCheckpoint(
         arcs.join(balls.select($"v".as("src"), $"sk"), "src")
           .select($"dst".as("v"), $"sk")
           .unionAll(balls.select($"v", $"sk"))
@@ -1630,17 +1573,12 @@ object GraphOps {
           .select($"v", $"sk",
             hll_sketch_estimate($"sk").cast("double").as("est"), $"pe", $"h")
           .select($"v", $"sk", $"est",
-            ($"h" + greatest(($"est" - $"pe") / t, lit(0.0))).as("h")), "v")
-      GraftCheckpoint.release(balls) // loop discipline: one live frame
-      balls = nxt
+            ($"h" + greatest(($"est" - $"pe") / t, lit(0.0))).as("h")), "v"))
       val c = chk(balls)
       converged = c == prevChk
       prevChk = c
       t += 1
     }
-    GraftCheckpoint.release(arcs)
-    // the final checkpoint stays persisted — the returned frame reads it
-    // (the iterative-loop contract everywhere here; harnesses clearAll)
     balls.select($"v",
         round($"est" - 1.0, 3).as("reach"), // ball minus self
         round($"h", 6).as("harmonic"))
@@ -1725,20 +1663,18 @@ object GraphOps {
   // stay-first, smallest community label); gains are 6dp-rounded doubles
   // computed in ONE expression shared verbatim with the oracle and
   // normalized (+0.0) so no −0.0 can order differently across engines.
-  // Synchronous local moves admit swap 2-cycles — two nodes adopting
-  // each other's community in the same sweep, forever (the design notes
-  // traced both the singleton-singleton form AND a community-level form
-  // on the bridged-triangle fixture; the Lu-Halappanavar-Kalyanaraman
-  // 2015 "minimum labeling" guard kills only the first). The fix here
-  // is DIRECTION ALTERNATION: even sweeps may only adopt communities
+  // Synchronous local moves admit swap 2-cycles — two nodes (or whole
+  // communities) adopting each other's community in the same sweep,
+  // forever; Lu-Halappanavar-Kalyanaraman 2015's "minimum labeling"
+  // guard kills only the singleton form. The fix here is DIRECTION
+  // ALTERNATION: even sweeps may only adopt communities
   // with SMALLER labels, odd sweeps only LARGER (stay is always
   // allowed). A swap needs two opposite-direction moves in ONE sweep,
   // so no 2-cycle of any class can form; every merge is still reachable
   // (down-moves one sweep, up-moves the next), and the restriction is a
   // pure per-candidate predicate — deterministic, oracle-replayable,
-  // free. Measured on the bridged-triangle fixture: the guarded
-  // single-direction variant oscillated {5,6} forever; alternation
-  // reaches the ideal two-triangle partition at sweep 4 and holds it.
+  // free (on the bridged-triangle fixture it reaches the two-triangle
+  // partition at sweep 4 and holds it).
   //
   // Scale shape per sweep (= LPA's contract): k_{v,c} is the vote join —
   // node-sized labels shuffled to the src-partitioned arc checkpoint,
@@ -1762,146 +1698,119 @@ object GraphOps {
 
   /** The G24 sweep loop, returning (labels, sweeps actually executed).
     *
-    * Early exit (r16, VERDICT r15 #4): general EVEN-PERIOD cycle
-    * detection with exact fast-forward. The synchronous update is a
-    * deterministic map of (labeling, sweep parity), so if the state
-    * after sweep i equals the state after sweep j with i−j EVEN (same
-    * parity phase), every later sweep replays the window [j, i) forever
-    * — the budget's final state is state(j + ((budget − j) mod (i−j))),
-    * which the loop already holds. Returning exactly that frame keeps
-    * the truncated loop bit-identical to the full chain, so the oracle
-    * keeps replaying the full fixed chain and hash-match is preserved
-    * by construction. This subsumes the converged case (s_{i} = s_{i−1}
-    * = s_{i−2} is a period-2 cycle) AND the oscillation class a plain
-    * no-move rule misses: measured at sf0.001, the corpus labeling
-    * never reaches a fixpoint — from sweep ~20 a ~6-node limit cycle
-    * keeps moved > 0 forever (budgets 40 and 100 both ran to the end)
-    * — so a fixpoint-only exit would never fire on real
-    * corpora. Odd-period matches are ignored: the parity phase differs,
-    * so recurrence is not implied.
+    * Early exit: EVEN-PERIOD cycle detection with exact fast-forward.
+    * The synchronous update is a deterministic map of (labeling, sweep
+    * parity), so if the state after sweep i equals the state after sweep
+    * j with i−j EVEN, every later sweep replays the window [j, i) — the
+    * budget's final state is state(j + ((budget − j) mod (i−j))), which
+    * the loop already holds. Returning exactly that frame keeps the
+    * truncated loop bit-identical to the full chain the oracle replays.
+    * This covers the converged case (a period-2 cycle) AND limit cycles
+    * a no-move rule misses (the sf0.001 corpus labeling never reaches a
+    * fixpoint). Odd-period matches are ignored: the parity phase
+    * differs, so recurrence is not implied.
     *
-    * State identity is the G21 register-checksum pattern: one
-    * bit_xor(xxhash64(v, lbl)) scan of the eager-checkpointed label
-    * frame per sweep (node-sized, order-independent, no long-SUM
-    * ANSI-overflow risk); the detection window keeps the last
-    * `cycleWindow` checkpointed frames alive, which is the loop's
-    * existing memory profile (every sweep's checkpoint lives until the
-    * session clears anyway). `earlyExit = false` runs every sweep — the
+    * State identity is the G21 register-checksum pattern: each sweep's
+    * bit_xor(xxhash64(v, lbl)), observed on the sweep's own checkpoint
+    * pass (node-sized, order-independent, no long-SUM ANSI-overflow
+    * risk, no job of its own). The detection window keeps the last
+    * `cycleWindow` sweeps' checkpoints alive; older sweeps are freed as
+    * the loop goes. `earlyExit = false` runs every sweep — the
     * full-chain reference the specs hold the exit to. */
   private[graft] def louvainCounted(edges: DataFrame, sweeps: Int,
       degOverride: Option[DataFrame] = None,
       mOverride: Option[Double] = None,
       earlyExit: Boolean = true, cycleWindow: Int = 12): (DataFrame, Int) = {
-    val st = louvainSetup(edges, degOverride, mOverride)
-    var labels = st.init
-    def chkOf(df: DataFrame): Long = {
-      val r = df.agg(expr("bit_xor(xxhash64(v, lbl))")).first()
-      if (r.isNullAt(0)) 0L else r.getLong(0)
-    }
-    // (post-sweep index, checksum, frame) for the last `cycleWindow` sweeps
-    var hist = Vector.empty[(Int, Long, DataFrame)]
-    var result: Option[DataFrame] = None
     var executed = 0
-    var i = 0
-    while (i < sweeps && result.isEmpty) {
-      labels = louvainSweep(st, labels, i)
-      // periodic stats reset (see flatStats) — bounds the checkpoint
-      // stats compounding without paying the Row round-trip every sweep
-      if ((i + 1) % flatEvery == 0) labels = flatStats(labels)
-      executed += 1
-      if (earlyExit) {
-        val chk = chkOf(labels)
-        hist.find { case (j, cj, fj) =>
-          // r17 (ADVICE r16 #1): checksum equality is 64-bit evidence,
-          // not proof — CONFIRM the matched pair exactly before
-          // committing the fast-forward. Both frames carry exactly one
-          // row per node, so equal cardinality + empty one-way exceptAll
-          // ⇔ identical labelings. Fires at most once per run (and only
-          // on the first true match), so the extra scan is negligible;
-          // on a collision the loop just keeps sweeping — the oracle's
-          // full-chain behavior.
-          cj == chk && (executed - j) % 2 == 0 &&
-            labels.exceptAll(fj).isEmpty
-        }.foreach { case (j, _, _) =>
-          val p = executed - j
-          // s_budget = s_{j + ((budget − j) mod p)}; the target index is
-          // always in [j, executed), i.e. inside the retained window
-          val target = j + ((sweeps - j) % p)
-          result = Some(hist.find(_._1 == target).get._3)
+    val answer = GraftCheckpoint.scoped { scope =>
+      val st = louvainSetup(scope, edges, degOverride, mOverride)
+      // the window plus the sweep being matched against it
+      val state = scope.rounds(keep = cycleWindow + 1)
+      var labels = st.init
+      // (post-sweep index, checksum, frame) for the last `cycleWindow` sweeps
+      var hist = Vector.empty[(Int, Long, DataFrame)]
+      var result: Option[DataFrame] = None
+      var i = 0
+      while (i < sweeps && result.isEmpty) {
+        val (next, chk) = louvainSweep(st, state, labels, i)
+        labels = next
+        // periodic stats reset: bounds the stats compounding (flatStats)
+        if ((i + 1) % flatEvery == 0) labels = flatStats(labels)
+        executed += 1
+        if (earlyExit) {
+          hist.find { case (j, cj, fj) =>
+            // checksum equality is 64-bit evidence, not proof: confirm the
+            // pair exactly (one row per node in both, so an empty one-way
+            // exceptAll ⇔ identical labelings); on a collision the loop
+            // keeps sweeping, the oracle's full-chain behavior
+            cj == chk && (executed - j) % 2 == 0 &&
+              labels.exceptAll(fj).isEmpty
+          }.foreach { case (j, _, _) =>
+            val p = executed - j
+            // s_budget = s_{j + ((budget − j) mod p)}; the target index is
+            // always in [j, executed), i.e. inside the retained window
+            val target = j + ((sweeps - j) % p)
+            result = Some(hist.find(_._1 == target).get._3)
+          }
+          hist = (hist :+ ((executed, chk, labels))).takeRight(cycleWindow)
         }
-        hist = (hist :+ ((executed, chk, labels))).takeRight(cycleWindow)
+        i += 1
       }
-      i += 1
+      result.getOrElse(labels)
     }
-    (result.getOrElse(labels), executed)
+    (answer, executed)
   }
 
-  /** localCheckpoint + STATS RESET (r16). Dataset.localCheckpoint copies
-    * the optimized plan's statistics into the checkpointed LogicalRDD,
-    * so an iterative loop whose next round references its state frame k
-    * times COMPOUNDS sizeInBytes k-fold per round: the stat is a BigInt
-    * of ~k^round digits, and past ~12 Louvain sweeps (k≈4) the DRIVER
-    * livelocks in BigInteger.multiply during planning — measured:
-    * digits 57→262→1080→4351→17438 across budgets 2→10, and a
-    * budget-40 run burned 18 CPU-min inside ToomCook3 without finishing
-    * sweep ~15. Rebuilding the frame
-    * from the checkpointed RDD resets stats to the scan default; result
-    * frames are plan-independent (hash-match unaffected), runtime
-    * broadcast decisions stay with AQE, and the node-sized Row
-    * conversion is noise next to the sweep's arc join. The fixed-budget
-    * loops (5 sweeps, k^5 digits) never tripped this — the r16
-    * early-exit makes LARGE budgets meaningful, so the loop now has to
-    * survive them. */
-  private[graft] def checkpointFlat(df: DataFrame): DataFrame =
-    flatStats(df.localCheckpoint(eager = true))
-
-  /** Stats reset on an ALREADY-checkpointed frame (no second
-    * checkpoint): rebuild from the checkpointed RDD. The Row round-trip
-    * is paid once per consumption of THIS frame, so the loops apply it
-    * every [[flatEvery]] sweeps rather than every sweep — digit growth
-    * between flattens is bounded (≤ 4^flatEvery × base ≈ a few hundred
-    * digits, BigInt-cheap) and the conversion overhead amortizes to
-    * ~1/flatEvery of the r16-initial every-sweep form (which cost the
-    * 5-sweep entry ~16%: builder g_louvain 13.0 → 15.1 s before this
-    * amortization). */
+  /** Stats reset on an already-checkpointed frame. Dataset.localCheckpoint
+    * copies the optimized plan's statistics into the LogicalRDD, so a
+    * loop whose next round references its state frame k times COMPOUNDS
+    * sizeInBytes k-fold per round: a BigInt of ~k^round digits, and past
+    * ~12 Louvain sweeps (k≈4) the driver livelocks in
+    * BigInteger.multiply during planning (a budget-40 run burned 18
+    * CPU-min without finishing sweep ~15). Rebuilding the frame from the
+    * checkpointed RDD resets stats to the scan default; results are
+    * plan-independent and runtime broadcast decisions stay with AQE.
+    * The Row round-trip is paid once per consumption of this frame, so
+    * the loops apply it every [[flatEvery]] sweeps: digit growth between
+    * flattens stays ≤ 4^flatEvery × base, BigInt-cheap. */
   private[graft] def flatStats(ck: DataFrame): DataFrame =
     ck.sparkSession.createDataFrame(ck.rdd, ck.schema)
 
   private[graft] val flatEvery = 4
 
   /** Shared per-level frames for the sweep loop. `m` is the total edge
-    * weight as ONE driver double (r17): it is a single scalar consumed
-    * only inside gain expressions, so collecting it once at setup and
-    * inlining `lit(m)` removes the per-sweep broadcast-aggregate subquery
-    * (2 AQE stages × sweeps) the old 1-row `crossJoin(broadcast(mDf))`
-    * form paid — same IEEE double, same expression shape, bit-identical
-    * gains (guide §2.4: the cheapest exchange is the one not planned). */
+    * weight as ONE driver double, collected once at setup: a scalar
+    * consumed only inside gain expressions, so `lit(m)` plans no
+    * per-sweep broadcast-aggregate subquery. */
   private[graft] case class LouvainFrames(arcs: DataFrame, deg: DataFrame,
       m: Double, init: DataFrame)
 
-  private def louvainSetup(edges: DataFrame,
+  private def louvainSetup(scope: GraftCheckpoint.Scope, edges: DataFrame,
       degOverride: Option[DataFrame],
       mOverride: Option[Double]): LouvainFrames = {
     val s = edges.sparkSession
     import s.implicits._
-    val arcs = loopArcs(edges, withWeight = true)
-    val deg = partitionedCheckpoint(
+    val arcs = scope.hold(loopArcs(edges, withWeight = true))
+    val deg = scope.hold(partitionedCheckpoint(
       degOverride.map(_.select($"v", $"kv")).getOrElse(
         arcs.groupBy($"src".as("v")).agg(sum($"weight").as("kv"))), "v",
-      sorted = true)
+      sorted = true))
     val m = mOverride.getOrElse {
       val r = edges.agg(sum($"weight").cast("double").as("m")).first()
       if (r.isNullAt(0)) 0.0 else r.getDouble(0) // empty graph: no gain row ever evaluates
     }
-    val init = checkpointFlat(deg.select($"v", $"v".as("lbl")))
+    val init = flatStats(scope.checkpoint(deg.select($"v", $"v".as("lbl"))))
     LouvainFrames(arcs, deg, m, init)
   }
 
   /** ONE synchronous ΔQ sweep (parity `i` sets the direction-alternation
-    * predicate) — the body documented at G24 above, unchanged by the r16
-    * refactor (extracted so the trace monitor reuses it verbatim). */
-  private def louvainSweep(st: LouvainFrames, labels: DataFrame,
-      i: Int): DataFrame = {
+    * predicate), documented at G24: the labels, a round of `state`, and
+    * their bit_xor(xxhash64(v, lbl)) (0 when empty) observed on the
+    * checkpoint pass. Every node has its own stay candidate, so
+    * `coalesce(c, v)` is `c`, and the schema equals `init`'s, nullability
+    * included: every sweep shares one set of generated classes. */
+  private def louvainSweep(st: LouvainFrames, state: GraftCheckpoint.Rounds,
+      labels: DataFrame, i: Int): (DataFrame, Long) = {
     val s = labels.sparkSession
     import s.implicits._
     val kt = labels.join(st.deg, "v").groupBy($"lbl")
@@ -1909,13 +1818,10 @@ object GraphOps {
     val kvc = st.arcs.join(labels, $"src" === $"v")
       .groupBy($"dst", $"lbl").agg(sum($"weight").as("kvc"))
       .select($"dst".as("v"), $"lbl".as("c"), $"kvc")
-    // r17: no (v, c) dedup before the argmax. The only duplicate the
-    // union can create is the stay row (v, cur, 0) colliding with a real
-    // (v, cur, kvc ≥ 1) vote; gain is strictly increasing in kvc with
-    // (v, c) fixed, and both rows carry the same (nc, c) tie-break, so
-    // the min-struct argmax below already selects exactly the row the
-    // old groupBy(v, c).agg(max(kvc)) kept — bit-identical labels, one
-    // exchange per sweep removed (guide §2.4).
+    // no (v, c) dedup before the argmax: the only duplicate is the stay
+    // row (v, cur, 0) beside a real (v, cur, kvc ≥ 1) vote, gain grows
+    // with kvc, and both carry the same (nc, c) tie-break, so the
+    // min-struct argmax keeps the row a max(kvc) dedup would
     val cand = kvc
       .unionByName(labels.select($"v", $"lbl".as("c"), lit(0L).as("kvc")))
     val m = lit(st.m)
@@ -1931,17 +1837,18 @@ object GraphOps {
               .cast("double") / (lit(2.0) * m)) *
             ($"kv".cast("double") / m), 6) + lit(0.0)).as("gain"),
         when($"c" === $"cur", 0).otherwise(1).as("nc"))
-    sc.groupBy($"v")
+    val sweep = sc.groupBy($"v")
       .agg(min(struct((-$"gain").as("ng"), $"nc".as("nc"), $"c".as("c")))
         .as("b"))
-      .select($"v", $"b.c".as("lbl"))
-      .localCheckpoint(eager = true)
+      .select($"v", coalesce($"b.c", $"v").as("lbl"))
+      .observe("louvain_chk", expr("bit_xor(xxhash64(v, lbl))"))
+    val ck = state.checkpoint(sweep)
+    val chk = sweep.queryExecution.observedMetrics("louvain_chk")
+    (ck, if (chk.isNullAt(0)) 0L else chk.getLong(0))
   }
 
-  // G24c — per-sweep Louvain convergence readout (`g_louvain_trace`,
-  // r16, VERDICT r15 #4's second half): the monitor a user gates sweep
-  // budgets on. One row per BUDGETED sweep (no early exit — the monitor
-  // exists to SHOW the fixpoint, so it always runs the full chain):
+  // G24c — per-sweep Louvain convergence readout (`g_louvain_trace`):
+  // one row per BUDGETED sweep (no early exit: it SHOWS the fixpoint):
   //   moved = #nodes whose label changed in this sweep (exact BIGINT);
   //   q     = Newman-Girvan modularity of the post-sweep labeling.
   // Float discipline: every per-sweep statistic collected off the
@@ -1950,21 +1857,20 @@ object GraphOps {
   // so the trace sums the EXACT integer pieces instead and forms
   //   q = sw/m − sk2/(4m²)
   // in ONE engine-side double expression, 6dp-rounded, +0.0-normalized).
-  // Cost: each sweep pays its vote join plus two tag joins for the
-  // statistics — ~2-3× louvainOf, which is why the monitor is its own
-  // entry and not a default column. Σ k_tot² needs DECIMAL(38,0) sums
-  // past ~10¹⁸ total weighted degree (≈100 TB corpus scale); BIGINT is
-  // exact through sf10's 2m ≈ 2.4·10⁸.
+  // Each sweep pays two tag joins on top of its vote join (~2-3×
+  // louvainOf), so the monitor is its own entry. BIGINT Σ k_tot² is exact
+  // through ~10¹⁸ total weighted degree (sf10's 2m ≈ 2.4·10⁸).
   private[graft] def louvainTraceOf(edges: DataFrame,
-      sweeps: Int): DataFrame = {
+      sweeps: Int): DataFrame = GraftCheckpoint.scoped { scope =>
     val s = edges.sparkSession
     import s.implicits._
-    val st = louvainSetup(edges, None, None)
+    val st = louvainSetup(scope, edges, None, None)
+    val state = scope.rounds(keep = 2) // `moved` compares two sweeps
     var labels = st.init
     val stats = scala.collection.mutable.ArrayBuffer.empty[(Int, Long, Long, Long)]
     for (i <- 0 until sweeps) {
       val prev = labels
-      labels = louvainSweep(st, labels, i)
+      labels = louvainSweep(st, state, labels, i)._1
       if ((i + 1) % flatEvery == 0) labels = flatStats(labels)
       val moved = labels
         .join(prev.select($"v", $"lbl".as("plbl")), "v")
@@ -2021,25 +1927,17 @@ object GraphOps {
   // on the FULL edge frame + one keyed aggregation (the G23 tagging
   // shape) — linear in arcs, same class as one sweep's vote join — and
   // the level-2 sweeps then run on the strictly smaller coarse graph.
-  // Measured (sf10, the entry timed alone, min-of-2): one level 441.7 s,
-  // two levels 1233.5 s — the added level costs ~1.8× level 1, dominated
-  // by the contraction joins and checkpoints over the 119M-arc frame, NOT by
-  // the coarse sweeps. Final mapping composes the per-level labelings
-  // with community-keyed joins (node-sized).
+  // At sf10 the added level costs ~1.8× level 1, dominated by the
+  // contraction over the full arc frame, not the coarse sweeps. The final
+  // mapping composes the per-level labelings with node-sized joins.
   private[graft] def louvainLevelsOf(edges: DataFrame, sweeps: Int,
-      levels: Int): DataFrame = {
+      levels: Int): DataFrame = GraftCheckpoint.scoped { _ =>
     val s = edges.sparkSession
     import s.implicits._
     val mRow = edges.agg(sum($"weight").cast("double").as("m")).first()
     val m = if (mRow.isNullAt(0)) 0.0 else mRow.getDouble(0)
-    // r17: louvainOf already returns a CHECKPOINTED frame (every sweep's
-    // labels come out of localCheckpoint), so the extra eager checkpoints
-    // the r15 shape stacked on assign/l2 were pure re-materializations;
-    // and e2 / the level composition are each consumed exactly once per
-    // level (e2 only feeds the next level's louvainSetup, whose loopArcs
-    // checkpoint materializes it inside its own arc layout), so their
-    // eager checkpoints bought no reuse either. Four materialization
-    // jobs removed per level; chain verified bit-identical at sf0.01.
+    // louvainOf returns checkpointed labels, and e2 and the composition
+    // are each consumed once per level, so nothing here checkpoints
     var assign = louvainOf(edges, sweeps)
     var curEdges = edges
     var curDeg = edges.select($"src".as("v"), $"weight")
@@ -2077,10 +1975,9 @@ object GraphOps {
 
   // G25 — FastRP node embeddings (Chen, Sultan, Tian, Chen, Skiena 2019,
   // "Fast and Accurate Network Embeddings via Very Sparse Random
-  // Projection"; gds.fastRP is Neo4j GDS's default embedder): the bridge
-  // the VERDICT r15 frontier list named — G18/G18b emit walk CORPORA,
-  // but nothing materialized graph structure into VECTORS the V-family
-  // can index. FastRP does it in closed form: a very sparse random
+  // Projection"; gds.fastRP is Neo4j GDS's default embedder): graph
+  // structure as VECTORS the V-family can index, where G18/G18b emit walk
+  // corpora. FastRP does it in closed form: a very sparse random
   // projection of the adjacency structure (init entries {+1, −1, 0}
   // with density 1/s, signs from a hash of (node, dim)), then a fixed
   // number of neighbor-averaging rounds, summed with per-round weights.
@@ -2099,33 +1996,26 @@ object GraphOps {
   // scalar, and every consumer here is cosine-based).
   //
   // Scale shape per round: ONE equi-join of the node-sized state frame
-  // against the src-partitioned arc checkpoint (arcs never re-shuffle),
-  // then ONE groupBy(dst) carrying `dim` columnar SUM aggregates —
-  // map-side combined, so the exchange is node-sized × dim regardless
-  // of arc count. The state rides as dim COLUMNS, not dim rows: the
-  // join ships one row per arc and the aggregation stays in whole-stage
-  // codegen — no explode on the hot path. localCheckpoint per round
-  // truncates lineage (the LPA/Louvain loop discipline).
+  // against the src-partitioned arc checkpoint, then ONE groupBy(dst)
+  // carrying `dim` columnar SUM aggregates, map-side combined: the
+  // exchange is node-sized × dim regardless of arc count, and the state
+  // rides as dim COLUMNS, so the aggregation stays in whole-stage
+  // codegen. A checkpoint per round truncates lineage.
   /** Column-form FastRP state: (v, x0 … x{dim−1}) all BIGINT. */
   private[graft] def fastRpCols(edges: DataFrame, dim: Int, rounds: Int,
-      scale: Long = 1000000L): DataFrame = {
+      scale: Long = 1000000L): DataFrame = GraftCheckpoint.scoped { scope =>
     val s = edges.sparkSession
     import s.implicits._
-    // r17: ONE arc-sized checkpoint instead of two. The old shape built
-    // loopArcs (checkpoint #1: mirror + repartition + materialize) and
-    // then re-checkpointed the same arcs joined with degree (#2). The
-    // mirror is a cheap union of two cached-edge scans, so derive both
-    // deg and the degree-annotated checkpoint straight from it — the
-    // only arc-sized materialization left is arcsD itself. Same rows,
-    // same partitioning, bit-identical chain.
+    // one arc-sized checkpoint: deg and the degree-annotated arcs both
+    // derive from the lazy mirror of the edge frame
     val base = edges.select($"src", $"dst")
       .unionAll(edges.select($"dst".as("src"), $"src".as("dst")))
     val deg = base.groupBy($"src").agg(count(lit(1)).as("deg"))
     // destination degree rides the arc checkpoint so the per-round agg
     // needs no post-agg join back to the degree frame
-    val arcsD = partitionedCheckpoint(
+    val arcsD = scope.hold(partitionedCheckpoint(
       base.join(deg.select($"src".as("dst"), $"deg".as("dd")), "dst"), "src",
-      sorted = true)
+      sorted = true))
     def initCol(k: Int) = {
       val h = TextOps.h64(concat(
         lit("frp:"), $"src".cast("string"), lit(":"), lit(k).cast("string")))
@@ -2134,19 +2024,18 @@ object GraphOps {
     }
     // node set = distinct mirrored sources ≡ the old deg keys, read off
     // the already-materialized checkpoint instead of a second deg pass
-    var x = arcsD.select($"src").distinct()
-      .select($"src".as("v") +: (0 until dim).map(initCol): _*)
-      .localCheckpoint(eager = true)
+    var x = scope.checkpoint(arcsD.select($"src").distinct()
+      .select($"src".as("v") +: (0 until dim).map(initCol): _*))
+    // every round after the init stays: the embedding sums them all
     val levels = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     for (_ <- 1 to rounds) {
       val sums = (0 until dim).map(k => sum(col(s"x$k")).as(s"s$k"))
-      x = arcsD.join(x, $"src" === $"v")
+      x = scope.checkpoint(arcsD.join(x, $"src" === $"v")
         .groupBy($"dst", $"dd")
         .agg(sums.head, sums.tail: _*)
         .select($"dst".as("v") +: (0 until dim).map(k =>
           floor(col(s"s$k").cast("double") / $"dd".cast("double"))
-            .cast("long").as(s"x$k")): _*)
-        .localCheckpoint(eager = true)
+            .cast("long").as(s"x$k")): _*))
       levels += x
     }
     levels.reduce(_ unionByName _)

@@ -75,7 +75,8 @@ object Relational {
   // asc. Each row is scored alone — one scan stage, no exchange, and the
   // top-k is TakeOrderedAndProject. That equals scoring per product
   // because p_partkey is the catalog key (mergeInto keeps it unique). The
-  // terms are one array literal, as in R2.
+  // terms are one array literal, as in R2. 0-match rows sort last, so they
+  // drop after the top-k, where no filter re-scores rows below the limit.
   def fuzzySearch(s: SparkSession, dir: String,
       terms: Seq[String] = Seq("bolte", "gizmmo"), maxDist: Int = 2): DataFrame = {
     import s.implicits._
@@ -88,9 +89,9 @@ object Relational {
       .select($"p_partkey", $"p_name", $"p_retailprice",
         size(hits).cast("long").as("terms_matched"),
         aggregate(hits, lit(0), _ + _).cast("long").as("total_dist"))
-      .filter($"terms_matched" >= 1)
       .orderBy($"terms_matched".desc, $"total_dist".asc, $"p_partkey")
       .limit(10)
+      .filter($"terms_matched" >= 1)
   }
 
   // R2c — BM25-scored product fulltext (neo4j_service.py:71-79: the

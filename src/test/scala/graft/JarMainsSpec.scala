@@ -5,8 +5,9 @@ import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 
 /** The library jar ships the query surface plus the `Verify` driver
-  * contract. Timing lives in perfbench/ and plan dumps in the test tree
-  * (`PlanDump`), so no other entry point may appear under src/main. */
+  * contract. Timing lives in perfbench/ and plan and storage dumps in the
+  * test tree (`PlanDump`, `StorageDump`), so no other entry point may
+  * appear under src/main. */
 class JarMainsSpec extends AnyFunSuite {
   test("src/main: graft.Verify is the only main") {
     val root = Paths.get("src/main/scala")

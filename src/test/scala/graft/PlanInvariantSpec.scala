@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.execution.{FilterExec, TakeOrderedAndProjectExec}
 import graft.operators.Relational
 
 /** Physical-plan invariants for the headline queries: the properties the
@@ -142,6 +143,13 @@ class PlanInvariantSpec extends SparkSpecBase {
       s"fuzzy search plans a non-equi join:\n$p")
     assert(!p.contains("Exchange"), s"fuzzy search shuffles:\n$p")
     assert(!p.contains("Aggregate"), s"fuzzy search aggregates:\n$p")
+    // the match filter is the plan's one filter and sits above the top-k,
+    // so no filter below it scores the rows a second time
+    val filters = SparkEntry.queries("q_fuzzy_search")(spark, sfDir)
+      .queryExecution.executedPlan.collect { case f: FilterExec => f }
+    assert(filters.size == 1 &&
+      filters.head.find(_.isInstanceOf[TakeOrderedAndProjectExec]).isDefined,
+      s"the filter does not sit above the top-k:\n$p")
   }
 
   test("v_chunk_recursive: joins stay keyed by doc_id, no nested loop") {

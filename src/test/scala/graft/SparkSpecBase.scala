@@ -39,6 +39,11 @@ trait SparkSpecBase extends AnyFunSuite with BeforeAndAfterAll {
     n.get
   }
 
+  /** The persisted RDDs holding blocks, by id: bytes held and whether
+    * each is a local checkpoint. */
+  protected def heldRdds: Map[Int, StorageDump.Held] =
+    StorageDump.held(spark.sparkContext).map(h => h.id -> h).toMap
+
   /** Classes janino compiles while `body` runs (codegen cache misses),
     * counted process-wide: specs run one at a time in the test JVM. */
   protected def compilesOf(body: => Any): Long = {
