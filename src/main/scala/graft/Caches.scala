@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.GraftCheckpoint
 import scala.collection.concurrent.TrieMap
 
 /** Scoped persist registry.
@@ -41,10 +42,11 @@ object Caches {
     * sweep drops that between queries and stays as a backstop (leaked
     * graphs and checkpoints once made g_pagerank's sf10 reps degrade
     * 149 → 294 s). NOT for use inside operators — unpersisting a live
-    * local checkpoint makes its frame unrecomputable. */
+    * local checkpoint makes its frame unrecomputable. Local checkpoints
+    * are freed without `RDD.unpersist`'s truncated-lineage warning. */
   def clearAll(spark: org.apache.spark.sql.SparkSession): Unit = {
     clearAll()
     spark.sparkContext.getPersistentRDDs.values
-      .foreach(_.unpersist(blocking = false))
+      .foreach(GraftCheckpoint.unpersist(_, blocking = false))
   }
 }

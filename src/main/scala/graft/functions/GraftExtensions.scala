@@ -36,6 +36,15 @@ object GraftFunctions {
       biases: Array[Double]): Column =
     GraftColumn.of(VecArgmaxDot(GraftColumn.exprOf(u), mat, biases))
 
+  /** max_i (u · mat(i)), the score `vecArgmaxDot` picks with zero biases
+    * (see VecMaxDot). */
+  def vecMaxDot(u: Column, mat: Array[Array[Double]]): Column =
+    GraftColumn.of(VecMaxDot(GraftColumn.exprOf(u), mat))
+
+  /** Σ_j table(j)(codes(j)) in one generated loop (see AdcScore). */
+  def adcScore(codes: Column, table: Array[Array[Double]]): Column =
+    GraftColumn.of(AdcScore(GraftColumn.exprOf(codes), table))
+
   /** All m PQ codes in one generated loop (see PqEncode). */
   def pqEncode(u: Column, books: Array[Array[Array[Double]]]): Column =
     GraftColumn.of(PqEncode(GraftColumn.exprOf(u), books))

@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
 
 /** Codegen'd argmax-of-dot kernels over DRIVER-CONSTANT codebooks (r14).
   *
@@ -24,12 +24,16 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType}
   * exactly array_max's struct ordering over (score, index).
   */
 
-/** argmax_i ( u · mat(i) − bias(i) ), as one generated loop. */
-case class VecArgmaxDot(child: Expression, mat: Array[Array[Double]],
-    biases: Array[Double]) extends UnaryExpression {
+/** The scan over the rows of `mat` as one generated loop: each row's
+  * score u · mat(i) − bias(i), keeping the first row, then any NaN or any
+  * score ≥ the best so far. `VecArgmaxDot` returns the winning row,
+  * `VecMaxDot` its score. */
+sealed abstract class ArgmaxDotLoop extends UnaryExpression with Serializable {
+  def mat: Array[Array[Double]]
+  protected def biases: Array[Double]
+  /** The result: the winning score if true, else its row index. */
+  protected def score: Boolean
   require(mat.nonEmpty && biases.length == mat.length)
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "vec_argmax_dot"
 
   override def nullSafeEval(a: Any): Any = {
     val u = a.asInstanceOf[ArrayData]
@@ -45,7 +49,7 @@ case class VecArgmaxDot(child: Expression, mat: Array[Array[Double]],
       if (idx < 0 || java.lang.Double.isNaN(s) || s >= best) { best = s; idx = i }
       i += 1
     }
-    idx
+    if (score) best else idx
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -64,11 +68,32 @@ case class VecArgmaxDot(child: Expression, mat: Array[Array[Double]],
          |  $s -= $biasRef[$i];
          |  if ($idx < 0 || Double.isNaN($s) || $s >= $best) { $best = $s; $idx = $i; }
          |}
-         |${ev.value} = $idx;
+         |${ev.value} = ${if (score) best else idx};
        """.stripMargin
     })
+}
+
+/** argmax_i ( u · mat(i) − bias(i) ), as one generated loop. */
+case class VecArgmaxDot(child: Expression, mat: Array[Array[Double]],
+    biases: Array[Double]) extends ArgmaxDotLoop {
+  override def dataType: DataType = IntegerType
+  override def prettyName: String = "vec_argmax_dot"
+  protected def score: Boolean = false
 
   override protected def withNewChildInternal(newChild: Expression): VecArgmaxDot =
+    copy(child = newChild)
+}
+
+/** max_i ( u · mat(i) ), the score `VecArgmaxDot` picks with zero biases
+  * (x − 0.0 is x, bit for bit). */
+case class VecMaxDot(child: Expression, mat: Array[Array[Double]])
+    extends ArgmaxDotLoop {
+  protected lazy val biases: Array[Double] = new Array[Double](mat.length)
+  override def dataType: DataType = DoubleType
+  override def prettyName: String = "vec_max_dot"
+  protected def score: Boolean = true
+
+  override protected def withNewChildInternal(newChild: Expression): VecMaxDot =
     copy(child = newChild)
 }
 
@@ -138,5 +163,38 @@ case class PqEncode(child: Expression, books: Array[Array[Array[Double]]])
     })
 
   override protected def withNewChildInternal(newChild: Expression): PqEncode =
+    copy(child = newChild)
+}
+
+/** ADC score Σ_j table(j)(codes(j)) as one generated loop over a
+  * referenced table. The sum starts at subspace 0's term, not at 0.0,
+  * and adds the rest ascending, so it associates as ((t0 + t1) + t2) + …
+  * and an all −0.0 sum stays −0.0. */
+case class AdcScore(child: Expression, table: Array[Array[Double]])
+    extends UnaryExpression {
+  require(table.nonEmpty)
+  override def dataType: DataType = DoubleType
+  override def prettyName: String = "adc_score"
+
+  override def nullSafeEval(a: Any): Any = {
+    val codes = a.asInstanceOf[ArrayData]
+    var acc = table(0)(codes.getInt(0))
+    var j = 1
+    while (j < table.length) { acc += table(j)(codes.getInt(j)); j += 1 }
+    acc
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, codes => {
+      val tableRef = ctx.addReferenceObj("table", table, "double[][]")
+      val (j, acc) = (ctx.freshName("j"), ctx.freshName("acc"))
+      s"""
+         |double $acc = $tableRef[0][$codes.getInt(0)];
+         |for (int $j = 1; $j < $tableRef.length; $j++) $acc += $tableRef[$j][$codes.getInt($j)];
+         |${ev.value} = $acc;
+       """.stripMargin
+    })
+
+  override protected def withNewChildInternal(newChild: Expression): AdcScore =
     copy(child = newChild)
 }

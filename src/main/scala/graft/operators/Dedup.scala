@@ -942,10 +942,9 @@ object Dedup {
     if (cents.isEmpty) // empty corpus → no cells, no pairs
       return e.select($"vec_id".as("vec_a"), $"vec_id".as("vec_b"),
         lit(0.0).as("sim")).limit(0)
-    val assigned = graft.Caches.cached(cacheKey) {
-      e.select($"vec_id", $"v", $"nrm", $"u")
-        .withColumn("cell", VecCluster.cellOf($"u", cents))
-        .withColumn("csim", VecCluster.cellSimOf($"u", cents))
+    val assigned = graft.Caches.cached(s"$cacheKey:$nCells:$iters") {
+      e.select($"vec_id", $"v", $"nrm", VecCluster.cellOf($"u", cents).as("cell"),
+        VecCluster.cellSimOf($"u", cents).as("csim"))
     }
     def clampAcos(x: Double) = math.acos(math.max(-1.0, math.min(1.0, x)))
     val radii = assigned.groupBy($"cell").agg(min($"csim").as("worst"))
@@ -1105,10 +1104,9 @@ object Dedup {
     if (cents.isEmpty)
       return e.select($"vec_id", lit(0).as("cell"), $"vec_id".as("group_id"),
         lit(true).as("kept")).limit(0)
-    val assigned = Caches.cached(s"semdedup-assigned:$keyPrefix") {
-      e.select($"vec_id", $"v", $"nrm", $"u")
-        .withColumn("cell", VecCluster.cellOf($"u", cents))
-        .withColumn("csim", VecCluster.cellSimOf($"u", cents))
+    val assigned = Caches.cached(s"semdedup-assigned:$keyPrefix:$nCells:$iters") {
+      e.select($"vec_id", $"v", $"nrm", VecCluster.cellOf($"u", cents).as("cell"),
+        VecCluster.cellSimOf($"u", cents).as("csim"))
     }
     val a = assigned.select($"cell", $"vec_id".as("ida"), $"v".as("va"), $"nrm".as("na"))
     val b = assigned.select($"cell", $"vec_id".as("idb"), $"v".as("vb"), $"nrm".as("nb"))

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.functions.GraftFunctions.vecDot
 
 /** Spherical k-means (Lloyd's algorithm) over a unit-vector column, in
   * DataFrames.
@@ -33,11 +32,10 @@ object VecCluster {
     graft.functions.GraftFunctions.vecArgmaxDot(u, cents,
       new Array[Double](cents.length))
 
-  /** Cosine to the assigned (= nearest) centroid, same argmax. */
+  /** Cosine to the assigned (= nearest) centroid: the score of the same
+    * argmax loop (VecMaxDot). */
   def cellSimOf(u: Column, cents: Array[Array[Double]]): Column =
-    array_max(array(cents.zipWithIndex.map { case (c, i) =>
-      struct(vecDot(u, typedLit(c.toSeq)).as("csim"), lit(i).as("cell"))
-    }: _*)).getField("csim")
+    graft.functions.GraftFunctions.vecMaxDot(u, cents)
 
   /** Lloyd iterations; `unit` needs columns (vec_id, u: array<double> of
     * unit norm). Returns k unit-normalized centroids (empty cells keep

@@ -19,11 +19,10 @@ import graft.functions.Param
   * per-(subspace, cell, dim) sums with map-side combine); the kernel
   * takes the books as a referenced object, not as literals in generated
   * source, so later iterations reuse the first one's compiled classes;
-  * encoding is a single projection; ADC is a codegen'd chain of
-  * literal-array lookups. 64 floats compress to 8
-  * byte-sized codes — the memory/IO cut that makes billion-vector ANN
-  * feasible, with exact re-rank of the short ADC candidate list
-  * restoring precision.
+  * encoding is a single projection; ADC is one generated loop over a
+  * referenced table. 64 floats compress to 8 byte-sized codes — the
+  * memory/IO cut that makes billion-vector ANN feasible, with exact
+  * re-rank of the short ADC candidate list restoring precision.
   */
 object VecPQ {
 
@@ -94,11 +93,10 @@ object VecPQ {
   }
 
   /** ADC approximate dot: Σ_j table(j)(codes(j)) where table(j)(k) =
-    * q_sub_j · c_jk — m literal-array lookups, fully codegen'd. */
+    * q_sub_j · c_jk — one generated loop over the table by reference
+    * (AdcScore), so a new query's table is no new source. */
   private[graft] def adcScore(codes: Column, table: Array[Array[Double]]): Column =
-    table.zipWithIndex.map { case (row, j) =>
-      element_at(typedLit(row.toSeq), codes.getItem(j) + 1)
-    }.reduce(_ + _)
+    graft.functions.GraftFunctions.adcScore(codes, table)
 
   /** PQ-ANN: encode the corpus, score by ADC against the query's table,
     * exact-re-rank the top `rerank` candidates, return top `k`. */

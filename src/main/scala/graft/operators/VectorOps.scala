@@ -22,9 +22,20 @@ import graft.functions.GraftFunctions.{vecAbsMax, vecDot, vecNorm, vecQuantAbsSu
   */
 object VectorOps {
 
-  /** embedding → double vector, L2 norm, and unit vector, computed once
-    * per row; memoized per (dir) so every vector operator in a session
-    * shares one cached materialization (no duplicate persists).
+  /** (vec_id, label, v, nrm, u): the embedding as a double vector, its L2
+    * norm and its unit vector.
+    *
+    * The cached frame, memoized per (dir) so every vector operator in a
+    * session shares one materialization, is (vec_id, label, embedding,
+    * nrm): the stored `array<float>` column as read plus its norm, about
+    * 4·dim + 38 bytes per vector (caching `v` and `u` as two
+    * `array<double>` columns takes about 16·dim + 58). `v` and `u` are a
+    * projection over it, derived per call: `v = vecToDouble(embedding)`
+    * is exact (every float is a double) and `nrm` was computed from that
+    * same `v`, so `v`, `nrm` and `u = vecScale(v, nrm)` are bit-identical
+    * to deriving all three in one projection of the scan. All three are
+    * native codegen kernels: no interpreted transform() lambda anywhere
+    * embeddings flow.
     *
     * The frame is widened to the session's parallelism when the scan
     * arrives under-split (a small parquet file = ONE split, and since the
@@ -32,18 +43,17 @@ object VectorOps {
     * of a 1-partition probe runs on one core — measured 4× on the
     * near-dup pair join). At real scale the store is already ≥ cores
     * splits and this is a no-op. */
-  private[graft] def normed(s: SparkSession, dir: String): DataFrame =
+  private[graft] def normed(s: SparkSession, dir: String): DataFrame = {
+    import s.implicits._
     Caches.cached(s"vec-normed:$dir") {
-      import s.implicits._
-      // all three derivations are native codegen kernels — no interpreted
-      // transform() lambda anywhere embeddings flow
       val base = Tables.embeddings(s, dir)
-        .select($"vec_id", $"label", vecToDouble($"embedding").as("v"))
-        .withColumn("nrm", vecNorm($"v"))
-        .withColumn("u", vecScale($"v", $"nrm"))
+        .select($"vec_id", $"label", $"embedding",
+          vecNorm(vecToDouble($"embedding")).as("nrm"))
       val p = s.sparkContext.defaultParallelism
       if (base.rdd.getNumPartitions < p) base.repartition(p) else base
-    }
+    }.select($"vec_id", $"label", vecToDouble($"embedding").as("v"), $"nrm")
+      .withColumn("u", vecScale($"v", $"nrm"))
+  }
 
   private def dot(a: Column, b: Column): Column = vecDot(a, b)
 

@@ -2,7 +2,7 @@ package org.apache.spark.sql.execution
 
 import scala.collection.mutable
 import org.apache.spark.graphx.Graph
-import org.apache.spark.rdd.RDD
+import org.apache.spark.rdd.{LocalRDDCheckpointData, RDD}
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -46,6 +46,13 @@ object GraftCheckpoint {
       case r: LogicalRDD => r.rdd.sparkContext.unpersistRDD(r.rdd.id, blocking = true)
       case _ =>
     }
+
+  /** Frees `r`'s blocks. A local checkpoint goes through the context:
+    * `RDD.unpersist` would log a warning that its lineage is truncated. */
+  def unpersist(r: RDD[_], blocking: Boolean): Unit =
+    if (r.checkpointData.exists(_.isInstanceOf[LocalRDDCheckpointData[_]]))
+      r.sparkContext.unpersistRDD(r.id, blocking)
+    else r.unpersist(blocking)
 
   private val current = new ThreadLocal[Scope]
 
@@ -100,10 +107,7 @@ object GraftCheckpoint {
     }
 
     private[GraftCheckpoint] def free(ids: Seq[Int]): Unit =
-      synchronized(ids.flatMap(held.remove)).foreach { r =>
-        if (isLocalCheckpoint(r)) r.sparkContext.unpersistRDD(r.id, blocking = true)
-        else r.unpersist(blocking = true)
-      }
+      synchronized(ids.flatMap(held.remove)).foreach(unpersist(_, blocking = true))
 
     private[GraftCheckpoint] def recordGraph(g: Graph[_, _]): Seq[Int] = {
       val persisted = g.vertices.sparkContext.getPersistentRDDs.keySet

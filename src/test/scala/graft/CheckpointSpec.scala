@@ -10,8 +10,10 @@ import graft.operators.GraphOps
   * sits in the partition that layout names, `sorted` orders each
   * partition, and the caller's session is left as it was. Also the
   * contract of `GraftCheckpoint.release`: it frees what a checkpoint
-  * holds in storage, which `Dataset.unpersist` does not. */
+  * holds in storage, which `Dataset.unpersist` does not, and
+  * `Caches.clearAll` frees leftover checkpoints without a warning. */
 class CheckpointSpec extends SparkSpecBase {
+  import spark.implicits._
 
   private val spk = "spark.sql.shuffle.partitions"
 
@@ -81,5 +83,33 @@ class CheckpointSpec extends SparkSpecBase {
     assert(stored > 0, "unpersist freed the checkpoint's blocks")
     GraftCheckpoint.release(ck)
     assert(stored == 0, s"$stored bytes left after release")
+  }
+
+  test("Caches.clearAll frees a loop's leftover checkpoints without a lineage warning") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    // RDD's logger is named after the RDD's class, so the appender sits
+    // on the root logger and keeps the rdd package's warnings
+    val warned = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val appender = new AbstractAppender("rdd-warnings", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLoggerName.startsWith("org.apache.spark.rdd.") && e.getLevel == Level.WARN)
+          warned.add(e.getMessage.getFormattedMessage)
+    }
+    val root = LogManager.getRootLogger.asInstanceOf[Logger]
+    val g = Seq((1L, 2L, 1L), (2L, 3L, 1L), (3L, 1L, 1L), (4L, 5L, 1L))
+      .toDF("src", "dst", "weight")
+    Caches.clearAll(spark)
+    GraphOps.communitiesOf(g, 3).collect()
+    assert(spark.sparkContext.getPersistentRDDs.values.exists(_.isCheckpointed),
+      "the loop left no checkpoint to free")
+    appender.start()
+    root.addAppender(appender)
+    try Caches.clearAll(spark)
+    finally { root.removeAppender(appender); appender.stop() }
+    assert(spark.sparkContext.getPersistentRDDs.isEmpty)
+    assert(warned.isEmpty, s"clearAll warned: ${warned.toArray.mkString("; ")}")
   }
 }

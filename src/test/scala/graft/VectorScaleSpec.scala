@@ -388,4 +388,79 @@ class VectorScaleSpec extends SparkSpecBase with AdaptiveSparkPlanHelper {
     }
     Caches.clearAll()
   }
+
+  /** Each row's value as raw bits (None for null), under both the
+    * generated and the interpreted expression paths. */
+  private def rawBits(df: DataFrame): Seq[Seq[Option[Long]]] = {
+    val modes = Seq("CODEGEN_ONLY" -> "true", "NO_CODEGEN" -> "false")
+    modes.map { case (factory, wholeStage) =>
+      val prior = Seq("spark.sql.codegen.factoryMode", "spark.sql.codegen.wholeStage")
+        .map(k => k -> spark.conf.getOption(k))
+      spark.conf.set("spark.sql.codegen.factoryMode", factory)
+      spark.conf.set("spark.sql.codegen.wholeStage", wholeStage)
+      try df.collect().toSeq.flatMap(r => (0 until r.length).map(i =>
+        Option(r.get(i)).map(x => java.lang.Double.doubleToRawLongBits(
+          x.asInstanceOf[Double]))))
+      finally prior.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+    }
+  }
+
+  test("cellSimOf: the generated loop equals the unrolled array_max form bit for bit") {
+    val s = spark
+    import s.implicits._
+    import graft.functions.GraftFunctions.vecDot
+    def unrolled(u: org.apache.spark.sql.Column, cents: Array[Array[Double]]) =
+      array_max(array(cents.zipWithIndex.map { case (c, i) =>
+        struct(vecDot(u, typedLit(c.toSeq)).as("csim"), lit(i).as("cell"))
+      }: _*)).getField("csim")
+    val nan = Double.NaN
+    // rows tie across cells, carry -0.0 and NaN components, or are null
+    val us = Seq(Seq(1.0, 0.0), Seq(0.0, 1.0), Seq(-0.0, -0.0), Seq(0.5, 0.5),
+      Seq(-1.0, -0.0), Seq(nan, 0.0), Seq(0.0, nan), Seq(1e-300, -1e-300))
+      .map(Option(_)) :+ None
+    val df = us.toDF("u").repartition(2)
+    val books = Seq(
+      Array(Array(1.0, 0.0), Array(0.0, 1.0), Array(1.0, 0.0)), // a duplicate row
+      Array(Array(-0.0, 0.0), Array(0.0, -0.0)),                 // every dot is 0
+      Array(Array(1.0, 1.0), Array(nan, 0.0), Array(-1.0, 2.0)), // a NaN row
+      Array(Array(0.6, 0.8)))
+    books.foreach { cents =>
+      val got = rawBits(df.select(VecCluster.cellSimOf($"u", cents)))
+      assert(got == rawBits(df.select(unrolled($"u", cents))),
+        s"cents ${cents.map(_.mkString("(", ",", ")")).mkString}")
+    }
+  }
+
+  test("adcScore: the generated loop equals the reduced element_at form bit for bit") {
+    val s = spark
+    import s.implicits._
+    import graft.operators.VecPQ
+    def reduced(codes: org.apache.spark.sql.Column, table: Array[Array[Double]]) =
+      table.zipWithIndex.map { case (row, j) =>
+        element_at(typedLit(row.toSeq), codes.getItem(j) + 1)
+      }.reduce(_ + _)
+    // terms whose sum depends on association, all -0.0 terms (a sum
+    // started at 0.0 would give 0.0) and NaN. Codes are never null (PQ
+    // codes of a unit vector); for null codes the loop returns null, where
+    // the reduced form's element_at claims a non-null result and yields
+    // 0.0 or NaN depending on the plan
+    val table = Array(Array(1e16, -0.0, 3.0), Array(1.0, -0.0, Double.NaN),
+      Array(-1e16, -0.0, 0.1), Array(0.2, -0.0, 0.3))
+    val codes = Seq(Seq(0, 0, 0, 0), Seq(1, 1, 1, 1), Seq(2, 0, 2, 2),
+      Seq(0, 2, 1, 0), Seq(2, 1, 2, 1))
+    val df = codes.toDF("codes").repartition(2)
+    for (t <- Seq(table, table.take(1))) assert(
+      rawBits(df.select(VecPQ.adcScore($"codes", t))) ==
+        rawBits(df.select(reduced($"codes", t))), s"m = ${t.length}")
+  }
+
+  test("cell assignments are cached per (nCells, iters): a second call sees its own cells") {
+    def run(nCells: Int) = (
+      Dedup.embeddingNearDup(spark, sfDir, nCells = nCells).collect().toSeq,
+      Dedup.semDedup(spark, sfDir, nCells = nCells).collect().toSeq)
+    Caches.clearAll(spark)
+    val fresh = Seq(8, 16).map { n => try run(n) finally Caches.clearAll(spark) }
+    try assert(Seq(8, 16).map(run) == fresh)
+    finally Caches.clearAll(spark)
+  }
 }
